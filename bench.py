@@ -14,11 +14,11 @@ item 5) instead of the headline list, writing BENCH_FULL.json; run it at
 sf0.01 once per round so a pathological plan in the unbenched tail cannot
 hide behind the headline sample.
 
-A fixed warm-up set (one batch query for JVM/JIT, one applyInPandas for
-the Python-worker pool, one availableNow stream for the micro-batch
-engine) absorbs session start-up; each query is then timed on a single
-steady-state run (what a long-lived cluster sees). ``--full`` sweeps in
-ALPHABETICAL order so per-query cells keep a stable sweep position
+A fixed warm-up set (``warm_up``: one batch query for JVM/JIT, one
+applyInPandas for the Python-worker pool, one availableNow stream for the
+micro-batch engine) absorbs session start-up; each query is then timed on
+a single steady-state run (what a long-lived cluster sees). ``--full``
+sweeps in ALPHABETICAL order so per-query cells keep a stable sweep position
 across rounds despite the rotating driver window (VERDICT r12 item 3).
 """
 
@@ -255,10 +255,35 @@ def _may_write_artifact(payload: dict, out_path: str) -> bool:
 
 
 def run_once(spark, name: str, sf_dir: str) -> float:
+    """Build and execute one registered query with the noop sink; seconds."""
     t0 = time.perf_counter()
     df = plans.QUERIES[name](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
+
+
+def warm_up(spark, sf_dir: str, streaming: bool) -> None:
+    """The fixed warm-up set every timing tool pays before its first
+    timed cell, so session start-up lands on no query:
+
+    - one batch query for JVM class loading and JIT;
+    - one applyInPandas for the Python-worker pool (a long-lived
+      cluster's pandas workers are resident; forking one per core that
+      each import pandas is start-up cost, not query cost);
+    - with ``streaming``, the cheapest availableNow stream: the first
+      streaming query of a session also pays state-store / micro-batch
+      engine class loading (~1-2 s), which would otherwise land on
+      whichever stream_* cell runs first (VERDICT r12 item 3).
+    """
+    from pyspark.sql import functions as F
+
+    run_once(spark, "cci", sf_dir)
+    spark.range(64).withColumn("g", F.col("id") % 32).groupBy("g").applyInPandas(
+        lambda p: p, "id long, g long"
+    ).write.format("noop").mode("overwrite").save()
+    if streaming:
+        run_once(spark, "stream_dedup_watermark", sf_dir)
+    spark.catalog.clearCache()
 
 
 # Settle-wait bound (VERDICT r14 item 3): the driver starts bench right
@@ -333,22 +358,7 @@ def main() -> None:
     names = sorted(plans.QUERIES) if full else [
         n for n in HEADLINE if n in plans.QUERIES
     ]
-    run_once(spark, "cci", sf_dir)  # global JVM/JIT warm-up
-    # Python-worker pool warm-up (same rationale as the JVM warm-up: a
-    # long-lived cluster's pandas workers are resident; forking 32 workers
-    # that each import pandas is one-time start-up cost, not query cost).
-    from pyspark.sql import functions as F
-    spark.range(64).withColumn("g", F.col("id") % 32).groupBy("g").applyInPandas(
-        lambda p: p, "id long, g long"
-    ).write.format("noop").mode("overwrite").save()
-    # Streaming-machinery warm-up (VERDICT r12 item 3): the first
-    # streaming query of a session additionally pays state-store /
-    # micro-batch-engine class loading (~1-2 s), which used to land on
-    # whichever stream_* name ran first. Pay it here, on the cheapest
-    # streaming query, so every timed cell sees a warm engine.
-    if "stream_dedup_watermark" in plans.QUERIES:
-        run_once(spark, "stream_dedup_watermark", sf_dir)
-        spark.catalog.clearCache()
+    warm_up(spark, sf_dir, streaming=True)
     timings: dict[str, float] = {}
     # NO clearCache between queries: the bench models a long-lived cluster
     # where the persisted cci/agged subtrees are plan-matched-shared across
@@ -379,16 +389,14 @@ def main() -> None:
         # adjudication context (PLANS.md "bench re-baseline after the
         # replans"): the applyInPandas simulator cells are multi-modal
         # in sweep context on shared hosts (best_return measured
-        # 6.8-37.8 s across identical-code sweeps while isolated
-        # canaries sat at record), and neither attachment nor
-        # loadavg-at-start fully explains which mode a sweep lands in —
-        # so every artifact records both, and per-cell regression
-        # claims for that family go through tools/bench_canary.py
-        # (best_win) instead of sweep cells.
+        # 6.8-37.8 s across identical-code sweeps), and neither
+        # attachment nor loadavg-at-start fully explains which mode a
+        # sweep lands in — so every artifact records both
         "attached_stdout": sys.stdout.isatty(),
-        # core count this sweep ran at (the driver also benches at a
-        # lower count for scaling; see _may_write_artifact rule 2)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # core count this sweep ran at, read from the running session
+        # (SPARK_GRAFT_MASTER may override SPARK_GRAFT_CPUS) — see
+        # _may_write_artifact rule 2
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_start": _LOAD_START,
         "loadavg_end": round(os.getloadavg()[0], 2),
         # cross-round readers: compare only uncontaminated artifacts;

@@ -694,7 +694,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative-algorithm hygiene: WITHOUT truncation, each iteration embeds
     the full upstream twice (labels appears in both join branches) — the
-    plan grows 2^iters scans (explain_audit measured 342 exchanges / 496
+    plan grows 2^iters scans (EXPLAIN measured 342 exchanges / 496
     scans). Persist the edge list once and localCheckpoint the labels per
     iteration, exactly Spark's prescribed pattern for iterative graph
     algorithms; at scale this is one shuffle join per iteration.

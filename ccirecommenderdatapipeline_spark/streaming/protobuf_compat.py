@@ -13,7 +13,11 @@ PYTHONPATH is frozen at JVM launch).
 
 Preference order: a native ``google.protobuf`` always wins (the shim is
 only inserted when the import fails), so on a real cluster this module is
-a no-op returning "native".
+a no-op returning "native". The shim is recognised by its version tag,
+not by where it was imported from: once shipped, ``addPyFile`` also puts
+a copy of the worker zip on the driver's sys.path, and a test may import
+the vendor tree of another checkout, so a path check would mistake the
+shim for a native runtime and skip the delivery.
 """
 
 from __future__ import annotations
@@ -27,7 +31,8 @@ _VENDOR = os.path.join(
     "vendor",
     "protobuf_shim",
 )
-_SHIPPED_SESSIONS: set[str] = set()
+# the vendored runtime's __version__ ends with this tag
+_SHIM_TAG = "-ccirecommenderdatapipeline-shim"
 
 
 # pkgutil-style namespace __init__, generated ONLY into the worker zip:
@@ -63,28 +68,43 @@ def _shim_zip_path() -> str:
     return out
 
 
+def _imported_runtime():
+    """The ``google.protobuf`` this process imports, or None."""
+    try:
+        import google.protobuf as gpb
+        from google.protobuf import descriptor  # noqa: F401
+    except ImportError:
+        return None
+    return gpb
+
+
 def ensure_protobuf(spark) -> str:
     """Return "native" when a real protobuf runtime is importable,
     otherwise wire the vendored shim into this driver and the session's
-    Python workers and return "shim"."""
-    try:
-        import google.protobuf as _gpb
-        from google.protobuf import descriptor  # noqa: F401
-
-        # a shim already importable in THIS process (e.g. a test put the
-        # vendor dir on sys.path) is NOT a native runtime — workers still
-        # need the zip + env delivery below, so only short-circuit when
-        # the import resolved outside the vendor tree
-        if not getattr(_gpb, "__file__", "").startswith(_VENDOR):
-            return "native"
-    except ImportError:
+    Python workers and return "shim". Idempotent per session: the
+    delivery state is read back from the session itself, so calls in any
+    order (and from any test) leave the same state. Raises RuntimeError
+    when neither a native runtime nor the shim can be imported here."""
+    gpb = _imported_runtime()
+    if gpb is not None and not getattr(gpb, "__version__", "").endswith(
+        _SHIM_TAG
+    ):
+        return "native"
+    if gpb is None:
         if _VENDOR not in sys.path:
             sys.path.insert(0, _VENDOR)
-        from google.protobuf import descriptor  # noqa: F401  (validates shim)
+        gpb = _imported_runtime()
+        if gpb is None:
+            raise RuntimeError(
+                "transformWithStateInPandas needs google.protobuf: no native "
+                f"runtime is installed and the vendored shim at {_VENDOR} "
+                "does not import in this driver (google.protobuf resolves "
+                f"to {sys.modules.get('google.protobuf')!r})"
+            )
 
     sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id not in _SHIPPED_SESSIONS:
+    prev = sc.environment.get("PYTHONPATH", "")
+    if _VENDOR not in prev.split(os.pathsep):
         # task workers: python-includes protocol (worker_util.add_path)
         sc.addPyFile(_shim_zip_path())
         # the TWS pre-init/driver worker (StreamingPythonRunner) is a
@@ -97,10 +117,7 @@ def ensure_protobuf(spark) -> str:
         # and leaks into unrelated subprocesses). _VENDOR is a PEP 420
         # namespace portion, so even on the worker path it merges with,
         # never shadows, other google.* packages.
-        prev = sc.environment.get("PYTHONPATH", "")
-        if _VENDOR not in prev.split(os.pathsep):
-            sc.environment["PYTHONPATH"] = (
-                _VENDOR + os.pathsep + prev if prev else _VENDOR
-            )
-        _SHIPPED_SESSIONS.add(app_id)
+        sc.environment["PYTHONPATH"] = (
+            _VENDOR + os.pathsep + prev if prev else _VENDOR
+        )
     return "shim"

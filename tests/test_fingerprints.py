@@ -10,9 +10,10 @@ judge's audit.
 Runs at the baseline's recorded SF (plans are SF-dependent: static size
 estimates cross ``autoBroadcastJoinThreshold`` between SFs — tpch_q7 is
 BHJx5 at sf0.001 but SMJx1/BHJx4 at sf0.01+, the r9 adjudication of the
-r8 "drift" report). Streaming-wrapped queries are skipped here exactly
-as in the CLI tool's default mode; their baselines are refreshed with
-``--run-streaming`` once per round.
+r8 "drift" report). The comparison is ``audit_plans.plan_drift``, the
+same one ``audit_plans --diff`` prints. Streaming-wrapped queries are
+skipped here exactly as in the CLI's default mode; their baselines are
+refreshed with ``--run-streaming``.
 """
 
 import json
@@ -28,31 +29,13 @@ BASELINE = os.path.join(ROOT, "PLAN_FINGERPRINTS.json")
 
 
 @pytest.mark.slow
-def test_no_physical_plan_drift(spark, tmp_path):
-    from audit_plans import fingerprint
+def test_no_physical_plan_drift(spark):
+    from audit_plans import fingerprints, plan_drift
 
     with open(BASELINE) as f:
         base = json.load(f)
-    sf_dir = base.pop("__meta__", {}).get("sf_dir", "/root/testdata/sf0.01")
-    out = str(tmp_path / "fp.json")
-    fingerprint(sf_dir, out, run_streaming=False)
-    with open(out) as f:
-        now = json.load(f)
-    now.pop("__meta__", None)
-
-    drift = {}
-    for name in sorted(set(base) & set(now)):
-        b, c = base[name], now[name]
-        if b == c:
-            continue
-        # a streaming-skip marker vs a --run-streaming baseline is a
-        # mode difference, not plan drift
-        if "__streaming_skipped__" in b or "__streaming_skipped__" in c:
-            continue
-        keys = sorted(set(b) | set(c))
-        drift[name] = {
-            k: (b.get(k, 0), c.get(k, 0)) for k in keys if b.get(k) != c.get(k)
-        }
+    sf_dir = base["__meta__"]["sf_dir"]
+    drift, new, _gone = plan_drift(base, fingerprints(spark, sf_dir))
     assert not drift, (
         f"physical-plan drift vs PLAN_FINGERPRINTS.json at {sf_dir} — "
         "explain each line, then refresh with "
@@ -60,88 +43,7 @@ def test_no_physical_plan_drift(spark, tmp_path):
     )
     # every registered query must be baselined (new ops must run
     # audit_plans --fingerprint --only as part of landing)
-    missing = sorted(set(now) - set(base))
-    assert not missing, f"queries with no fingerprint baseline: {missing}"
-
-
-def test_freshness_gate_no_orphaned_verdicts():
-    """VERDICT r11 item 6: a driver verdict must never silently predate
-    the plan it vouches for. Every registered name's CURRENT fingerprint
-    must equal the one its newest driver verdict attached to
-    (VERIFIED_FINGERPRINTS.json), unless the name is queued in the next
-    driver window (plans._PRIORITY). Fast — pure JSON, no Spark."""
-    from freshness_gate import _load, stale_names
-
-    from ccirecommenderdatapipeline_spark.plans import QUERIES, _PRIORITY
-
-    stale = stale_names(
-        _load(os.path.join(ROOT, "PLAN_FINGERPRINTS.json")),
-        _load(os.path.join(ROOT, "VERIFIED_FINGERPRINTS.json")),
-        _PRIORITY,
-        list(QUERIES),
-    )
-    assert not stale, (
-        "replanned (or never-verified) without queueing for a driver "
-        f"verdict — add to plans/__init__.py _PRIORITY: {stale}"
-    )
-
-
-def test_freshness_gate_trips_on_planted_regression():
-    """The gate must actually fire: change one non-queued name's
-    fingerprint (and separately, add a never-verified name) and assert
-    both surface as stale; the same change IN the window is exempt."""
-    from freshness_gate import _load, stale_names
-
-    current = _load(os.path.join(ROOT, "PLAN_FINGERPRINTS.json"))
-    verified = _load(os.path.join(ROOT, "VERIFIED_FINGERPRINTS.json"))
-    from ccirecommenderdatapipeline_spark.plans import QUERIES, _PRIORITY
-
-    victim = next(n for n in QUERIES if n not in _PRIORITY)
-    planted = dict(current)
-    planted[victim] = {**(current.get(victim) or {}), "Exchange": 999}
-    planted["brand_new_op"] = {"Scan parquet": 1}
-    registry = list(QUERIES) + ["brand_new_op"]
-
-    stale = stale_names(planted, verified, _PRIORITY, registry)
-    assert victim in stale and "brand_new_op" in stale
-
-    exempted = stale_names(
-        planted, verified, list(_PRIORITY) + [victim, "brand_new_op"], registry
-    )
-    assert victim not in exempted and "brand_new_op" not in exempted
-
-
-def test_freshness_gate_refresh_advances_only_green(tmp_path, monkeypatch):
-    """--refresh advances verified fingerprints for green verdict rows
-    only; red/errored names keep their old snapshot."""
-    import freshness_gate as fg
-
-    cur = {"a": {"Exchange": 2}, "b": {"Exchange": 3}, "c": {"Exchange": 4}}
-    ver = {"__meta__": {}, "a": {"Exchange": 1}, "b": {"Exchange": 1},
-           "c": {"Exchange": 1}}
-    rows = {
-        "a": {"rows_match": True, "schema_match": True, "hash_match": True,
-              "err": None},
-        "b": {"rows_match": True, "schema_match": True, "hash_match": False,
-              "err": None},
-        "c": {"rows_match": None, "schema_match": None, "hash_match": None,
-              "err": "boom"},
-    }
-    cur_p, ver_p, rows_p = (
-        tmp_path / "cur.json", tmp_path / "ver.json", tmp_path / "rows.json"
-    )
-    import json as _json
-    cur_p.write_text(_json.dumps(cur))
-    ver_p.write_text(_json.dumps(ver))
-    rows_p.write_text(_json.dumps(rows))
-    monkeypatch.setattr(fg, "CURRENT", str(cur_p))
-    monkeypatch.setattr(fg, "VERIFIED", str(ver_p))
-    fg.refresh(str(rows_p))
-    out = _json.loads(ver_p.read_text())
-    assert out["a"] == {"Exchange": 2}          # green -> advanced
-    assert out["b"] == {"Exchange": 1}          # hash red -> kept
-    assert out["c"] == {"Exchange": 1}          # errored -> kept
-    assert out["__meta__"]["last_refresh"] == "rows.json"
+    assert not new, f"queries with no fingerprint baseline: {new}"
 
 
 def test_canonical_hash_normalizes_session_variance():
@@ -172,46 +74,19 @@ def test_canonical_hash_normalizes_session_variance():
     assert canonical_hash(a) == canonical_hash(b)
     assert canonical_hash(a) != canonical_hash(c)
     assert canonical_hash(d1) != canonical_hash(d2)
-
-
-def test_freshness_gate_trips_on_literal_only_drift():
-    """VERDICT r12 item 2's done condition: a fingerprint whose node
-    counts are unchanged but whose __lit_md5__ moved (a constant-only
-    replan) must surface as stale unless queued."""
-    from freshness_gate import stale_names
-
-    verified = {"q": {"Exchange": 2, "__lit_md5__": "aaaaaaaaaaaa"}}
-    planted = {"q": {"Exchange": 2, "__lit_md5__": "bbbbbbbbbbbb"}}
-    assert stale_names(planted, verified, [], ["q"]) == ["q"]
-    assert stale_names(planted, verified, ["q"], ["q"]) == []
-
-
-def test_freshness_gate_adopt_migrates_only_matching(tmp_path, monkeypatch):
-    """--adopt copies new fingerprint dimensions into VERIFIED only for
-    names whose previously-recorded dimensions match; a real replan
-    (old dimensions differ) is left stale."""
-    import json as _json
-
-    import freshness_gate as fg
-
-    cur = {
-        "same": {"Exchange": 2, "__lit_md5__": "abc"},
-        "replanned": {"Exchange": 5, "__lit_md5__": "def"},
-        "marker": {"Exchange": 1, "__prefold__": 1, "__lit_md5__": "ghi"},
-    }
-    ver = {
-        "__meta__": {},
-        "same": {"Exchange": 2},
-        "replanned": {"Exchange": 2},
-        "marker": {"__eager_local_result__": 1},
-    }
-    cur_p, ver_p = tmp_path / "cur.json", tmp_path / "ver.json"
-    cur_p.write_text(_json.dumps({**cur, "__meta__": {"sf_dir": "x"}}))
-    ver_p.write_text(_json.dumps(ver))
-    monkeypatch.setattr(fg, "CURRENT", str(cur_p))
-    monkeypatch.setattr(fg, "VERIFIED", str(ver_p))
-    fg.adopt()
-    out = _json.loads(ver_p.read_text())
-    assert out["same"] == cur["same"]            # schema migration
-    assert out["replanned"] == {"Exchange": 2}   # real replan -> untouched
-    assert out["marker"] == {"__eager_local_result__": 1}  # repr change -> untouched
+    # core-count-derived literals (spark.range splits, fan_out's
+    # defaultParallelism repartition) hash equal across hosts ...
+    def on(cores, lit=7):
+        return (
+            f"Project [(id#0L + {lit}) AS k#2L]\n"
+            f"+- RepartitionByExpression [id#0L], {cores}\n"
+            f"   +- Range (0, 1, step=1, splits=Some({cores}))"
+        )
+    assert canonical_hash(on(4), 4) == canonical_hash(on(32), 32)
+    # ... while a user-written literal still moves the hash, and so does
+    # a hand-written partition count that is not the core count
+    assert canonical_hash(on(4, lit=8), 4) != canonical_hash(on(32), 32)
+    hand = "RepartitionByExpression [media_id#0], {}"
+    assert canonical_hash(hand.format(8), 4) != canonical_hash(
+        hand.format(16), 4
+    )

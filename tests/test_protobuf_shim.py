@@ -8,9 +8,14 @@ SparkSession needed."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-VENDOR = "/root/repo/vendor/protobuf_shim"
+VENDOR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "vendor",
+    "protobuf_shim",
+)
 
 
 def _sm():
@@ -163,18 +168,34 @@ def test_worker_zip_merges_filesystem_google_portions(tmp_path):
     assert out.stdout.strip() == "7"
 
 
-def test_ensure_protobuf_does_not_mutate_process_env(spark):
+def test_ensure_protobuf_does_not_mutate_process_env(spark, monkeypatch):
     """The PYTHONPATH delivery is scoped to sc.environment (the UDF env
-    channel); os.environ must stay untouched (ADVICE r11 item 3)."""
-    import os
+    channel); os.environ must stay untouched (ADVICE r11 item 3).
 
+    The shim already imported in this driver from somewhere other than
+    the vendor tree — here the worker zip, as addPyFile's copy of it on
+    sys.path provides — must not read as a native runtime: a session not
+    yet shipped to still gets the delivery, or the TWS driver worker
+    fails with ``cannot import name 'descriptor'``."""
     from ccirecommenderdatapipeline_spark.streaming.protobuf_compat import (
+        _shim_zip_path,
         ensure_protobuf,
     )
 
+    _sm()  # skips if protobuf is native
+    for name in [m for m in sys.modules if m.split(".")[0] == "google"]:
+        monkeypatch.delitem(sys.modules, name)
+    monkeypatch.syspath_prepend(_shim_zip_path())
+    import google.protobuf
+
+    assert ".zip" in google.protobuf.__file__
+    env = spark.sparkContext.environment
+    saved = env.pop("PYTHONPATH", None)  # as on a session never shipped to
     before = os.environ.get("PYTHONPATH")
-    mode = ensure_protobuf(spark)
-    assert os.environ.get("PYTHONPATH") == before
-    if mode == "shim":
-        env_pp = spark.sparkContext.environment.get("PYTHONPATH", "")
-        assert VENDOR in env_pp.split(os.pathsep)
+    try:
+        assert ensure_protobuf(spark) == "shim"
+        assert os.environ.get("PYTHONPATH") == before
+        assert VENDOR in env.get("PYTHONPATH", "").split(os.pathsep)
+    finally:
+        if saved is not None:
+            env["PYTHONPATH"] = saved

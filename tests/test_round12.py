@@ -61,76 +61,6 @@ def test_drained_rows_are_exactly_once_and_complete():
     assert seen == list(range(1000))
 
 
-# --- freshness-gate hardening (round-12 review findings) --------------------
-
-
-def _fg():
-    import os, sys
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import freshness_gate
-    return freshness_gate
-
-
-def test_stale_names_flags_name_missing_from_both_snapshots():
-    """A brand-new op absent from BOTH PLAN_FINGERPRINTS and
-    VERIFIED_FINGERPRINTS must be stale unless queued — None == None
-    must not slip the fast gate."""
-    fg = _fg()
-    current = {"a": {"Exchange": 1}}
-    verified = {"a": {"Exchange": 1}}
-    registry = ["a", "brand_new_op"]
-    assert fg.stale_names(current, verified, [], registry) == ["brand_new_op"]
-    assert fg.stale_names(current, verified, ["brand_new_op"], registry) == []
-
-
-def test_refresh_stamps_verdict_time_fingerprints_from_git(tmp_path, monkeypatch):
-    """--refresh must stamp the fingerprint the driver's verdict attached
-    to (the CORRECTNESS file's commit-time PLAN_FINGERPRINTS.json), not
-    the mutable working tree — a replan landing between the driver run
-    and the refresh must NOT be silently blessed."""
-    import json as _json
-    import subprocess
-
-    fg = _fg()
-    repo = tmp_path / "repo"
-    repo.mkdir()
-
-    def git(*args):
-        subprocess.run(
-            ["git", "-C", str(repo), *args], check=True, capture_output=True
-        )
-
-    git("init")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    # verdict-time state: fingerprint {Exchange: 1} committed WITH the rows
-    (repo / "PLAN_FINGERPRINTS.json").write_text(
-        _json.dumps({"a": {"Exchange": 1}})
-    )
-    rows_p = repo / "CORRECTNESS_rX.json"
-    rows_p.write_text(
-        _json.dumps({"a": {"rows_match": True, "schema_match": True,
-                           "hash_match": True, "err": None}})
-    )
-    git("add", "-A")
-    git("commit", "-m", "driver snapshot")
-    # post-verdict replan mutates the working-tree fingerprints
-    (repo / "PLAN_FINGERPRINTS.json").write_text(
-        _json.dumps({"a": {"Exchange": 9}})
-    )
-    ver_p = repo / "VERIFIED_FINGERPRINTS.json"
-    ver_p.write_text(_json.dumps({"__meta__": {}, "a": {"Exchange": 0}}))
-    monkeypatch.setattr(fg, "ROOT", str(repo))
-    monkeypatch.setattr(fg, "CURRENT", str(repo / "PLAN_FINGERPRINTS.json"))
-    monkeypatch.setattr(fg, "VERIFIED", str(ver_p))
-    fg.refresh(str(rows_p))
-    out = _json.loads(ver_p.read_text())
-    # stamped at the verdict-time value, NOT the replanned working tree
-    assert out["a"] == {"Exchange": 1}
-    # and the replan is therefore still visible as stale unless queued
-    assert fg.stale_names({"a": {"Exchange": 9}}, {"a": out["a"]}, [], ["a"]) == ["a"]
-
-
 # --- oracle-gate comparison kernel (check_oracle.normalize/df_multiset) -----
 # Every correctness verdict flows through this kernel; it had no direct
 # tests. Pins: full-precision float repr, NaN equality, -0.0/0.0

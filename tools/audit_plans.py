@@ -43,20 +43,38 @@ aggregate. Bounded uses must go through ``operators.windows.bounded_window``
 ``Window`` node sorts with an empty partition spec while the query is not
 in the bounded-window registry.
 
-Usage: python tools/audit_plans.py [sf_dir] [--run-streaming]
-       python tools/audit_plans.py --fingerprint [sf_dir] [--run-streaming]
-(exit 1 on any flag)
+The same plan walk (``_iter_plans``) serves four modes:
+
+    python tools/audit_plans.py [sf_dir] [--run-streaming]
+        flag scan; exit 1 on any flag
+    python tools/audit_plans.py --fingerprint [sf_dir] [--run-streaming]
+                                [--only name1,name2,...]
+        (re)write PLAN_FINGERPRINTS.json
+    python tools/audit_plans.py --diff [sf_dir] [--run-streaming]
+        rebuild fingerprints and diff them against PLAN_FINGERPRINTS.json
+        (the CLI form of tests/test_fingerprints.py); exit 1 on drift,
+        2 on a cross-SF comparison
+    python tools/audit_plans.py --explain [sf_dir] [query ...]
+        write each plan's formatted EXPLAIN to /tmp/spark_graft_plans/
+        and print one exchange/join/scan summary line per query
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ccirecommenderdatapipeline_spark import plans
 from ccirecommenderdatapipeline_spark.session import get_spark
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BASELINE = os.path.join(ROOT, "PLAN_FINGERPRINTS.json")
+EXPLAIN_DIR = "/tmp/spark_graft_plans"
 
 FLAGS = ("CartesianProduct", "BatchEvalPython")
 COUNTED = ("BroadcastNestedLoopJoin", "SortMergeJoin")
@@ -241,19 +259,33 @@ def _prefold_builders():
     return {"ml_minhash_lsh": ml_minhash_lsh_prefold}
 
 
-def _iter_plans(spark, sf_dir: str, run_streaming: bool, only=None):
-    """Yield (name, executed_txt | None, analyzed_txt | None, decimal_cols,
-    exec_nodes, skipped, err). ``exec_nodes`` is _executable_nodes for the
-    built plan (0 when skipped/errored). ``skipped`` is True for
-    streaming-wrapped queries in
-    default mode and the string ``"prefold"`` for eager-local-result
-    queries, whose yielded texts are the PRE-FOLD subtree's plans (see
-    _prefold_builders). The executed text feeds node counts and the flag
-    scanners; the ANALYZED text feeds canonical_hash — it carries every
-    user-written literal and hint but predates the optimizer/physical
-    stages whose rendering is session-history-sensitive (distinct-agg
-    grouping-id assignment in Expand, cache substitution, DataFilters
-    length-truncation cut points)."""
+class Plan(NamedTuple):
+    """One registered query's built plan, as ``_iter_plans`` yields it.
+
+    ``executed`` feeds node counts and the flag scanners; ``analyzed``
+    feeds canonical_hash — it carries every user-written literal and hint
+    but predates the optimizer/physical stages whose rendering is
+    session-history-sensitive (distinct-agg grouping-id assignment in
+    Expand, cache substitution, DataFilters length-truncation cut
+    points). ``skipped`` is True for streaming-wrapped queries in default
+    mode and ``"prefold"`` for eager-local-result queries, whose texts are
+    the PRE-FOLD subtree's plans (see _prefold_builders)."""
+
+    name: str
+    executed: str | None = None
+    analyzed: str | None = None
+    formatted: str | None = None  # only when _iter_plans(formatted=True)
+    dec_cols: list = []
+    exec_nodes: int = 0  # _executable_nodes; 0 when skipped/errored
+    skipped: bool | str = False
+    err: str | None = None
+
+
+def _iter_plans(spark, sf_dir: str, run_streaming: bool, only=None,
+                formatted: bool = False):
+    """Build every registered query (or those in ``only``) and yield one
+    :class:`Plan` each, without executing anything beyond what the plan
+    functions themselves run."""
     from pyspark.sql.types import DecimalType
 
     from ccirecommenderdatapipeline_spark.operators.planmemo import (
@@ -269,7 +301,7 @@ def _iter_plans(spark, sf_dir: str, run_streaming: bool, only=None):
         # persist re-application — see reset_plan_memos's docstring)
         reset_plan_memos(spark)
         if _is_streaming_wrapped(name) and not run_streaming:
-            yield name, None, None, [], 0, True, None
+            yield Plan(name, skipped=True)
             continue
         try:
             df = prefold[name](spark, sf_dir) if name in prefold else fn(
@@ -277,20 +309,26 @@ def _iter_plans(spark, sf_dir: str, run_streaming: bool, only=None):
             )
             qe = df._jdf.queryExecution()
             jplan = qe.executedPlan()
-            txt = jplan.toString()
-            analyzed = qe.analyzed().toString()
-            exec_nodes = _executable_nodes(jplan)
-            dec_cols = [
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, DecimalType)
-            ]
+            plan = Plan(
+                name,
+                executed=jplan.toString(),
+                analyzed=qe.analyzed().toString(),
+                formatted=(
+                    spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
+                    if formatted else None
+                ),
+                dec_cols=[
+                    f.name
+                    for f in df.schema.fields
+                    if isinstance(f.dataType, DecimalType)
+                ],
+                exec_nodes=_executable_nodes(jplan),
+                skipped="prefold" if name in prefold else False,
+            )
         except Exception as exc:  # streaming-only plans can't batch-build
-            yield name, None, None, [], 0, False, type(exc).__name__
+            yield Plan(name, err=type(exc).__name__)
             continue
-        yield name, txt, analyzed, dec_cols, exec_nodes, (
-            "prefold" if name in prefold else False
-        ), None
+        yield plan
         spark.catalog.clearCache()
 
 
@@ -307,16 +345,17 @@ def main(sf_dir: str, run_streaming: bool) -> int:
     eager_skipped: list[str] = []
     audited = 0
     biggest: tuple[int, str] = (0, "")
-    for name, txt, _analyzed, dec_cols, exec_nodes, was_skipped, err in (
-        _iter_plans(spark, sf_dir, run_streaming)
-    ):
-        if was_skipped == "prefold":
+    for p in _iter_plans(spark, sf_dir, run_streaming):
+        name, txt, dec_cols, exec_nodes = (
+            p.name, p.executed, p.dec_cols, p.exec_nodes
+        )
+        if p.skipped == "prefold":
             eager_skipped.append(name)  # audited below, on the prefold text
-        elif was_skipped:
+        elif p.skipped:
             skipped.append(name)
             continue
-        if err is not None:
-            errors.append(f"{name}: {err}")
+        if p.err is not None:
+            errors.append(f"{name}: {p.err}")
             continue
         audited += 1
         biggest = max(biggest, (exec_nodes, name))
@@ -463,8 +502,6 @@ def _rounded_raw_ln(plan_txt: str) -> list[str]:
     never matches. Balanced-paren scan per line; truncated plan lines
     (FileScan argument cutoffs) are skipped like _nested_folds_in_lambda
     skips them."""
-    import re
-
     hits: list[str] = []
     for line in plan_txt.splitlines():
         i = 0
@@ -524,7 +561,7 @@ def _has_unpartitioned_window(plan_txt: str) -> bool:
     return False
 
 
-def canonical_hash(plan_txt: str) -> str:
+def canonical_hash(plan_txt: str, parallelism: int | None = None) -> str:
     """Literal-sensitive plan hash (VERDICT r12 item 2) — md5 of the
     ANALYZED-plan text with the per-session variance sources normalized
     out:
@@ -552,16 +589,22 @@ def canonical_hash(plan_txt: str) -> str:
       wrappers' per-run temp-view names) dropped: 10+ hex chars after
       an underscore never occur in hand-written column names here, and
       literal hex CONSTANTS in expressions render as function args, not
-      ``_hex`` identifier tails.
+      ``_hex`` identifier tails;
+    - the two literals derived from the host's core count, when
+      ``parallelism`` (the session's ``defaultParallelism``) is given:
+      ``spark.range``'s ``Range (..., splits=Some(P))`` and
+      ``sources.tables.fan_out``'s ``RepartitionByExpression [key], P``.
+      Only a count EQUAL to ``parallelism`` is rewritten, so a
+      hand-written partition count keeps its literal identity (unless it
+      happens to equal the core count of the host taking the hash).
 
     The ANALYZED plan (not optimized/executed) is the hash source: it
     still carries every user-written literal, hint, and shape — a
     constant-only replan (the r11 nano-nat class, invisible to the
-    structural node counts) moves it and trips the freshness gate
-    automatically — but it predates the stages whose RENDERING is
-    session-history-sensitive even for an identical query: the
-    distinct-aggregate rewrite assigns Expand grouping ids in an order
-    that varies with prior session work (measured: data_profile /
+    structural node counts) moves it — but it predates the stages whose
+    RENDERING is session-history-sensitive even for an identical query:
+    the distinct-aggregate rewrite assigns Expand grouping ids in an
+    order that varies with prior session work (measured: data_profile /
     assortativity_degree hashed differently under pytest, --only mode,
     and the full loop), cache substitution splices InMemoryRelation
     depending on what happens to be persisted, and FileScan DataFilters
@@ -570,7 +613,6 @@ def canonical_hash(plan_txt: str) -> str:
     next to the hash. The 12-hex-digit truncation keeps the JSON
     diffable; collision odds across ~10^3 plan versions are ~10^-8."""
     import hashlib
-    import re
 
     txt = re.sub(r"\[plan_id=\d+\]", "[plan_id=<n>]", plan_txt)
     txt = re.sub(r"\blambda ([A-Za-z]+)_\d+#", r"lambda \1_<n>#", txt)
@@ -579,6 +621,14 @@ def canonical_hash(plan_txt: str) -> str:
     txt = re.sub(
         r"(?:file:)?/(?:root/testdata|tmp)/[^\s\],)]*", "<path>", txt
     )
+    if parallelism is not None:
+        txt = txt.replace(f"splits=Some({parallelism})", "splits=Some(<cores>)")
+        txt = re.sub(
+            rf"^(\W*RepartitionByExpression \[.*\], ){parallelism}$",
+            r"\1<cores>",
+            txt,
+            flags=re.M,
+        )
     ids: dict[str, str] = {}
     txt = re.sub(
         r"#(\d+)",
@@ -588,41 +638,68 @@ def canonical_hash(plan_txt: str) -> str:
     return hashlib.md5(txt.encode()).hexdigest()[:12]
 
 
-def fingerprint(
+# node types whose per-plan counts make up a fingerprint
+FINGERPRINT_NODES = (
+    "Exchange", "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "InMemoryTableScan", "Scan parquet",
+    "WindowGroupLimit", "HashAggregate", "ObjectHashAggregate",
+)
+
+
+def fingerprints(
+    spark, sf_dir: str, run_streaming: bool = False, only=None
+) -> dict:
+    """Per-query physical-plan fingerprint: counts of the load-bearing
+    node types plus the literal-sensitive ``__lit_md5__``. Diffing two of
+    these catches SILENT plan regressions — a broadcast degrading to a
+    sort-merge join, a cache that stopped matching, an extra exchange,
+    a constant-only replan — that correctness gates cannot see.
+
+    Streaming-wrapped queries get a real fingerprint only with
+    ``run_streaming``; otherwise they are marked
+    ``{"__streaming_skipped__": 1}`` so the dict still carries one key
+    per registered query. Physical plans are SF-DEPENDENT by design
+    (static size estimates cross autoBroadcastJoinThreshold between SFs
+    — tpch_q7 is BHJx5 at sf0.001 but SMJx1/BHJx4 at sf0.01+), so the
+    SF is recorded under ``__meta__`` for :func:`plan_drift`."""
+    parallelism = spark.sparkContext.defaultParallelism
+    fp: dict = {}
+    for p in _iter_plans(spark, sf_dir, run_streaming, only=only):
+        if p.skipped and p.skipped != "prefold":
+            fp[p.name] = {"__streaming_skipped__": 1}
+            continue
+        if p.err is not None:
+            fp[p.name] = {"__error__": 1}
+            continue
+        ent: dict = {
+            n: p.executed.count(n)
+            for n in FINGERPRINT_NODES
+            if p.executed.count(n)
+        }
+        if p.skipped == "prefold":
+            # the counts/hash describe the PRE-FOLD subtree (the lazy
+            # plan up to the eager verdict collect), not the returned
+            # 1-row local relation — see _prefold_builders
+            ent["__prefold__"] = 1
+        ent["__lit_md5__"] = canonical_hash(p.analyzed, parallelism)
+        fp[p.name] = ent
+    fp["__meta__"] = {"sf_dir": sf_dir}
+    return fp
+
+
+def write_fingerprints(
     sf_dir: str = "/root/testdata/sf0.01",
-    out_path: str = "PLAN_FINGERPRINTS.json",
+    out_path: str = BASELINE,
     run_streaming: bool = False,
     only: list[str] | None = None,
 ) -> None:
-    """Write a per-query physical-plan fingerprint (counts of the load-
-    bearing node types) to ``out_path``. Diffing this file between rounds
-    catches SILENT plan regressions — a broadcast silently degrading to a
-    sort-merge join, a cache stop matching, an extra exchange — that
-    correctness gates cannot see.
+    """Write :func:`fingerprints` to ``out_path`` (``--fingerprint``).
 
-    Streaming-wrapped queries get a real fingerprint only under
-    ``--run-streaming`` (the intended mode for the once-per-round refresh);
-    otherwise they are marked ``{"__streaming_skipped__": 1}`` so the file
-    still carries one key per registered query.
-
-    Usage: python tools/audit_plans.py --fingerprint [sf_dir] [--run-streaming]
-                                       [--only name1,name2,...]
-
-    With ``--only``, existing entries for OTHER queries are preserved
+    With ``only``, existing entries for OTHER queries are preserved
     (merge), so a new-op batch can add its fingerprints without
     re-executing — or clobbering the --run-streaming baselines of — the
-    other 300+ plans.
-    """
-    import json
-    import os
-
-    spark = get_spark("plan-fingerprint")
-    nodes = (
-        "Exchange", "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-        "BroadcastNestedLoopJoin", "InMemoryTableScan", "Scan parquet",
-        "WindowGroupLimit", "HashAggregate", "ObjectHashAggregate",
-    )
-    fp: dict[str, dict[str, int]] = {}
+    other 300+ plans."""
+    fp: dict = {}
     if only and os.path.exists(out_path):
         with open(out_path) as f:
             fp = json.load(f)
@@ -635,51 +712,127 @@ def fingerprint(
                 "meaningless. Re-run at the baseline SF or do a full "
                 "refresh."
             )
-    for name, txt, analyzed, _dec_cols, _nodes, was_skipped, err in (
-        _iter_plans(spark, sf_dir, run_streaming, only=only)
-    ):
-        if was_skipped and was_skipped != "prefold":
-            fp[name] = {"__streaming_skipped__": 1}
-            continue
-        if err is not None:
-            fp[name] = {"__error__": 1}
-            continue
-        ent: dict = {n: txt.count(n) for n in nodes if txt.count(n)}
-        if was_skipped == "prefold":
-            # the counts/hash describe the PRE-FOLD subtree (the lazy
-            # plan up to the eager verdict collect), not the returned
-            # 1-row local relation — see _prefold_builders
-            ent["__prefold__"] = 1
-        # literal-sensitive hash alongside the structural counts — the
-        # dimension that catches constant-only replans (VERDICT r12
-        # item 2; migration path: tools/freshness_gate.py --adopt).
-        # Hashed from the ANALYZED plan, not the executed one — see
-        # canonical_hash's docstring for why.
-        ent["__lit_md5__"] = canonical_hash(analyzed)
-        fp[name] = ent
-    # Physical plans are SF-DEPENDENT by design (static size estimates
-    # cross autoBroadcastJoinThreshold between SFs — e.g. tpch_q7 is
-    # BHJx5 at sf0.001 but SMJx1/BHJx4 at sf0.01+, adjudicated r9 after
-    # the r8 verdict read a cross-SF compare as drift). Record the SF
-    # the baseline was taken at so fingerprint_diff can refuse to
-    # compare apples to oranges.
-    fp["__meta__"] = {"sf_dir": sf_dir}
+    fp.update(
+        fingerprints(get_spark("plan-fingerprint"), sf_dir, run_streaming, only)
+    )
     with open(out_path, "w") as f:
         json.dump(fp, f, indent=1, sort_keys=True)
     print(f"wrote {len(fp) - 1} fingerprints to {out_path} (sf_dir={sf_dir})")
 
 
+def plan_drift(base: dict, now: dict) -> tuple[dict, list, list]:
+    """Compare two fingerprint dicts; return ``(drift, new, gone)``.
+
+    ``drift`` maps each drifted name to ``{key: (base, now)}`` for the
+    keys that differ. Mode and representation markers are not drift: a
+    streaming-skip marker on either side (default mode vs a
+    --run-streaming baseline), or the legacy ``__eager_local_result__``
+    marker vs the pre-fold fingerprint that replaced it. Raises
+    ValueError when the two were taken at different SFs — plans are
+    SF-dependent, so that diff would report phantom drift."""
+    base, now = dict(base), dict(now)
+    base_sf = base.pop("__meta__", {}).get("sf_dir")
+    now_sf = now.pop("__meta__", {}).get("sf_dir")
+    if base_sf is not None and now_sf is not None and base_sf != now_sf:
+        raise ValueError(
+            f"baseline was taken at {base_sf}, this run is {now_sf}; "
+            "plans are SF-dependent (phantom drift otherwise — see tpch_q7)"
+        )
+    markers = ("__streaming_skipped__", "__eager_local_result__")
+    drift = {}
+    for name in sorted(set(base) & set(now)):
+        b, c = base[name], now[name]
+        if b == c or any(m in b or m in c for m in markers):
+            continue
+        drift[name] = {
+            k: (b.get(k, 0), c.get(k, 0))
+            for k in sorted(set(b) | set(c))
+            if b.get(k) != c.get(k)
+        }
+    return drift, sorted(set(now) - set(base)), sorted(set(base) - set(now))
+
+
+def diff(sf_dir: str, run_streaming: bool) -> int:
+    """``--diff``: rebuild fingerprints and diff them against the
+    committed baseline. Exit 0 = no drift (new queries listed
+    informationally); 1 = drift, with a per-query diff; 2 = the baseline
+    was taken at another SF. Refresh the baseline only after explaining
+    every drifted line (``--fingerprint --only <names>``)."""
+    with open(BASELINE) as f:
+        base = json.load(f)
+    base_sf = base.get("__meta__", {}).get("sf_dir")
+    if base_sf is not None and base_sf != sf_dir:
+        print(f"REFUSED: {BASELINE} was taken at {base_sf}, this run is "
+              f"{sf_dir}; plans are SF-dependent. Re-run at {base_sf}.")
+        return 2
+    now = fingerprints(get_spark("plan-fingerprint"), sf_dir, run_streaming)
+    drift, new, gone = plan_drift(base, now)
+    if new:
+        print(f"new queries (no baseline yet): {new}")
+    if gone:
+        print(f"removed queries (stale baseline entries): {gone}")
+    if drift:
+        print(f"PLAN DRIFT in {len(drift)} queries:")
+        for name, delta in drift.items():
+            print(f"  {name}: {delta}")
+        return 1
+    print(f"no plan drift across {len((set(base) & set(now)) - {'__meta__'})} "
+          "baselined queries")
+    return 0
+
+
+def explain(sf_dir: str, names: list[str]) -> int:
+    """``--explain``: write each batch plan's formatted EXPLAIN to
+    EXPLAIN_DIR/<query>.txt and print an exchange/join/scan summary."""
+    os.makedirs(EXPLAIN_DIR, exist_ok=True)
+    spark = get_spark("explain-audit")
+    for p in _iter_plans(spark, sf_dir, run_streaming=False,
+                         only=names or None, formatted=True):
+        if p.skipped is True:
+            print(f"{p.name:32s} (streaming - skipped)")
+            continue
+        if p.err is not None:
+            print(f"{p.name:32s} ERROR {p.err}")
+            continue
+        txt = p.formatted
+        with open(os.path.join(EXPLAIN_DIR, f"{p.name}.txt"), "w") as fh:
+            fh.write(txt)
+        pushed = set(re.findall(r"PushedFilters: \[([^\]]*)\]", txt)) - {""}
+
+        # count ONLY the numbered operator-detail headers ("(n) Op"):
+        # formatted explain prints every operator twice (tree + detail),
+        # and a bare 'Exchange' would also match BroadcastExchange /
+        # ReusedExchange
+        def op(pat: str) -> int:
+            return len(re.findall(rf"^\(\d+\) {pat}\b", txt, re.M))
+
+        print(
+            f"{p.name:32s} exch={op('Exchange'):2d} "
+            f"bhj={op('BroadcastHashJoin')} smj={op('SortMergeJoin')} "
+            f"bnlj={op('BroadcastNestedLoopJoin')} "
+            f"scans={op('Scan parquet')} "
+            f"pushed={'y' if pushed else '-'}"
+        )
+    return 0
+
+
 if __name__ == "__main__":
     run_streaming = "--run-streaming" in sys.argv
     argv = [a for a in sys.argv[1:] if a != "--run-streaming"]
-    if "--fingerprint" in argv:
-        args = [a for a in argv if a != "--fingerprint"]
+    mode = next((a for a in argv if a in (
+        "--fingerprint", "--diff", "--explain")), None)
+    args = [a for a in argv if a != mode]
+    if mode == "--fingerprint":
         only = None
         if "--only" in args:
             i = args.index("--only")
             only = args[i + 1].split(",")
             args = args[:i] + args[i + 2 :]
-        fingerprint(*args, run_streaming=run_streaming, only=only)
+        write_fingerprints(*args, run_streaming=run_streaming, only=only)
         raise SystemExit(0)
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    if mode == "--diff":
+        raise SystemExit(diff(sf_dir, run_streaming))
+    if mode == "--explain":
+        raise SystemExit(explain(sf_dir, args[1:]))
     raise SystemExit(main(sf_dir, run_streaming))

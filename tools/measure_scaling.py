@@ -10,12 +10,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ccirecommenderdatapipeline_spark import plans
-from ccirecommenderdatapipeline_spark.session import get_spark
+from bench import run_once, warm_up  # noqa: E402
+from ccirecommenderdatapipeline_spark import plans  # noqa: E402
+from ccirecommenderdatapipeline_spark.session import get_spark  # noqa: E402
 
 SCALES = [
     ("sf0.1", "/root/testdata/sf0.1"),
@@ -58,31 +58,14 @@ def main() -> int:
         return 1
     _require_dirs(SCALES)
     spark = get_spark("scaling")
-    # warm-ups (JVM + Python worker pool), same as bench.py
-    plans.QUERIES["cci"](spark, SCALES[0][1]).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql import functions as F
-
-    spark.range(64).withColumn("g", F.col("id") % 32).groupBy("g").applyInPandas(
-        lambda p: p, "id long, g long"
-    ).write.format("noop").mode("overwrite").save()
-    # streaming-engine warm-up, same as bench.py (r13): without it the
-    # FIRST stream_* cell absorbs ~1-5 s of state-store/micro-batch
-    # class loading and reads as anti-scaling vs the later cells
-    if any(n.startswith("stream_") for n in names):
-        plans.QUERIES["stream_dedup_watermark"](
-            spark, SCALES[0][1]
-        ).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+    warm_up(
+        spark, SCALES[0][1],
+        streaming=any(n.startswith("stream_") for n in names),
+    )
     for name in names:
         cells = []
         for tag, sf_dir in SCALES:
-            t0 = time.perf_counter()
-            plans.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            cells.append(f"{tag}={time.perf_counter() - t0:.2f}s")
+            cells.append(f"{tag}={run_once(spark, name, sf_dir):.2f}s")
             spark.catalog.clearCache()
         print(f"SCALING {name}: " + " ".join(cells), flush=True)
     spark.stop()

@@ -2,7 +2,7 @@
 
 The r13/r14 closes ran the same six-ritual sequence by hand —
 check_oracle at three SFs, audit_plans in three modes, fingerprint
-diff, freshness gate, the full pytest suite, and the bench sweep — and
+diff, the full pytest suite, and the bench sweep — and
 recorded the results as PLANS.md prose. This wraps the sequence in one
 command that:
 
@@ -17,8 +17,8 @@ command that:
 
 Usage: python tools/round_close.py [--list] [--skip <stage>]...
                                    [--only <stage>...]
-Stage names: freshness_gate pytest audit audit_sf0.1 audit_streaming
-fingerprint_diff oracle_sf0.001 oracle_sf0.01 oracle_sf0.1 bench.
+Stage names: pytest audit audit_sf0.1 audit_streaming plan_drift
+oracle_sf0.001 oracle_sf0.01 oracle_sf0.1 bench.
 
 The oracle sweeps use --chunk (fresh JVM per slice) because a single
 session dies from JVM decay around query ~75; sf0.1 uses the smaller
@@ -43,15 +43,14 @@ PY = sys.executable
 # (name, argv) in execution order — module-level so tests can plant a
 # failing stage without spawning Spark
 STAGES: list[tuple[str, list[str]]] = [
-    ("freshness_gate", [PY, "tools/freshness_gate.py"]),
     ("pytest", [PY, "-m", "pytest", "tests/", "-q"]),
     ("audit", [PY, "tools/audit_plans.py", "/root/testdata/sf0.01"]),
     ("audit_sf0.1", [PY, "tools/audit_plans.py", "/root/testdata/sf0.1"]),
     ("audit_streaming",
      [PY, "tools/audit_plans.py", "/root/testdata/sf0.01",
       "--run-streaming"]),
-    ("fingerprint_diff",
-     [PY, "tools/fingerprint_diff.py", "/root/testdata/sf0.01",
+    ("plan_drift",
+     [PY, "tools/audit_plans.py", "--diff", "/root/testdata/sf0.01",
       "--run-streaming"]),
     ("oracle_sf0.001",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.001",

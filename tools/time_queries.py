@@ -1,13 +1,11 @@
-"""Isolated per-query timing for optimization A/Bs (r15).
+"""Isolated per-query timing for optimization A/Bs.
 
 The bench sweep's per-cell numbers are position-sensitive and multi-modal
-on this host (PLANS.md "Load adjudication", r12-r14), so every
-optimization claim this round is measured with the canary protocol
-instead: ONE fresh session, the same warm-up set bench.py uses (JVM/JIT,
-pandas worker pool, streaming engine), then each named query timed
-``n_reps`` times back-to-back with the noop sink; regressions/wins are
-judged on the MINIMUM. Loadavg bookends recorded so a loaded box is
-visible in the artifact.
+on shared hosts (PLANS.md "Load adjudication"), so an optimization claim
+is measured in isolation instead: ONE fresh session, bench.py's warm-up
+set, then each named query timed ``n_reps`` times back-to-back with the
+noop sink; regressions/wins are judged on the MINIMUM. Loadavg bookends
+are recorded so a loaded box is visible in the artifact.
 
 Usage: python tools/time_queries.py <sf_dir> <n_reps> <query> [query ...]
 Prints one JSON line: {"timings": {name: {"runs": [...], "min": s}},
@@ -19,19 +17,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import run_once, warm_up  # noqa: E402
 from ccirecommenderdatapipeline_spark import plans  # noqa: E402
 from ccirecommenderdatapipeline_spark.session import get_spark  # noqa: E402
-
-
-def run_once(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = plans.QUERIES[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 def main() -> int:
@@ -44,16 +35,7 @@ def main() -> int:
         return 2
     load0 = round(os.getloadavg()[0], 2)
     spark = get_spark("time-queries")
-    # bench.py's fixed warm-up set, so timings are comparable to sweep cells
-    from pyspark.sql import functions as F
-
-    run_once(spark, "cci", sf_dir)
-    spark.range(64).withColumn("g", F.col("id") % 32).groupBy("g").applyInPandas(
-        lambda p: p, "id long, g long"
-    ).write.format("noop").mode("overwrite").save()
-    if any(n.startswith("stream_") for n in names):
-        run_once(spark, "stream_dedup_watermark", sf_dir)
-        spark.catalog.clearCache()
+    warm_up(spark, sf_dir, streaming=any(n.startswith("stream_") for n in names))
     out: dict[str, dict] = {}
     for name in names:
         runs = []
