@@ -8,16 +8,17 @@ chained DataFrame jobs writing parquet tables (SURVEY.md §3):
 - E3 exit scan (daily_function.py:1713-1824): sell decisions.
 
 Where the reference fans out a ProcessPoolExecutor per symbol and
-checkpoints per-symbol CSVs, this is four lazy DataFrame jobs whose only
-materialization points are the partitioned parquet writes — task retries
-and idempotent overwrite replace the resume machinery (S13).
+checkpoints per-symbol CSVs, this is twelve lazy DataFrames whose only
+materialization points are their parquet writes — task retries and
+idempotent overwrite replace the resume machinery (S13).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import plans
 
@@ -43,14 +44,18 @@ E3_TABLES = {"sell_decisions": "sell_decisions", "order_reconciliation": "order_
 def run_daily_batch(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Run E1+E2+E3 end to end; returns row counts per written table.
 
-    Writes are idempotent overwrites partitioned where the table has a
-    natural key (prices/cci by nothing here — at scale, bucket by symbol;
-    see tests/test_bucketing.py for the layout)."""
+    Each table is an idempotent, unpartitioned parquet overwrite at
+    ``out_dir/<table>``. Its row count is observed while the write runs
+    (``DataFrame.observe``), so the write stays the table's only
+    materialization and nothing is read back to count it; an empty table
+    reports 0. At scale, bucket prices/cci by symbol (tests/test_bucketing.py
+    has the layout)."""
     counts: dict[str, int] = {}
     for stage in (E1_TABLES, E2_TABLES, E3_TABLES):
         for table, query_name in stage.items():
             df: DataFrame = plans.QUERIES[query_name](spark, sf_dir)
-            path = os.path.join(out_dir, table)
-            df.write.mode("overwrite").parquet(path)
-            counts[table] = spark.read.parquet(path).count()
+            obs = Observation(table)
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite").parquet(os.path.join(out_dir, table))
+            counts[table] = obs.get["rows"]
     return counts

@@ -3,15 +3,25 @@ and mutually consistent."""
 
 from __future__ import annotations
 
-import tempfile
+import os
 
+import pytest
+from pyspark.sql import functions as F
+
+from ccirecommenderdatapipeline_spark import pipeline, plans
 from ccirecommenderdatapipeline_spark.pipeline import run_daily_batch
+from ccirecommenderdatapipeline_spark.session import codegen_compiles
 from tests.conftest import SF_SMALL
 
 
-def test_daily_batch_end_to_end(spark):
-    out = tempfile.mkdtemp()
-    counts = run_daily_batch(spark, SF_SMALL, out)
+@pytest.fixture(scope="module")
+def first_day(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("daily"))
+    return out, run_daily_batch(spark, SF_SMALL, out)
+
+
+def test_daily_batch_end_to_end(spark, first_day):
+    out, counts = first_day
 
     assert counts["symbol_list"] > 0
     assert counts["prices"] > counts["cci"] * 0 and counts["prices"] == counts["cci"]
@@ -28,8 +38,36 @@ def test_daily_batch_end_to_end(spark):
     assert counts["sell_decisions"] > 0
     assert counts["order_reconciliation"] > 0
 
+    # the counts observed during the writes are the written tables'
+    written = {t: spark.read.parquet(os.path.join(out, t)).count() for t in counts}
+    assert counts == written
+
+
+def test_second_day_reuses_generated_code(spark, first_day):
+    """A rerun on the same snapshot compiles no generated class: the
+    session's codegen cache holds a whole day's working set (Spark's
+    default of 100 entries recompiled about 110 classes here)."""
+    out, counts = first_day
+    before = codegen_compiles(spark)
     # idempotence: a rerun overwrites to the same counts (S13 semantics)
     assert run_daily_batch(spark, SF_SMALL, out) == counts
+    assert codegen_compiles(spark) - before == 0
+
+
+def test_empty_table_reports_zero_rows(spark, tmp_path, monkeypatch):
+    """A write whose filter keeps nothing reports 0 rows, not None (the
+    reco tables are empty on some snapshots)."""
+    build = plans.QUERIES["symbol_universe"]
+    monkeypatch.setitem(
+        plans.QUERIES, "symbol_universe",
+        lambda spark, sf_dir: build(spark, sf_dir).where(F.lit(False)))
+    monkeypatch.setattr(pipeline, "E1_TABLES", {"symbol_list": "symbol_universe"})
+    monkeypatch.setattr(pipeline, "E2_TABLES", {})
+    monkeypatch.setattr(pipeline, "E3_TABLES", {})
+
+    counts = run_daily_batch(spark, SF_SMALL, str(tmp_path))
+    assert counts == {"symbol_list": 0}
+    assert spark.read.parquet(str(tmp_path / "symbol_list")).count() == 0
 
 
 def test_registry_contract_integrity():

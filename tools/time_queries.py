@@ -5,10 +5,13 @@ on shared hosts (PLANS.md "Load adjudication"), so an optimization claim
 is measured in isolation instead: ONE fresh session, bench.py's warm-up
 set, then each named query timed ``n_reps`` times back-to-back with the
 noop sink; regressions/wins are judged on the MINIMUM. Loadavg bookends
-are recorded so a loaded box is visible in the artifact.
+are recorded so a loaded box is visible in the artifact, and so is each
+query's ``codegen_compiles`` (classes compiled over its reps), so a
+codegen-cache thrash shows in any timing run.
 
 Usage: python tools/time_queries.py <sf_dir> <n_reps> <query> [query ...]
-Prints one JSON line: {"timings": {name: {"runs": [...], "min": s}},
+Prints one JSON line: {"timings": {name: {"runs": [...], "min": s,
+"codegen_compiles": n}},
 "loadavg": [start, end], "sf_dir": ...}.
 """
 
@@ -22,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import run_once, warm_up  # noqa: E402
 from ccirecommenderdatapipeline_spark import plans  # noqa: E402
-from ccirecommenderdatapipeline_spark.session import get_spark  # noqa: E402
+from ccirecommenderdatapipeline_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -39,10 +42,12 @@ def main() -> int:
     out: dict[str, dict] = {}
     for name in names:
         runs = []
+        compiles0 = codegen_compiles(spark)
         for _ in range(n_reps):
             runs.append(round(run_once(spark, name, sf_dir), 3))
             spark.catalog.clearCache()
-        out[name] = {"runs": runs, "min": min(runs)}
+        out[name] = {"runs": runs, "min": min(runs),
+                     "codegen_compiles": codegen_compiles(spark) - compiles0}
     payload = {
         "timings": out,
         "loadavg": [load0, round(os.getloadavg()[0], 2)],
