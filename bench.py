@@ -1,25 +1,19 @@
-"""Bench harness (driver contract): runs the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line {"metric","value","unit","queries","sf"}.
+"""Headline timing sweep: runs the headline queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on one session and
+prints ONE JSON line {"metric", "value", "unit", "queries", "sf", "sf_dir",
+"n_queries", "order", "cpus"}; it writes no file.
 
-The FINAL stdout line is kept compact (total + the 10 slowest queries)
-because the round driver captures only the tail of the output — with 131
-headline queries the full per-query dict grew past that capture and
-BENCH_r08.json recorded ``parsed: null`` (VERDICT r8 item 3). The full
-per-query dict is always written to BENCH_LOCAL.json (committed once per
-round) and printed as a non-final line for humans reading the log.
-
-``--full`` times EVERY registered query (the bench-tail audit, VERDICT r8
-item 5) instead of the headline list, writing BENCH_FULL.json; run it at
-sf0.01 once per round so a pathological plan in the unbenched tail cannot
-hide behind the headline sample.
+``--full`` times EVERY registered query instead of the headline list; run
+it at sf0.01 (its default dir) so a pathological plan in the unbenched tail
+cannot hide behind the headline sample.
 
 A fixed warm-up set (``warm_up``: one batch query for JVM/JIT, one
 applyInPandas for the Python-worker pool, one availableNow stream for the
 micro-batch engine) absorbs session start-up; each query is then timed on
 a single steady-state run (what a long-lived cluster sees). ``--full``
-sweeps in ALPHABETICAL order so per-query cells keep a stable sweep position
-across rounds despite the rotating driver window (VERDICT r12 item 3).
+sweeps in ALPHABETICAL order so each cell keeps a stable sweep position as
+the registry grows. ``run_once`` and ``warm_up`` are the one timing path:
+tools/time_queries.py and tools/measure_scaling.py import them.
 """
 
 from __future__ import annotations
@@ -33,19 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ccirecommenderdatapipeline_spark import plans  # noqa: E402
 from ccirecommenderdatapipeline_spark.session import get_spark  # noqa: E402
-
-# 1-minute loadavg at sweep start; module-level default so references
-# outside main() (imports, run_once-only callers) never hit NameError
-# (ADVICE r13 item 1).
-_LOAD_START: float | None = None
-
-# Committed-artifact load gate (VERDICT r13 item 3): a sweep started on a
-# busy box measures the BOX, not the plans — r12 committed 301.7 s over a
-# same-code 255.0 s run because "latest run wins" had no idle-ness
-# condition. A run with loadavg_start above this threshold is marked
-# contaminated and may NOT overwrite a clean committed artifact; it still
-# prints its full payload to stdout for the log.
-LOAD_GATE = 1.0
 
 # Headline queries: the flagship pipeline stages + the north-star
 # training-data operators at the same scale factor.
@@ -200,60 +181,6 @@ HEADLINE = [
 ]
 
 
-def _may_write_artifact(payload: dict, out_path: str) -> bool:
-    """Write gates on the COMMITTED artifact. Two rules:
-
-    1. Load gate (VERDICT r13 item 3): a contaminated run may not
-       replace a clean one. A contaminated prior may be replaced (most
-       recent wins among equals), so a never-idle box still converges
-       on the newest run.
-    2. Core-count gate (VERDICT r15 item 6): the driver re-runs the
-       bench at a LOWER core count to measure scaling, and that run
-       used to overwrite the 32-core artifact on disk (BENCH_LOCAL in
-       the r15 tree was the 8-core scaling run). A run at fewer cpus
-       than a prior artifact taken at more cpus may not replace it;
-       artifacts stamp ``cpus`` so the rule (and readers) can tell.
-
-    The full payload always goes to stdout either way."""
-    if not os.path.exists(out_path):
-        return True
-    try:
-        with open(out_path) as f:
-            prior = json.load(f)
-    except (OSError, ValueError):
-        # a truncated/corrupt committed artifact is replaceable — raising
-        # here would lose the whole sweep's payload AFTER the run
-        # finished but BEFORE it printed (ADVICE r14 item 3)
-        return True
-    prior_cpus = prior.get("cpus")
-    if prior_cpus is not None and payload["cpus"] < prior_cpus:
-        print(
-            f"core-count gate: this run used {payload['cpus']} cpus; "
-            f"keeping the prior {prior_cpus}-cpu "
-            f"{os.path.basename(out_path)} (scaling runs do not replace "
-            "the full-core artifact)",
-            file=sys.stderr,
-        )
-        return False
-    if not payload["contaminated"]:
-        return True
-    prior_clean = (
-        not prior.get("contaminated", False)
-        and (prior.get("loadavg_start") or 0.0) <= LOAD_GATE
-    )
-    if prior_clean:
-        print(
-            f"load gate: loadavg_start {payload['loadavg_start']} > "
-            f"{LOAD_GATE}; keeping prior clean "
-            f"{os.path.basename(out_path)} (loadavg_start "
-            f"{prior.get('loadavg_start')}) — rerun on an idle box to "
-            "refresh the committed artifact",
-            file=sys.stderr,
-        )
-        return False
-    return True
-
-
 def run_once(spark, name: str, sf_dir: str) -> float:
     """Build and execute one registered query with the noop sink; seconds."""
     t0 = time.perf_counter()
@@ -273,7 +200,7 @@ def warm_up(spark, sf_dir: str, streaming: bool) -> None:
     - with ``streaming``, the cheapest availableNow stream: the first
       streaming query of a session also pays state-store / micro-batch
       engine class loading (~1-2 s), which would otherwise land on
-      whichever stream_* cell runs first (VERDICT r12 item 3).
+      whichever stream_* cell runs first.
     """
     from pyspark.sql import functions as F
 
@@ -286,52 +213,14 @@ def warm_up(spark, sf_dir: str, streaming: bool) -> None:
     spark.catalog.clearCache()
 
 
-# Settle-wait bound (VERDICT r14 item 3): the driver starts bench right
-# after its own pytest/oracle stages, so loadavg is often still draining
-# from THOSE when the sweep begins — BENCH_r14 shipped stamped
-# contaminated at loadavg 10.15 for exactly that reason. Waiting a
-# bounded few minutes for the box to settle yields a clean captured line
-# when the load is our own wake; if it never settles (genuinely busy
-# box), proceed and let the contamination stamp tell the story.
-SETTLE_MAX_S = float(os.environ.get("SPARK_GRAFT_SETTLE_S", "300"))
-SETTLE_POLL_S = 15.0
-
-
-def _settle_wait(max_s: float = None) -> dict:
-    """Block until 1-min loadavg <= LOAD_GATE or ``max_s`` elapses.
-    Returns {"settle_waited_s": s, "settle_timeout": bool} for the
-    artifact, so a contaminated-anyway run records that it DID wait."""
-    max_s = SETTLE_MAX_S if max_s is None else max_s
-    t0 = time.monotonic()
-    waited = False
-    while os.getloadavg()[0] > LOAD_GATE:
-        if time.monotonic() - t0 >= max_s:
-            return {"settle_waited_s": round(time.monotonic() - t0, 1),
-                    "settle_timeout": True}
-        if not waited:
-            print(
-                f"settle-wait: loadavg {os.getloadavg()[0]:.2f} > "
-                f"{LOAD_GATE}; polling up to {max_s:.0f}s for an idle box",
-                file=sys.stderr,
-            )
-            waited = True
-        time.sleep(min(SETTLE_POLL_S, max_s))
-    return {"settle_waited_s": round(time.monotonic() - t0, 1),
-            "settle_timeout": False}
-
-
 def main() -> None:
-    global _LOAD_START
-    settle = _settle_wait()
-    _LOAD_START = round(os.getloadavg()[0], 2)
     full = "--full" in sys.argv
     argv = [a for a in sys.argv[1:] if a != "--full"]
     if argv:
         sf_dir = argv[0]
     elif full:
-        # --full's tail audit is only cross-round comparable at its
-        # documented sf0.01; honoring the driver's headline env var here
-        # silently rewrote BENCH_FULL.json at the wrong scale
+        # --full's sweep is documented at sf0.01; the headline's env var
+        # does not apply to it
         sf_dir = "/root/testdata/sf0.01"
         if os.environ.get("SPARK_GRAFT_SF_DIR"):
             print(
@@ -347,96 +236,39 @@ def main() -> None:
         sf = -1.0
     spark = get_spark("bench")
     # --full sweeps in ALPHABETICAL order, NOT registry order: the
-    # registry leads with the round's rotating driver window
-    # (plans._PRIORITY), so registry-order sweeps relocated per-family
-    # cold-start onto whatever names led that round and made per-query
-    # cells incomparable across rounds (the r12 bigram_perplexity 6.2x
-    # cell — VERDICT r12 item 3 / PLANS.md "Load adjudication"). A fixed
-    # order keeps each query's sweep neighborhood stable regardless of
-    # window rotation. Headline mode was always fixed (the HEADLINE
-    # list; its order is deliberate cache-adjacency grouping).
-    names = sorted(plans.QUERIES) if full else [
-        n for n in HEADLINE if n in plans.QUERIES
-    ]
+    # registry leads with plans._PRIORITY, and a registry-order sweep
+    # moves per-family cold start onto whichever names lead it. Headline
+    # order is the HEADLINE list (deliberate cache-adjacency grouping).
+    names = sorted(plans.QUERIES) if full else HEADLINE
     warm_up(spark, sf_dir, streaming=True)
     timings: dict[str, float] = {}
-    # NO clearCache between queries: the bench models a long-lived cluster
-    # where the persisted cci/agged subtrees are plan-matched-shared across
-    # the pipeline stages (that reuse is a designed property, not leakage).
-    # Cache-accumulation hygiene for full-registry sweeps lives in
-    # tools/check_oracle.py, which clears between queries.
+    # NO clearCache between headline queries: the bench models a
+    # long-lived cluster where the persisted cci/agged subtrees are
+    # plan-matched-shared across the pipeline stages (that reuse is a
+    # designed property, not leakage).
     for name in names:
         timings[name] = round(run_once(spark, name, sf_dir), 3)
         if full:
-            # the tail audit sweeps unrelated families in registry
-            # order, so accumulated persisted subtrees are noise (and
-            # memory pressure), not designed pipeline reuse
+            # the full sweep runs unrelated families back to back, so
+            # accumulated persisted subtrees are noise (and memory
+            # pressure), not designed pipeline reuse
             spark.catalog.clearCache()
-    total = round(sum(timings.values()), 3)
-    metric = "all_queries_total_sec" if full else "headline_queries_total_sec"
-    payload = {
-        "metric": metric,
-        "value": total,
+    print(json.dumps({
+        "metric": (
+            "all_queries_total_sec" if full else "headline_queries_total_sec"
+        ),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         "sf_dir": sf_dir,
         "n_queries": len(timings),
         # run order, so any cell can be read with its sweep position
-        # (cold-start and cache-adjacency context) next to it — VERDICT
-        # r12 item 3's second half
+        # (cold-start and cache-adjacency context) next to it
         "order": names,
-        # adjudication context (PLANS.md "bench re-baseline after the
-        # replans"): the applyInPandas simulator cells are multi-modal
-        # in sweep context on shared hosts (best_return measured
-        # 6.8-37.8 s across identical-code sweeps), and neither
-        # attachment nor loadavg-at-start fully explains which mode a
-        # sweep lands in — so every artifact records both
-        "attached_stdout": sys.stdout.isatty(),
         # core count this sweep ran at, read from the running session
-        # (SPARK_GRAFT_MASTER may override SPARK_GRAFT_CPUS) — see
-        # _may_write_artifact rule 2
+        # (SPARK_GRAFT_MASTER may override SPARK_GRAFT_CPUS)
         "cpus": spark.sparkContext.defaultParallelism,
-        "loadavg_start": _LOAD_START,
-        "loadavg_end": round(os.getloadavg()[0], 2),
-        # cross-round readers: compare only uncontaminated artifacts;
-        # a contaminated cell says "box", not "plans" (VERDICT r13 item 3)
-        "contaminated": _LOAD_START > LOAD_GATE,
-        # settle-wait bookkeeping (VERDICT r14 item 3): a contaminated
-        # run that DID wait records the bounded timeout, so the reader
-        # knows the box never settled rather than the gate being skipped
-        **settle,
-    }
-    out_file = "BENCH_FULL.json" if full else "BENCH_LOCAL.json"
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), out_file
-    )
-    if _may_write_artifact(payload, out_path):
-        with open(out_path, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-    # full detail as a NON-final line for the log / humans ...
-    print(json.dumps(payload))
-    # ... and a compact FINAL line (total + 10 slowest) that always fits
-    # the driver's bounded tail capture (VERDICT r8 item 3)
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
-    print(json.dumps({
-        "metric": metric,
-        "value": total,
-        "unit": "sec",
-        "queries": slowest,
-        "sf": sf,
-        "n_queries": len(timings),
-        "full_timings": out_file,
-        # the driver records THIS line as BENCH_r{N}.json, so the load
-        # verdict must travel with it (VERDICT r13 item 3), the
-        # settle-wait outcome (VERDICT r14 item 3), and the core count
-        # (VERDICT r15 item 6)
-        "cpus": payload["cpus"],
-        "loadavg_start": _LOAD_START,
-        "contaminated": payload["contaminated"],
-        **settle,
     }))
     spark.stop()
 

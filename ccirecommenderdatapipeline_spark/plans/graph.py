@@ -164,7 +164,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-iteration contribution shuffle the docstring describes. (The r12
     # note "persist measured as pessimizing" predates the r15/r16
     # plan-memo + plan-size-persist protocol and is superseded by the
-    # interleaved A/B recorded in OPTIMIZATION_r16.md.)
+    # interleaved A/B recorded in `git show 01014d4:OPTIMIZATION_r16.md`.)
     from pyspark.storagelevel import StorageLevel
 
     trans = edges.select(

@@ -210,7 +210,7 @@ def _ml_lsh_build(spark: SparkSession, sf_dir: str):
     # inverted-index arm, sizes, the CountVectorizer fit AND transform,
     # the vocab/injected probe) — without the persist each one re-runs
     # the regex pipeline over the corpus (the distinctive_terms audit
-    # lesson; measured 6.4 s -> see BENCH_FULL after this change)
+    # lesson; measured 6.4 s -> see `git show 01014d4:BENCH_FULL.json`)
     ne = (
         docs2.select(
             "doc_id",

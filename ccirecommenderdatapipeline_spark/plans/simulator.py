@@ -8,7 +8,7 @@ engines do identical IEEE arithmetic and results hash-match exactly.
 
 Grids are reduced for the oracle gate (the driver collects + hashes rows;
 the full 4,860-combo grid yields tens of millions of trade rows at sf0.01 —
-that scale is exercised Spark-only in bench.py's full_grid_strategy_agg).
+that scale is exercised Spark-only in bench.py's best_return_full_grid).
 """
 
 from __future__ import annotations

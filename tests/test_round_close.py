@@ -70,10 +70,9 @@ def test_unknown_stage_name_is_an_error(monkeypatch):
 
 def test_real_stage_registry_names_real_tools():
     # the committed STAGES must point at files that exist, with the
-    # oracle sweeps chunked (JVM decay) and bench LAST (it rewrites the
-    # committed artifact; only after everything else certified)
+    # oracle sweeps chunked (JVM decay) and the slowest sweep last
     names = [n for n, _ in rc.STAGES]
-    assert names[-1] == "bench"
+    assert names[-1] == "oracle_sf0.1"
     assert {"oracle_sf0.001", "oracle_sf0.01", "oracle_sf0.1"} <= set(names)
     for _, argv in rc.STAGES:
         script = argv[1] if argv[1] != "-m" else None

@@ -38,3 +38,13 @@ def test_entry_points_import_without_a_session():
         assert SparkContext._active_spark_context is None, (
             "importing an entry point started a SparkContext"
         )
+
+
+def test_headline_names_are_registered_and_unique():
+    # bench.py indexes the registry with each HEADLINE name, so a typo or
+    # a removed query fails here instead of mid-sweep
+    import bench
+    from ccirecommenderdatapipeline_spark import plans
+
+    assert [n for n in bench.HEADLINE if n not in plans.QUERIES] == []
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)

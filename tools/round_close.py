@@ -1,31 +1,26 @@
-"""One-command round-close certification (VERDICT r14 item 4).
+"""One-command round-close certification.
 
-The r13/r14 closes ran the same six-ritual sequence by hand —
-check_oracle at three SFs, audit_plans in three modes, fingerprint
-diff, the full pytest suite, and the bench sweep — and
-recorded the results as PLANS.md prose. This wraps the sequence in one
-command that:
+Runs the certification sequence — check_oracle at three SFs,
+audit_plans in three modes, the plan-drift diff and the full pytest
+suite — as one command that:
 
   - runs the stages IN ORDER (cheap gates first, so a broken tree
     fails in seconds, not after a 30-minute sf0.1 sweep);
   - tees each stage's output to its own log file;
   - prints ONE machine-readable JSON summary line (per-stage exit code,
-    wall seconds, log path) — the close certification artifact to
-    commit verbatim;
+    wall seconds, log path);
   - exits non-zero when ANY stage fails (a planted failure in any
     stage fails the command — pinned by tests/test_round_close.py).
 
 Usage: python tools/round_close.py [--list] [--skip <stage>]...
                                    [--only <stage>...]
 Stage names: pytest audit audit_sf0.1 audit_streaming plan_drift
-oracle_sf0.001 oracle_sf0.01 oracle_sf0.1 bench.
+oracle_sf0.001 oracle_sf0.01 oracle_sf0.1.
 
 The oracle sweeps use --chunk (fresh JVM per slice) because a single
 session dies from JVM decay around query ~75; sf0.1 uses the smaller
-chunk for the same reason at bigger shapes. bench last: it rewrites
-BENCH_LOCAL.json, and a close should only refresh the committed bench
-artifact after everything else certified green (its own load gate
-still applies on a busy box).
+chunk for the same reason at bigger shapes. Timings are not part of a
+close: perfbench/ compares a change with its parent on one host.
 """
 
 from __future__ import annotations
@@ -61,7 +56,6 @@ STAGES: list[tuple[str, list[str]]] = [
     ("oracle_sf0.1",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.1",
       "--chunk", "60"]),
-    ("bench", [PY, "bench.py"]),
 ]
 
 
