@@ -1,11 +1,11 @@
-"""Headline timing sweep: runs the headline queries at
-$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on one session and
-prints ONE JSON line {"metric", "value", "unit", "queries", "sf", "sf_dir",
-"n_queries", "order", "cpus"}; it writes no file.
+"""Headline timing sweep: ``python bench.py [--full] [sf_dir]`` runs the
+headline queries at ``sf_dir`` (default: the sf0.1 test data) on one
+session and prints ONE JSON line {"metric", "value", "unit", "queries",
+"sf", "sf_dir", "n_queries", "order", "cpus"}; it writes no file.
 
-``--full`` times EVERY registered query instead of the headline list; run
-it at sf0.01 (its default dir) so a pathological plan in the unbenched tail
-cannot hide behind the headline sample.
+``--full`` times EVERY registered query instead of the headline list, by
+default at sf0.01, so a pathological plan in the unbenched tail cannot
+hide behind the headline sample.
 
 A fixed warm-up set (``warm_up``: one batch query for JVM/JIT, one
 applyInPandas for the Python-worker pool, one availableNow stream for the
@@ -219,17 +219,9 @@ def main() -> None:
     if argv:
         sf_dir = argv[0]
     elif full:
-        # --full's sweep is documented at sf0.01; the headline's env var
-        # does not apply to it
         sf_dir = "/root/testdata/sf0.01"
-        if os.environ.get("SPARK_GRAFT_SF_DIR"):
-            print(
-                "note: --full ignores SPARK_GRAFT_SF_DIR and runs at "
-                f"{sf_dir}; pass a dir argument to override",
-                file=sys.stderr,
-            )
     else:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        sf_dir = "/root/testdata/sf0.1"
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:  # path contains 'sf' not followed by a number

@@ -39,6 +39,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from .planmemo import shared_view
+
 # strings rendered into SQL text verbatim must be provably escape-free;
 # anything else takes the Column fallback path
 _SAFE_STR = re.compile(r"^[A-Za-z0-9 _.:,/+=@()\[\]-]*$")
@@ -73,20 +75,20 @@ def literal_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
     would. One JVM parse for the whole table when every value is SQL-
     renderable (the common case); per-cell Column fallback otherwise.
 
-    The built DataFrame (an immutable LAZY plan — no data, no persisted
-    state) is memoized per SparkSession: the strategy-selection family
+    The built plan is a ``shared_view`` keyed by (schema, rows) that reads
+    no input (operators/planmemo.py): the strategy-selection family
     re-embeds the identical combo grid in up to 8 queries per session,
     and each re-parse+analyze of the 540-struct expression costs ~1 s of
-    driver time. The cache dict lives ON the session object, so it dies
-    with the session and cannot leak across engines or tests."""
-    key = (schema, tuple(map(tuple, rows)))
-    try:
-        cache = spark._literal_table_plan_cache
-    except AttributeError:
-        cache = spark._literal_table_plan_cache = {}
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    driver time."""
+    return shared_view(
+        spark, (schema, tuple(map(tuple, rows))), None,
+        lambda: _build_literal_table(spark, rows, schema),
+    )
+
+
+def _build_literal_table(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
     struct = StructType.fromDDL(schema)
     fields = [(f.name, f.dataType) for f in struct.fields]
     cells = [
@@ -105,9 +107,7 @@ def literal_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
             + ")"
             for row in cells
         )
-        df = spark.range(1).selectExpr(f"inline(array({structs}))")
-        cache[key] = df
-        return df
+        return spark.range(1).selectExpr(f"inline(array({structs}))")
     structs = [
         F.struct(
             *[
@@ -117,6 +117,4 @@ def literal_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
         )
         for row in rows
     ]
-    df = spark.range(1).select(F.inline(F.array(*structs)))
-    cache[key] = df
-    return df
+    return spark.range(1).select(F.inline(F.array(*structs)))

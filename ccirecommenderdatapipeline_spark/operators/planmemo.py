@@ -1,66 +1,113 @@
-"""Per-session memo for shared LAZY view plans (r15 build-path fix).
+"""One snapshot-keyed cache for everything a session reuses.
 
-~40 registered queries embed the same prices -> CCI chain (and the
-simulator/covariance views on top of it), and every embedding rebuilds
-the identical DataFrame: a few hundred py4j round-trips plus a Catalyst
-re-analysis of the growing tree PER OP (Dataset creation analyzes
-eagerly, so an n-op chain costs O(n^2) analysis). That build cost is
-driver latency inside every timed bench cell (optimization guide §5:
-the driver should do almost no work).
+The key is ``snapshot(sf_dir)``: a token over the dir's real path and the
+(relative path, size, mtime_ns) of every file under it. A rewritten file,
+another dir with the same basename, or a new day's snapshot path each gets
+a new token, so nothing built from older contents is served again.
 
-``plan_memo`` caches the BUILT DataFrame per (SparkSession, key). A
-DataFrame is an immutable lazy plan — no data, no persisted partitions,
-nothing keyed on input contents — so handing the same object to every
-consumer changes neither results nor execution (CacheManager already
-matched these subtrees by analyzed plan; the memo just skips rebuilding
-the identical tree). The dict lives ON the session object, so it dies
-with the session and cannot leak across engines, tests, or processes.
+- ``shared_view`` memoizes the built lazy plan of a view many queries
+  embed (~40 embed the prices -> CCI chain; each rebuild costs hundreds of
+  py4j round-trips plus a Catalyst re-analysis per op), so they all share
+  one DataFrame and one persisted InMemoryRelation. The dict
+  (``spark._shared_view_plan_cache``, dying with the session) holds one
+  entry per view name with the (sf_dir, token) it was built from; a
+  request with another one unpersists the entry and builds anew, so a
+  session that reads a new snapshot every day holds one day's views. The
+  persist is re-applied only after ``clearCache()`` dropped it, never on a
+  live entry. Literal tables read no input: their ``sf_dir`` is None.
+- ``staged`` writes a derived input once per snapshot at
+  ``root/<kind>-<token>`` and publishes it by renaming a temp sibling, so
+  the path exists only when complete: its existence is the marker.
 
-Persisted views must re-apply ``.persist()`` on every return (not only
-on build): ``spark.catalog.clearCache()`` between queries (check_oracle,
-bench --full) unregisters the cache entry, and the re-persist is what
-restores the declarative marker for the next consumer — the same
-behavior the rebuild-every-time path had.
+``load_table`` and ``shared_view`` call ``observe``: a known dir with a new
+token gets ``spark.catalog.refreshByPath``, which also refreshes what any
+query-local ``persist`` cached from it.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import uuid
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
-def plan_memo(
-    spark: SparkSession, key: tuple, builder: Callable[[], DataFrame]
+def snapshot(path: str) -> str:
+    """Token of ``path``'s current contents (``__pycache__`` excluded)."""
+    root = os.path.realpath(path)
+    h = hashlib.md5(root.encode())
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if x != "__pycache__")
+        for f in sorted(files):
+            st = os.stat(os.path.join(d, f))
+            rel = os.path.relpath(os.path.join(d, f), root)
+            h.update(f"\0{rel}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def observe(spark: SparkSession, sf_dir: str) -> str:
+    """``snapshot(sf_dir)``, refreshing Spark's listings and cached data
+    under the dir when this session saw another token for it."""
+    token = snapshot(sf_dir)
+    seen = spark.__dict__.setdefault("_snapshot_tokens", {})
+    key = os.path.realpath(sf_dir)
+    if seen.setdefault(key, token) != token:
+        spark.catalog.refreshByPath(sf_dir)
+        seen[key] = token
+    return token
+
+
+def shared_view(
+    spark: SparkSession,
+    name,
+    sf_dir: str | None,
+    build: Callable[[], DataFrame],
+    level: StorageLevel | None = None,
 ) -> DataFrame:
-    try:
-        cache = spark._shared_view_plan_cache
-    except AttributeError:
-        cache = spark._shared_view_plan_cache = {}
-    df = cache.get(key)
-    if df is None:
-        df = cache[key] = builder()
+    """View ``name`` built by ``build`` from ``sf_dir``'s current snapshot,
+    persisted at ``level`` (None: the plan is only memoized)."""
+    token = None if sf_dir is None else observe(spark, sf_dir)
+    cache = spark.__dict__.setdefault("_shared_view_plan_cache", {})
+    entry = cache.pop(name, None)
+    if entry is not None and entry[:2] == (sf_dir, token):
+        df = entry[2]
+        if level is not None and df.storageLevel == StorageLevel.NONE:
+            df.persist(level)
+    else:
+        if entry is not None:
+            entry[2].unpersist()
+        df = build()
+        if level is not None:
+            df.persist(level)
+    cache[name] = (sf_dir, token, df)
     return df
 
 
-# every per-session plan-memo attribute (operators/literals.py owns the
-# second one); reset_plan_memos must cover them all
-_MEMO_ATTRS = ("_shared_view_plan_cache", "_literal_table_plan_cache")
+def reset(spark: SparkSession) -> None:
+    """Drop every entry and its cached data, for the plan audit
+    (tools/audit_plans.py): a memo-hit plan shares exprIds with earlier
+    embeddings, so its printed plan would depend on what the session built
+    before; a reset between queries pins it to the fresh-session build."""
+    cache = spark.__dict__.setdefault("_shared_view_plan_cache", {})
+    for _sf_dir, _token, df in cache.values():
+        df.unpersist()
+    cache.clear()
 
 
-def reset_plan_memos(spark: SparkSession) -> None:
-    """Drop the per-session plan memos. For the PLAN-AUDIT harnesses only
-    (tools/audit_plans.py::_iter_plans): a memo-hit plan shares exprIds
-    across embeddings and skips inner-view ``persist`` re-application, so
-    a query's printed plan (analyzed hash, InMemoryTableScan splice)
-    would depend on which queries the session built EARLIER — full-loop,
-    ``--only``, and pytest fingerprints would disagree. Resetting between
-    queries pins the fingerprint to the reproducible fresh-session
-    build, the shape the committed baseline was taken in. Execution
-    paths (bench, check_oracle, time_queries) keep the memo: it is the
-    real engine behavior being measured."""
-    for attr in _MEMO_ATTRS:
+def staged(root: str, kind: str, sf_dir: str, write: Callable[[str], None]) -> str:
+    """``root/<kind>-<snapshot(sf_dir)>``, created on first request by
+    ``write(path)`` into a temp sibling that is then renamed into place."""
+    out = os.path.join(root, f"{kind}-{snapshot(sf_dir)}")
+    if not os.path.exists(out):
+        tmp = f"{out}.{uuid.uuid4().hex}.part"
+        os.makedirs(root, exist_ok=True)
+        write(tmp)
         try:
-            delattr(spark, attr)
-        except AttributeError:
-            pass
+            os.rename(tmp, out)
+        except OSError:  # a concurrent writer published first
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out

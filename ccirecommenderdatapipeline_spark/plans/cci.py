@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.windows import with_buy_signal, with_cci, latest_rows
 from ..sources.prices import PRICES_ORACLE_CTE, prices_view
 from .registry import query
@@ -67,18 +68,16 @@ def cci_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized CCI table (plans/storage.py bucketing battery / SCALING.md);
     the in-memory cache is the single-session form of that layout.
 
-    The built plan is memoized per session (operators/planmemo.py); the
-    ``persist`` re-applies on every return so a ``clearCache()`` between
-    queries restores the declarative marker exactly as the
-    rebuild-every-time path did.
+    It is a ``shared_view`` (operators/planmemo.py): one built plan per
+    session and snapshot of ``sf_dir``, unpersisted when another dir or a
+    changed snapshot replaces it, and re-persisted only after a
+    ``clearCache()`` dropped it.
     """
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark,
-        ("cci_view", sf_dir),
+    return shared_view(
+        spark, "cci_view", sf_dir,
         lambda: with_cci(prices_view(spark, sf_dir)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 @query("prices", oracle="WITH " + PRICES_ORACLE_CTE + " SELECT * FROM prices")

@@ -16,6 +16,9 @@ frontier against the (small, broadcast) parent map.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..operators.planmemo import shared_view
 from ..sources.tables import load_table
 from .registry import query
 
@@ -165,8 +168,6 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # note "persist measured as pessimizing" predates the r15/r16
     # plan-memo + plan-size-persist protocol and is superseded by the
     # interleaved A/B recorded in `git show 01014d4:OPTIMIZATION_r16.md`.)
-    from pyspark.storagelevel import StorageLevel
-
     trans = edges.select(
         "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -233,7 +234,6 @@ def _pair_stats(spark: SparkSession, sf_dir: str):
 
     100-TB shape unchanged: one corpus-scale shuffle (the basket
     groupBy), vocabulary-bounded everything after."""
-    from ..operators.planmemo import plan_memo
     from .recommender import _basket_pairs, order_baskets_view
 
     baskets = order_baskets_view(spark, sf_dir)
@@ -247,7 +247,9 @@ def _pair_stats(spark: SparkSession, sf_dir: str):
             .agg(F.count("*").cast("long").alias("pair_cnt"))
         )
 
-    pr = plan_memo(spark, ("brand_pair_counts", sf_dir), build_pr).persist()
+    pr = shared_view(
+        spark, "brand_pair_counts", sf_dir, build_pr, StorageLevel.MEMORY_AND_DISK_DESER
+    )
     bc = (
         baskets.select(F.explode("bs").alias("brand"))
         .groupBy("brand")

@@ -33,7 +33,9 @@ cosmetic ROUND.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.windows import bounded_window
 from pyspark.sql import functions as F
 
@@ -61,8 +63,6 @@ def cb_incidence_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100-TB shape unchanged: the distinct is the one corpus-scale shuffle
     (key ck, fan-out bounded by the brand vocabulary); part broadcasts."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -80,7 +80,9 @@ def cb_incidence_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return plan_memo(spark, ("cb_incidence", sf_dir), build).persist()
+    return shared_view(
+        spark, "cb_incidence", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def brand_sim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,8 +97,6 @@ def brand_sim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both_cnt, c_a, c_b) alongside the pre-rounded cosine so
     ``item_item_cosine`` can re-derive its unrounded ranking key
     bit-identically."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         cb = cb_incidence_view(spark, sf_dir)
         bc = cb.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
@@ -129,7 +129,9 @@ def brand_sim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return plan_memo(spark, ("brand_sim", sf_dir), build).persist()
+    return shared_view(
+        spark, "brand_sim", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def order_baskets_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,8 +146,6 @@ def order_baskets_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     part is projected to its 2-column (partkey, brand) dim before the
     join; at testdata scale that side broadcasts, and at warehouse scale
     the projection keeps the shuffle payload to key+brand."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -157,7 +157,9 @@ def order_baskets_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.array_sort(F.collect_set("p_brand")).alias("bs"))
         )
 
-    return plan_memo(spark, ("order_baskets", sf_dir), build).persist()
+    return shared_view(
+        spark, "order_baskets", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def brand_transitions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,8 +172,6 @@ def brand_transitions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities vs the power-iteration fold). The persisted result is
     <= |V|^2 = 625 rows; one basket shuffle + one window per session
     instead of per query."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -205,7 +205,9 @@ def brand_transitions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("cnt"))
         )
 
-    return plan_memo(spark, ("brand_transitions", sf_dir), build).persist()
+    return shared_view(
+        spark, "brand_transitions", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def _basket_pairs(baskets: DataFrame) -> DataFrame:
@@ -770,8 +772,6 @@ def _temporal_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized (r16) so the two consumers and both slices below share one
     built tree; NOT persisted (each slice scans with its own date
     pushdown)."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -790,15 +790,13 @@ def _temporal_base(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return plan_memo(spark, ("temporal_base", sf_dir), build)
+    return shared_view(spark, "temporal_base", sf_dir, build)
 
 
 def _temporal_tr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-cutoff (ck, brand) train incidence, memoized + persisted on
-    every return (r16): referenced four times inside each consumer's
+    """Pre-cutoff (ck, brand) train incidence, a persisted shared view
+    (r16): referenced four times inside each consumer's
     plan and by both eval queries."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         cutoff = F.lit(NDCG_CUTOFF).cast("date")
         return (
@@ -808,14 +806,14 @@ def _temporal_tr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return plan_memo(spark, ("temporal_tr", sf_dir), build).persist()
+    return shared_view(
+        spark, "temporal_tr", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def _temporal_new_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-time post-cutoff relevance set (ck, brand), memoized +
-    persisted on every return (r16)."""
-    from ..operators.planmemo import plan_memo
-
+    """First-time post-cutoff relevance set (ck, brand), a persisted
+    shared view (r16)."""
     def build() -> DataFrame:
         cutoff = F.lit(NDCG_CUTOFF).cast("date")
         te = (
@@ -826,7 +824,9 @@ def _temporal_new_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return te.join(_temporal_tr(spark, sf_dir), ["ck", "brand"], "left_anti")
 
-    return plan_memo(spark, ("temporal_new_rel", sf_dir), build).persist()
+    return shared_view(
+        spark, "temporal_new_rel", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def _temporal_ranked(spark: SparkSession, sf_dir: str):
@@ -841,8 +841,6 @@ def _temporal_ranked(spark: SparkSession, sf_dir: str):
     model and the candidate ranking build ONCE per session instead of
     once per eval query (guide §2.4/§5; the ``brand_sim_view``
     treatment on the date-filtered slice)."""
-    from ..operators.planmemo import plan_memo
-
     def build_ranked() -> DataFrame:
         tr = _temporal_tr(spark, sf_dir)
         bc = tr.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
@@ -885,9 +883,9 @@ def _temporal_ranked(spark: SparkSession, sf_dir: str):
             "ck", "brand", F.row_number().over(cw).alias("rnk")
         ).where(F.col("rnk") <= NDCG_K)
 
-    ranked = plan_memo(
-        spark, ("temporal_ranked", sf_dir), build_ranked
-    ).persist()
+    ranked = shared_view(
+        spark, "temporal_ranked", sf_dir, build_ranked, StorageLevel.MEMORY_AND_DISK_DESER
+    )
     return ranked, _temporal_new_rel(spark, sf_dir)
 
 

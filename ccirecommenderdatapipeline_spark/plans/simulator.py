@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.simulator import (
     aggregate_strategies,
     best_by,
@@ -65,15 +66,13 @@ def agged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (verified bit-exact by pandas frame equality and the consumer
     oracles; pinned by tests/test_search_years.py::
     test_agged_view_is_years_all_slice)."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark,
-        ("agged_view", sf_dir),
+    return shared_view(
+        spark, "agged_view", sf_dir,
         lambda: agged_years_view(spark, sf_dir)
         .where(F.col("search_years") == "all")
         .drop("search_years"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def _sim_cte(grid: dict, years: list | None = None) -> str:
@@ -304,16 +303,15 @@ def agged_years_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay form, so the driver gate re-proves the semantics on every run.
     Plan A (``simulate_trades(years=...)`` -> ``aggregate_strategies``)
     remains the Catalyst path, exercised by best_return_depth3."""
-    from ..operators.planmemo import plan_memo
     from ..operators.simulator_pandas import simulate_aggregate_pandas
 
-    return plan_memo(
-        spark,
-        ("agged_years_view", sf_dir),
+    return shared_view(
+        spark, "agged_years_view", sf_dir,
         lambda: simulate_aggregate_pandas(
             cci_view(spark, sf_dir), AGG_GRID, years=BEST_YEARS
         ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def _best_query(metric: str):

@@ -2,9 +2,10 @@
 schema-align union (P14/U1), scalar round-trips (F9/F10/UD3), per-type caps
 (O2), the explicit as-of join (J5), and cube grouping (north-star §2.5 note).
 
-Storage queries stage under /tmp/spark_graft_storage (idempotent per
-sf_dir); their oracles recompute the same content straight from the source
-tables, so the write-read round-trip itself is what's being verified.
+Storage queries stage under /tmp/spark_graft_storage, once per snapshot
+of sf_dir (operators/planmemo.py ``staged``); their oracles recompute the
+same content straight from the source tables, so the write-read round-trip
+itself is what's being verified.
 """
 
 from __future__ import annotations
@@ -13,14 +14,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..operators.planmemo import staged
 from ..sources.tables import load_table
 from .registry import query
 
 STORAGE_ROOT = "/tmp/spark_graft_storage"
 
 
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir))
+def _orders_by_year(spark: SparkSession, sf_dir: str) -> str:
+    """orders written partitioned by ``o_year``."""
+    def write(out: str) -> None:
+        load_table(spark, sf_dir, "orders").withColumn(
+            "o_year", F.year(F.to_date("o_orderdate")).cast("int")
+        ).write.partitionBy("o_year").parquet(out)
+
+    return staged(STORAGE_ROOT, "orders_by_year", sf_dir, write)
 
 
 # --- S12: latest-partition discovery ----------------------------------------
@@ -41,13 +49,7 @@ def q_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     filenames for the max date; here the table is written partitioned by
     year and the latest partition is discovered from partition values and
     read with partition pruning (the filter never touches older files)."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_orders_by_year")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        o = load_table(spark, sf_dir, "orders").withColumn(
-            "o_year", F.year(F.to_date("o_orderdate")).cast("int")
-        )
-        o.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    t = spark.read.parquet(out)
+    t = spark.read.parquet(_orders_by_year(spark, sf_dir))
     latest = t.agg(F.max("o_year")).first()[0]  # partition-values-only scan
     return t.filter(F.col("o_year") == latest).select(
         "o_orderkey", "o_orderstatus", "o_totalprice",
@@ -73,14 +75,15 @@ def q_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite — written TWICE here on purpose: the second overwrite must
     leave identical content (rerun/resume safety), which the oracle verifies
     against the source."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_lineitem_buckets")
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "bucket", (F.col("l_suppkey") % 10).cast("long")
-    )
-    for _ in range(2):  # idempotence: overwrite twice, same result
-        li.write.mode("overwrite").partitionBy("bucket").parquet(out)
+    def write(out: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").withColumn(
+            "bucket", (F.col("l_suppkey") % 10).cast("long")
+        )
+        for _ in range(2):  # idempotence: overwrite twice, same result
+            li.write.mode("overwrite").partitionBy("bucket").parquet(out)
+
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(staged(STORAGE_ROOT, "lineitem_buckets", sf_dir, write))
         .groupBy(F.col("bucket").cast("long").alias("bucket"))
         .agg(
             F.count("*").alias("n_rows"),
@@ -679,9 +682,11 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference pass is a second full scan at 100 TB), then aggregated. The
     oracle reads the ORIGINAL parquet, so the hash match proves the text
     column survived quoting/escaping byte-for-byte."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_docs_csv")
     docs = load_table(spark, sf_dir, "documents")
-    docs.write.mode("overwrite").option("header", True).option("quoteAll", True).csv(out)
+    out = staged(
+        STORAGE_ROOT, "docs_csv", sf_dir,
+        lambda p: docs.write.option("header", True).option("quoteAll", True).csv(p),
+    )
     back = spark.read.schema(docs.schema).option("header", True).csv(out)
     return back.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
@@ -709,9 +714,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     session (the oracle reads the original parquet). Explicit schema on
     read — same no-inference discipline as the CSV path; money re-aggregated
     as fixed-scale DECIMAL so the hash cannot drift."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_orders_jsonl")
     orders = load_table(spark, sf_dir, "orders")
-    orders.write.mode("overwrite").json(out)
+    out = staged(STORAGE_ROOT, "orders_jsonl", sf_dir, lambda p: orders.write.json(p))
     back = spark.read.schema(orders.schema).json(out)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
@@ -739,9 +743,11 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_linestatus, read back with partition pruning intact, aggregated per
     partition value. Proves the engine is storage-format-agnostic at the
     query layer."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_lineitem_orc")
-    li = load_table(spark, sf_dir, "lineitem")
-    li.write.mode("overwrite").partitionBy("l_linestatus").orc(out)
+    out = staged(
+        STORAGE_ROOT, "lineitem_orc", sf_dir,
+        lambda p: load_table(spark, sf_dir, "lineitem")
+        .write.partitionBy("l_linestatus").orc(p),
+    )
     back = spark.read.orc(out)
     return back.groupBy(F.col("l_linestatus").cast("string").alias("l_linestatus")).agg(
         F.count("*").alias("n_items"),
@@ -776,13 +782,7 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, not per row). The executed plan carries ``dynamicpruning#`` on
     the scan (pinned by test_plans.py); the oracle restates the join over
     the unpartitioned view."""
-    out = os.path.join(STORAGE_ROOT, f"{_tag(sf_dir)}_orders_by_year")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        o = load_table(spark, sf_dir, "orders").withColumn(
-            "o_year", F.year(F.to_date("o_orderdate")).cast("int")
-        )
-        o.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    fact = spark.read.parquet(out)
+    fact = spark.read.parquet(_orders_by_year(spark, sf_dir))
     dim = (
         fact.select("o_year").distinct().filter(F.col("o_year") >= 2000)
     )
@@ -799,6 +799,21 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- schema evolution: mergeSchema over heterogeneous snapshots --------------
+
+def evolved_orders(spark: SparkSession, sf_dir: str) -> str:
+    """orders staged as two snapshots with different parquet schemas:
+    ``part=old`` (before 1998) predates the ``o_orderpriority`` column."""
+    def write(out: str) -> None:
+        o = load_table(spark, sf_dir, "orders")
+        o.filter(F.year("o_orderdate") < 1998).select(
+            "o_orderkey", "o_totalprice"
+        ).write.parquet(os.path.join(out, "part=old"))
+        o.filter(F.year("o_orderdate") >= 1998).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        ).write.parquet(os.path.join(out, "part=new"))
+
+    return staged(STORAGE_ROOT, "orders_evolve", sf_dir, write)
+
 
 @query(
     "schema_evolution_read",
@@ -824,19 +839,13 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mergeSchema=true`` — Spark fills the missing column with nulls per
     file, exactly the additive-evolution contract a 100 TB lakehouse table
     relies on (readers must not require a rewrite of old files). The
-    aggregation proves old and new files participate in one plan. Staging
-    is idempotent-overwrite per sf (same harness as S2/S13 above);
+    aggregation proves old and new files participate in one plan. Both are
+    staged once per version of sf_dir's files (``evolved_orders``);
     mergeSchema costs a footer-schema union at planning time only — the
     scan itself stays columnar and prunable."""
-    o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(STORAGE_ROOT, _tag(sf_dir), "evolve")
-    old = o.filter(F.year("o_orderdate") < 1998).select("o_orderkey", "o_totalprice")
-    new = o.filter(F.year("o_orderdate") >= 1998).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        evolved_orders(spark, sf_dir)
     )
-    old.write.mode("overwrite").parquet(os.path.join(out, "part=old"))
-    new.write.mode("overwrite").parquet(os.path.join(out, "part=new"))
-    merged = spark.read.option("mergeSchema", "true").parquet(out)
     return merged.groupBy(
         F.coalesce("o_orderpriority", F.lit("<pre-evolution>")).alias("priority")
     ).agg(

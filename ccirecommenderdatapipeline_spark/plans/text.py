@@ -15,7 +15,9 @@ Engine-portability notes encoded here once:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.text import (
     bucket_pairs,
     MINHASH_K,
@@ -114,8 +116,6 @@ def _dedup_pair_stats_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     => 2*inter >= 1.6*min >= min. So every row either query emits
     survives the prefilter, and each query's own (unchanged) final
     filter re-applies its exact threshold on top."""
-    from ..operators.planmemo import plan_memo
-
     def build() -> DataFrame:
         docs2 = with_recrawl(_docs(spark, sf_dir))
         shingled = _shingled(docs2)
@@ -140,7 +140,9 @@ def _dedup_pair_stats_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.lit(2) * F.col("inter_grams") >= F.least("n1", "n2"))
         )
 
-    return plan_memo(spark, ("dedup_pair_stats", sf_dir), build).persist()
+    return shared_view(
+        spark, "dedup_pair_stats", sf_dir, build, StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 # --- 1. text stats / quality scoring ----------------------------------------
@@ -699,16 +701,14 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, exactly Spark's prescribed pattern for iterative graph
     algorithms; at scale this is one shuffle join per iteration.
 
-    r16: memoized per session (plan_memo) — ``dedup_clusters`` and
+    r16: a shared view (operators/planmemo.py) — ``dedup_clusters`` and
     ``dedup_corpus`` both consume the identical label table, and the
     eager per-round localCheckpoint jobs ran once PER QUERY. The checked
     label partitions are node-scale (graph nodes with >= 1 candidate
     edge) and die with the session; each new bench/oracle process still
     computes from the parquet inputs."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark, ("dedup_cluster_labels", sf_dir),
+    return shared_view(
+        spark, "dedup_cluster_labels", sf_dir,
         lambda: _build_cluster_labels(spark, sf_dir),
     )
 

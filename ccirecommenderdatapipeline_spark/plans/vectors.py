@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.vectors import (
     assign_to_centroids,
     cosine,
@@ -899,13 +900,11 @@ def _cov_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated subtree — the persist extends that across queries).
     Standard clearCache contract (tools/check_oracle.py clears between
     queries; bench.py deliberately keeps it warm). The built lazy plan
-    is memoized per session (operators/planmemo.py); persist re-applies
-    on every return."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark, ("_cov_view", sf_dir), lambda: _build_cov_view(spark, sf_dir)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    is a shared view (operators/planmemo.py)."""
+    return shared_view(
+        spark, "_cov_view", sf_dir, lambda: _build_cov_view(spark, sf_dir),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def _build_cov_view(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,30 +31,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-
-def get_spark(app_name: str = "ccirecommenderdatapipeline-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "ccirecommenderdatapipeline-spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
-    Master resolution: $SPARK_GRAFT_MASTER wins (so `--master yarn`
-    deployments export it and the builder does not silently pin the job
-    to the driver node with a hardcoded local[]), else local[$CPUS].
-    NB getOrCreate(): if a session already exists in this process, its
-    conf wins and this call's app_name/shuffle_partitions are ignored —
+    $SPARK_GRAFT_CPUS (default 32) sizes both ``local[]`` and the shuffle
+    partition count. Master resolution: $SPARK_GRAFT_MASTER wins (so
+    `--master yarn` deployments export it and the builder does not
+    silently pin the job to the driver node with a hardcoded local[]),
+    else local[$CPUS]. NB getOrCreate(): if a session already exists in
+    this process, its conf wins and this call's app_name is ignored —
     Spark semantics, relied on by the shared-session test fixture."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    sp = (
-        DEFAULT_SHUFFLE_PARTITIONS
-        if shuffle_partitions is None
-        else shuffle_partitions
-    )
     spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

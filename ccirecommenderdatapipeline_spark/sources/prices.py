@@ -28,18 +28,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.planmemo import shared_view
 from .tables import load_table
 
 
 def prices_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per (symbol, date): symbol, date, open_pr, high_pr, low_pr,
     close_pr, daily_trade_stock. Mirrors daily_function.py:415-420's canonical
-    rename target. The built lazy plan is memoized per session (~40
+    rename target. The built lazy plan is a shared view (~40
     queries embed this chain; see operators/planmemo.py)."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark, ("prices_view", sf_dir), lambda: _build_prices_view(spark, sf_dir)
+    return shared_view(
+        spark, "prices_view", sf_dir, lambda: _build_prices_view(spark, sf_dir)
     )
 
 

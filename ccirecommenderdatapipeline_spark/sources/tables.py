@@ -12,14 +12,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.planmemo import observe
 from ..schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table of the snapshot at ``sf_dir``. A changed snapshot of a dir
+    this session read before refreshes what Spark cached from it
+    (operators/planmemo.py)."""
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
+    observe(spark, sf_dir)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (vectorized

@@ -22,6 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.planmemo import staged
 from ..operators.windows import bounded_window
 
 GAP_US = 1_800_000_000          # 30-minute session gap
@@ -37,19 +38,17 @@ def exact_value_sum(col: str = "value") -> F.Column:
 
 def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize events (ts converted to micros) as an n-file parquet
-    directory for file-source streaming. Idempotent per sf_dir."""
+    directory for file-source streaming. Staged once per snapshot of
+    sf_dir."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
     # v2: staged files written before the NTZ normalization in load_table
     # carry a TIMESTAMP_NTZ ts that watermarks reject — never reuse them.
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_v2_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+    return staged(
+        STAGE_ROOT, f"events_v2_{n_files}", sf_dir,
+        lambda out: load_table(spark, sf_dir, "events")
+        .repartition(n_files).write.parquet(out),
+    )
 
 
 def events_stream(spark: SparkSession, staged_dir: str, **options) -> DataFrame:
@@ -90,9 +89,7 @@ def tumbling_agg_plan(events: DataFrame) -> DataFrame:
 # partition-count-invariant BY DESIGN and oracle-checked). On a real
 # cluster this is exactly the knob you size per job — results never
 # depend on it.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 class state_sized:
@@ -241,41 +238,42 @@ def stage_price_batches(spark: SparkSession, sf_dir: str, n_batches: int = 3) ->
 
     from ..sources.prices import prices_view
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_price_batches_{n_batches}")
-    if os.path.exists(os.path.join(out, "_STAGED")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    prices = prices_view(spark, sf_dir)
-    dates = [r[0] for r in prices.select("date").distinct().orderBy("date").collect()]
-    step = max(1, len(dates) // n_batches)
-    # Deduplicate bounds: with fewer distinct dates than batches the index
-    # arithmetic repeats a date, which would make an empty [lo, hi) range —
-    # strictly-increasing bounds guarantee every staged batch is non-empty.
-    bounds: list = []
-    for i in range(1, n_batches):
-        b = dates[min(i * step, len(dates) - 1)]
-        if not bounds or b > bounds[-1]:
-            bounds.append(b)
-    bounds.append(None)
-    lo = None
-    for i, hi in enumerate(bounds):
-        part = prices
-        if lo is not None:
-            part = part.filter(F.col("date") >= F.lit(lo))
-        if hi is not None:
-            part = part.filter(F.col("date") < F.lit(hi))
-        tmp = os.path.join(out, f"__tmp_{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        srcs = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        if srcs:  # an empty write may emit no part file; skip, don't crash
-            shutil.move(os.path.join(tmp, srcs[0]), os.path.join(out, f"b{i}.parquet"))
-        shutil.rmtree(tmp)
-        _time.sleep(1.1)  # distinct mtimes -> deterministic file order
-        lo = hi
-    open(os.path.join(out, "_STAGED"), "w").close()
-    return out
+    def write(out: str) -> None:
+        os.makedirs(out)
+        prices = prices_view(spark, sf_dir)
+        dates = [
+            r[0] for r in prices.select("date").distinct().orderBy("date").collect()
+        ]
+        step = max(1, len(dates) // n_batches)
+        # Deduplicate bounds: with fewer distinct dates than batches the
+        # index arithmetic repeats a date, which would make an empty
+        # [lo, hi) range — strictly-increasing bounds guarantee every
+        # staged batch is non-empty.
+        bounds: list = []
+        for i in range(1, n_batches):
+            b = dates[min(i * step, len(dates) - 1)]
+            if not bounds or b > bounds[-1]:
+                bounds.append(b)
+        bounds.append(None)
+        lo = None
+        for i, hi in enumerate(bounds):
+            part = prices
+            if lo is not None:
+                part = part.filter(F.col("date") >= F.lit(lo))
+            if hi is not None:
+                part = part.filter(F.col("date") < F.lit(hi))
+            tmp = os.path.join(out, f"__tmp_{i}")
+            part.coalesce(1).write.parquet(tmp)
+            srcs = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+            if srcs:  # an empty write may emit no part file; skip, don't crash
+                shutil.move(
+                    os.path.join(tmp, srcs[0]), os.path.join(out, f"b{i}.parquet")
+                )
+            shutil.rmtree(tmp)
+            _time.sleep(1.1)  # distinct mtimes -> deterministic file order
+            lo = hi
+
+    return staged(STAGE_ROOT, f"price_batches_{n_batches}", sf_dir, write)
 
 
 def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
@@ -366,13 +364,11 @@ def stage_events_dup_dir(spark: SparkSession, sf_dir: str) -> str:
     re-delivery shape brokers produce) for watermark-dedup streaming."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_dup_v2")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+    def write(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.unionByName(ev).repartition(4).write.mode("overwrite").parquet(out)
-    return out
+        ev.unionByName(ev).repartition(4).write.parquet(out)
+
+    return staged(STAGE_ROOT, "events_dup_v2", sf_dir, write)
 
 
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,16 +694,13 @@ def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     real session ends so APPEND mode emits every finalized session (append
     only ever emits windows below the watermark; without the sentinel the
     tail sessions would stay in state and be dropped at query end).
-    Idempotent per sf_dir."""
+    Staged once per snapshot of sf_dir."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_sess_v2")
-    marker = os.path.join(out, "_staged_ok")
-    if not os.path.exists(marker):
+    def write(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         _assert_sentinel_free(ev)
-        ev.repartition(4).write.mode("overwrite").parquet(out)
+        ev.repartition(4).write.parquet(out)
         max_ts = ev.agg(F.max("ts").alias("m")).head()["m"]
         sentinel = ev.limit(1).select(
             F.lit(-1).cast("long").alias("event_id"),
@@ -718,8 +711,8 @@ def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
             F.lit("{}").alias("props"),
         )
         sentinel.coalesce(1).write.mode("append").parquet(out)
-        open(marker, "w").close()
-    return out
+
+    return staged(STAGE_ROOT, "events_sess_v2", sf_dir, write)
 
 
 def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,21 +755,16 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
     pushes the type filters below the watermark operators and a foreign
     type would never advance them) push the watermark past every real
     purchase so the tail's unmatched rows are evicted and emitted before
-    the query ends. Idempotent per sf_dir."""
+    the query ends. Staged once per snapshot of sf_dir."""
+    import glob as _glob
+    import time as _time
+
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_attrib_v7")
-    marker = os.path.join(out, "_staged_ok")
-    if not os.path.exists(marker):
-        import glob as _glob
-        import time as _time
-
+    def write(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         _assert_sentinel_free(ev)
-        ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.mode(
-            "overwrite"
-        ).parquet(out)
+        ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.parquet(out)
         max_ts = ev.agg(F.max("ts").alias("m")).head()["m"]
 
         def _files():
@@ -817,8 +805,8 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
             os.utime(f, (t0 - 90, t0 - 90))
         for f in s2_files:
             os.utime(f, (t0 - 30, t0 - 30))
-        open(marker, "w").close()
-    return out
+
+    return staged(STAGE_ROOT, "events_attrib_v7", sf_dir, write)
 
 
 def outer_attribution_join_plan(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
@@ -893,17 +881,14 @@ def stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stage_documents_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize documents as an n-file parquet directory for file-source
-    streaming. Idempotent per sf_dir."""
+    streaming. Staged once per snapshot of sf_dir."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_documents_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "documents").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+    return staged(
+        STAGE_ROOT, f"documents_v1_{n_files}", sf_dir,
+        lambda out: load_table(spark, sf_dir, "documents")
+        .repartition(n_files).write.parquet(out),
+    )
 
 
 def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -963,20 +948,13 @@ def stage_brand_purchases_dir(
 ) -> str:
     """Materialize the (brand, dt) purchase-event rows the decayed-
     popularity op weighs — one row per lineitem with its brand and order
-    date — as an n-file parquet dir for file-source streaming. Idempotent
-    per sf_dir."""
+    date — as an n-file parquet dir for file-source streaming. Staged once
+    per snapshot of sf_dir."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_brandpurch_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderdate"
-        )
+    def write(out: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
         p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
         (
             li.join(o, li.l_orderkey == o.o_orderkey)
@@ -986,10 +964,10 @@ def stage_brand_purchases_dir(
                 F.col("o_orderdate").cast("date").alias("dt"),
             )
             .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return staged(STAGE_ROOT, f"brandpurch_v1_{n_files}", sf_dir, write)
 
 
 def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,21 +1140,17 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stage_orders_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize the orders columns the IVM view aggregates as an
-    n-file parquet dir for file-source streaming. Idempotent per sf_dir."""
+    n-file parquet dir for file-source streaming. Staged once per snapshot
+    of sf_dir."""
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_orders_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return out
+    return staged(
+        STAGE_ROOT, f"orders_v1_{n_files}", sf_dir,
+        lambda out: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
+        .repartition(n_files)
+        .write.parquet(out),
+    )
 
 
 def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,8 @@ import os
 import sys
 import zipfile
 
+from ..operators.planmemo import staged
+
 _VENDOR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "vendor",
@@ -33,6 +35,8 @@ _VENDOR = os.path.join(
 )
 # the vendored runtime's __version__ ends with this tag
 _SHIM_TAG = "-ccirecommenderdatapipeline-shim"
+# the worker zip's file name; addPyFile needs the .zip suffix
+_ZIP = "protobuf_shim.zip"
 
 
 # pkgutil-style namespace __init__, generated ONLY into the worker zip:
@@ -50,22 +54,21 @@ _NS_INIT = (
 
 
 def _shim_zip_path() -> str:
-    """Build (once) a zip of the shim with ``google/`` at its root, so the
-    zip path itself can sit on worker sys.path."""
-    out = os.path.join("/tmp", "ccirdp_protobuf_shim_nsv2.zip")
-    if os.path.exists(out):
-        return out
-    tmp = out + f".{os.getpid()}.part"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("google/__init__.py", _NS_INIT)
-        for root, _dirs, files in os.walk(_VENDOR):
-            for fn in sorted(files):
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(root, fn)
-                zf.write(full, os.path.relpath(full, _VENDOR))
-    os.replace(tmp, out)  # atomic vs concurrent builders
-    return out
+    """A zip of the shim with ``google/`` at its root, so the zip path
+    itself can sit on worker sys.path; built once per snapshot of the
+    vendor tree."""
+    def write(out: str) -> None:
+        os.makedirs(out)
+        with zipfile.ZipFile(os.path.join(out, _ZIP), "w", zipfile.ZIP_DEFLATED) as zf:
+            zf.writestr("google/__init__.py", _NS_INIT)
+            for root, _dirs, files in os.walk(_VENDOR):
+                for fn in sorted(files):
+                    if not fn.endswith(".py"):
+                        continue
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, _VENDOR))
+
+    return os.path.join(staged("/tmp", "ccirdp_protobuf_shim", _VENDOR, write), _ZIP)
 
 
 def _imported_runtime():

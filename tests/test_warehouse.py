@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ccirecommenderdatapipeline_spark.plans import QUERIES
+from ccirecommenderdatapipeline_spark.plans import QUERIES, storage
 from ccirecommenderdatapipeline_spark.sources.tables import load_table
 
 from .conftest import SF_SMALL
@@ -213,7 +213,7 @@ def test_schema_evolution_scan_stays_prunable(spark):
     assert sum(r["n_orders"] for r in out.values()) == o.count()
     # pushdown probe on the merged read
     merged = spark.read.option("mergeSchema", "true").parquet(
-        "/tmp/spark_graft_storage/sf0.001/evolve"
+        storage.evolved_orders(spark, SF_SMALL)
     )
     probe = merged.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
     plan = probe._jdf.queryExecution().executedPlan().toString()

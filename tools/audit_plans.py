@@ -288,18 +288,16 @@ def _iter_plans(spark, sf_dir: str, run_streaming: bool, only=None,
     functions themselves run."""
     from pyspark.sql.types import DecimalType
 
-    from ccirecommenderdatapipeline_spark.operators.planmemo import (
-        reset_plan_memos,
-    )
+    from ccirecommenderdatapipeline_spark.operators.planmemo import reset
 
     prefold = _prefold_builders()
     for name, fn in plans.QUERIES.items():
         if only is not None and name not in only:
             continue
         # audit in the pristine fresh-session state so the fingerprint is
-        # order-independent (memo-hit plans share exprIds and skip inner
-        # persist re-application — see reset_plan_memos's docstring)
-        reset_plan_memos(spark)
+        # order-independent (memo-hit plans share exprIds — see reset's
+        # docstring)
+        reset(spark)
         if _is_streaming_wrapped(name) and not run_streaming:
             yield Plan(name, skipped=True)
             continue

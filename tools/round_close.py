@@ -17,10 +17,9 @@ Usage: python tools/round_close.py [--list] [--skip <stage>]...
 Stage names: pytest audit audit_sf0.1 audit_streaming plan_drift
 oracle_sf0.001 oracle_sf0.01 oracle_sf0.1.
 
-The oracle sweeps use --chunk (fresh JVM per slice) because a single
-session dies from JVM decay around query ~75; sf0.1 uses the smaller
-chunk for the same reason at bigger shapes. Timings are not part of a
-close: perfbench/ compares a change with its parent on one host.
+Each oracle sweep runs the whole registry in one session. Timings are
+not part of a close: perfbench/ compares a change with its parent on one
+host.
 """
 
 from __future__ import annotations
@@ -49,13 +48,13 @@ STAGES: list[tuple[str, list[str]]] = [
       "--run-streaming"]),
     ("oracle_sf0.001",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.001",
-      "--chunk", "70"]),
+      ]),
     ("oracle_sf0.01",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.01",
-      "--chunk", "70"]),
+      ]),
     ("oracle_sf0.1",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.1",
-      "--chunk", "60"]),
+      ]),
 ]
 
 
