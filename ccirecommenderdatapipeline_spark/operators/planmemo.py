@@ -100,14 +100,19 @@ def reset(spark: SparkSession) -> None:
 
 def staged(root: str, kind: str, sf_dir: str, write: Callable[[str], None]) -> str:
     """``root/<kind>-<snapshot(sf_dir)>``, created on first request by
-    ``write(path)`` into a temp sibling that is then renamed into place."""
+    ``write(path)`` into a temp sibling that is then renamed into place.
+    The temp sibling is removed whether ``write`` fails or a concurrent
+    writer published first."""
     out = os.path.join(root, f"{kind}-{snapshot(sf_dir)}")
     if not os.path.exists(out):
         tmp = f"{out}.{uuid.uuid4().hex}.part"
         os.makedirs(root, exist_ok=True)
-        write(tmp)
         try:
+            write(tmp)
             os.rename(tmp, out)
-        except OSError:  # a concurrent writer published first
+        except OSError:
+            if not os.path.exists(out):
+                raise
+        finally:
             shutil.rmtree(tmp, ignore_errors=True)
     return out

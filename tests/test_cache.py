@@ -16,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from ccirecommenderdatapipeline_spark import plans
+from ccirecommenderdatapipeline_spark.operators.planmemo import staged
 from ccirecommenderdatapipeline_spark.pipeline import run_daily_batch
 from ccirecommenderdatapipeline_spark.plans import storage
 from ccirecommenderdatapipeline_spark.schemas import TESTDATA_TABLES
@@ -85,6 +86,35 @@ def test_dirs_with_one_basename_stage_their_own_inputs(
     counts = [plans.QUERIES[name](spark, d).count() for d in (a, b)]
     assert counts == [_oracle_count(name, d) for d in (a, b)]
     assert counts[0] != counts[1]
+
+
+def test_roundtrip_output_is_rewritten_on_every_call(spark, tmp_path, own_stage_roots):
+    # the round-trip queries verify the write path, so a second call must
+    # write again rather than read what the first one left
+    d = _copy_sf(tmp_path / "sf0.001")
+
+    def files(out):
+        return {f for _, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")}
+
+    first = files(storage.evolved_orders(spark, d))
+    second = files(storage.evolved_orders(spark, d))
+    assert first and second and not first & second
+
+
+def test_failed_stage_write_leaves_nothing_behind(tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "t.parquet").write_bytes(b"x")
+    root = tmp_path / "stage"
+
+    def write(out):
+        os.makedirs(out)
+        open(os.path.join(out, "part-0"), "w").close()
+        raise RuntimeError("writer failed")
+
+    with pytest.raises(RuntimeError):
+        staged(str(root), "events", str(src), write)
+    assert os.listdir(root) == []
 
 
 @contextlib.contextmanager

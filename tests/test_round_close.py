@@ -70,7 +70,7 @@ def test_unknown_stage_name_is_an_error(monkeypatch):
 
 def test_real_stage_registry_names_real_tools():
     # the committed STAGES must point at files that exist, with the
-    # slowest sweep last
+    # slowest sweep last, chunked (fresh JVM per slice)
     names = [n for n, _ in rc.STAGES]
     assert names[-1] == "oracle_sf0.1"
     assert {"oracle_sf0.001", "oracle_sf0.01", "oracle_sf0.1"} <= set(names)
@@ -78,6 +78,7 @@ def test_real_stage_registry_names_real_tools():
         script = argv[1] if argv[1] != "-m" else None
         if script and script.endswith(".py"):
             assert os.path.exists(os.path.join(ROOT, script)), script
+    assert "--chunk" in dict(rc.STAGES)["oracle_sf0.1"]
 
 
 if __name__ == "__main__":

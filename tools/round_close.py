@@ -17,9 +17,11 @@ Usage: python tools/round_close.py [--list] [--skip <stage>]...
 Stage names: pytest audit audit_sf0.1 audit_streaming plan_drift
 oracle_sf0.001 oracle_sf0.01 oracle_sf0.1.
 
-Each oracle sweep runs the whole registry in one session. Timings are
-not part of a close: perfbench/ compares a change with its parent on one
-host.
+The sf0.001 and sf0.01 oracle sweeps run the whole registry in one
+session (326/326 each). sf0.1 keeps --chunk (fresh JVM per slice): the
+only full pass recorded there was chunked, and one session at sf0.1 has
+not been run to the end. Timings are not part of a close: perfbench/
+compares a change with its parent on one host.
 """
 
 from __future__ import annotations
@@ -46,15 +48,11 @@ STAGES: list[tuple[str, list[str]]] = [
     ("plan_drift",
      [PY, "tools/audit_plans.py", "--diff", "/root/testdata/sf0.01",
       "--run-streaming"]),
-    ("oracle_sf0.001",
-     [PY, "tools/check_oracle.py", "/root/testdata/sf0.001",
-      ]),
-    ("oracle_sf0.01",
-     [PY, "tools/check_oracle.py", "/root/testdata/sf0.01",
-      ]),
+    ("oracle_sf0.001", [PY, "tools/check_oracle.py", "/root/testdata/sf0.001"]),
+    ("oracle_sf0.01", [PY, "tools/check_oracle.py", "/root/testdata/sf0.01"]),
     ("oracle_sf0.1",
      [PY, "tools/check_oracle.py", "/root/testdata/sf0.1",
-      ]),
+      "--chunk", "60"]),
 ]
 
 
