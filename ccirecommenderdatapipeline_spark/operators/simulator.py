@@ -1,6 +1,6 @@
 """The trade simulator — SURVEY.md W6 (forward-window first-match) x J6
-(strategy-grid cross join), the reference's hard core
-(/root/reference/daily_function.py:717-816).
+(strategy-grid cross join) x A1/A2 (strategy aggregation), the reference's
+hard core (daily_function.py:717-816, aggregated at :1047-1071).
 
 Reference semantics preserved exactly:
 - buy signal: strict crossover ``prev open_cci < thr AND open_cci > thr``
@@ -14,30 +14,37 @@ Reference semantics preserved exactly:
   maturity even when the series ends early (:796) — preserved as-is.
 - a buy on the last row (empty forward window) produces no trade (:741-742).
 
-Spark-first plan (SURVEY section 4.2 Plan A, chosen over the range self-join):
-1. one window pass per symbol builds ``future`` = collect_list(struct) over
-   ROWS BETWEEN 1 FOLLOWING AND x_max FOLLOWING — O(x_max) per row, computed
-   in the same sort as the lag/crossover, so ONE shuffle on symbol serves
-   the whole simulator;
-2. crossover filter runs immediately after the window projection, so the
-   dense non-buy rows never leave the stage (the "push the sparse filter
-   below the crossJoin" rewrite, SURVEY section 4.3);
-3. per buy row, first-hit indexes for every target_return and stop_thr are
-   computed ONCE via array HOFs (``array_position`` over a transformed
-   bounded array), then the (holding x return x stop) grid expansion is a
-   broadcast cross join doing pure integer lookups — the 4,860-way blow-up
-   multiplies scalars, not array scans.
+One kernel (SURVEY §4.2 Plan B): a per-symbol ``applyInPandas``. A
+symbol's whole history is one Arrow batch, and ``_build_outcomes`` resolves
+the whole (holding x return x stop x buy event) grid in vectorized numpy —
+crossover, first target/stop hits in the next x_max rows, precedence and
+the sell row. Two entry points read that one routine:
+- ``simulate_trades`` emits one row per (buy event x combo);
+- ``simulate_aggregate`` folds the outcomes to per (symbol x combo)
+  aggregates inside the batch, so the shuffle moves a symbol's ~6k price
+  rows and its aggregate rows, never the trade rows (467M at sf0.1 on the
+  full 4,860-combo grid).
+The DuckDB oracle (plans/simulator.py ``_sim_cte``) re-expresses the same
+semantics independently with list lambdas.
 
-At 100 TB: everything after the single symbol-shuffle is map-local; the grid
-is a broadcast literal; the only later shuffle is the strategy aggregation's
-groupBy. Skewed symbols (long histories) are bounded by x_max-sized state.
+At 100 TB: grouped-map state is one symbol's history — bounded; skew is
+capped by max history length, and the Python stage scales with executors
+like any map stage. The one shuffle is the groupBy on symbol (none on a
+table bucketed by symbol).
+
+cloudpickle rule: every helper the grouped-map closures touch is nested or
+closure-built. An importable module-level function pickles BY REFERENCE,
+which would make every Python worker import this package — and workers
+launched from a foreign cwd (the driver contract) cannot.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import numpy as np
+import pandas as pd
 
-from .literals import literal_table
+from pyspark.sql import DataFrame, Window, functions as F
+
 from ..schemas import (
     GRID_BUY_THRESHOLD,
     GRID_HOLDING_DAYS,
@@ -53,374 +60,386 @@ DEFAULT_GRID = {
     "stop_threshold": GRID_STOP_THRESHOLD,
 }
 
+_INPUT_COLS = ("symbol", "date", "open_pr", "close_pr", "open_cci", "close_cci")
 
-def _first_index(arr: Column, pred) -> Column:
-    """1-based index of the first element satisfying ``pred``; null if none.
-    ``array_position(transform(arr, pred), true)`` stays in Catalyst; Spark
-    returns 0 for not-found, normalized to null (DuckDB's list_position
-    returns NULL directly)."""
-    return F.nullif(F.array_position(F.transform(arr, pred), F.lit(True)), F.lit(0)).cast("int")
+AGG_SCHEMA = (
+    "symbol STRING, condition_holding_days INT, condition_target_return INT, "
+    "condition_buy_cci_threshold DOUBLE, condition_stop_loss_cci_threshold DOUBLE, "
+    "count_buy_date BIGINT, count_reach_target_date BIGINT, "
+    "count_stop_loss_date BIGINT, count_maturity_date BIGINT, "
+    "count_win BIGINT, count_lose BIGINT, "
+    "sum_revenue_per_days_held DOUBLE, sum_days_held BIGINT, count_trades BIGINT, "
+    "total_buy_price DOUBLE, total_sell_price DOUBLE, "
+    "avg_revenue_per_days_held DOUBLE, avg_days_held DOUBLE, "
+    "win_rate DOUBLE, lose_rate DOUBLE, total_revenue DOUBLE, revenue_rate DOUBLE, "
+    "reach_target_date_count_per_buy_date_count DOUBLE, "
+    "stop_loss_date_count_per_buy_date_count DOUBLE, "
+    "maturity_date_count_per_buy_date_count DOUBLE"
+)
+
+# years-mode output: search_years keys the aggregates alongside symbol
+AGG_SCHEMA_YEARS = AGG_SCHEMA.replace(
+    "symbol STRING, ", "symbol STRING, search_years STRING, ", 1
+)
+
+# The trade kernel's Arrow payload: only the sell side, dates as epoch
+# days and the outcome as a code (0 target, 1 stop, 2 maturity). The
+# per-outcome date/price columns, two of every three NULL, are derived in
+# Spark from the code, which keeps them out of the Python->JVM transfer.
+_TRADE_ROW_SCHEMA = (
+    "symbol STRING, buy_day INT, buy_price DOUBLE, "
+    "condition_holding_days INT, condition_target_return INT, "
+    "condition_buy_cci_threshold DOUBLE, condition_stop_loss_cci_threshold DOUBLE, "
+    "sell_day INT, sell_price DOUBLE, days_held INT, outcome INT"
+)
 
 
-def with_search_years(cci: DataFrame, years: list) -> DataFrame:
-    """The reference's search-history depth dimension (daily_function.py:
-    670-682, 704-705): for each depth y the per-symbol CCI frame is filtered
-    to ``date >= max(date) - y years`` (``'all'`` = no filter), and every
-    downstream stage is keyed by the depth. CCI values are computed on the
-    FULL history first and then row-filtered — exactly the reference's
-    update-then-filter order — so indicator values at the window edge still
-    see pre-boundary history, while the crossover lag (computed downstream
-    per (symbol, search_years) partition) restarts inside the slice, nulling
-    the slice's first row like pandas' post-filter iteration does.
+def _schema_cols(schema: str) -> list[str]:
+    return [f.strip().split(" ")[0] for f in schema.split(",")]
 
-    Shape: per-symbol max date is a tiny aggregate broadcast back into the
-    fact side, and the depth table is a broadcast literal — the expansion is
-    map-local; the one real shuffle stays the simulator's downstream
-    (symbol, search_years) window sort. add_months clamps Feb-29 the same
-    way pd.DateOffset(years=...) and DuckDB month intervals do."""
-    spark = cci.sparkSession
-    yrs = literal_table(
-        spark,
-        [(str(y), None if y == "all" else int(y)) for y in years],
-        "search_years STRING, __n_years INT",
-    )
-    maxd = cci.groupBy("symbol").agg(F.max("date").alias("__max_d"))
-    return (
-        cci.join(F.broadcast(maxd), "symbol")
-        .crossJoin(F.broadcast(yrs))
-        .filter(
-            F.col("__n_years").isNull()
-            | (F.col("date") >= F.add_months("__max_d", -12 * F.col("__n_years")))
+
+def _build_unscale_exact():
+    """Factory so ``_unscale_exact``'s qualname is NOT importable (the
+    cloudpickle rule in the module docstring): a closure-built function
+    pickles BY VALUE, shipping the code with the kernel."""
+
+    def _unscale_exact(units, scale: int):
+        """Correctly-rounded ``units / scale`` for exact int64 decimal
+        units.
+
+        ``float64(units) / scale`` rounds once (i.e. is correctly
+        rounded) only while ``|units| < 2**53`` — beyond that the
+        int64→double conversion itself rounds, and the quotient
+        double-rounds (ADVICE r7). Per-symbol unit totals can reach
+        ~1e17 at the stated per-trade bounds, only ~1.5x under 2**53, so
+        the fast path is guarded: any element at or past 2**53 is
+        recomputed through ``Fraction`` (exact rational → one correctly
+        rounded conversion). Keeps the totals bit-identical to the
+        oracle's exact decimal SUM at ANY magnitude, not just under
+        2**53."""
+        arr = np.asarray(units, dtype=np.int64)
+        out = arr.astype(np.float64) / scale
+        big = np.abs(arr) >= 2**53
+        if big.any():
+            from fractions import Fraction
+
+            flat, oflat = arr.ravel(), out.ravel()
+            for i in np.flatnonzero(big.ravel()):
+                oflat[i] = float(Fraction(int(flat[i]), scale))
+            out = oflat.reshape(arr.shape)
+        return float(out) if np.isscalar(units) or arr.shape == () else out
+
+    return _unscale_exact
+
+
+_unscale_exact = _build_unscale_exact()
+
+
+def _build_outcomes(grid: dict):
+    """Factory for the per-symbol outcome routine both kernels share
+    (closure-built, the cloudpickle rule).
+
+    ``outcomes(pdf)`` takes one symbol's ``_INPUT_COLS`` rows and returns
+    ``(symbol, day, open_pr, close_pr, per_b)``: ``day`` is the date-sorted
+    epoch days, and ``per_b`` holds one ``(b, buy_idx, is_t, is_s,
+    sell_idx, held)`` per buy threshold that trades at all — the buy row
+    positions (k,) and, over the (H, R, S, k) grid of (holding, return,
+    stop, buy), the target/stop outcome masks (neither = maturity), the
+    sell row's position and days_held."""
+    holding = [int(x) for x in grid["holding_days"]]
+    returns = np.array([int(r) for r in grid["target_return"]])
+    buy_thr = [float(b) for b in grid["buy_threshold"]]
+    stop_thr = [float(s) for s in grid["stop_threshold"]]
+    x_max = max(holding)
+    x_arr = np.array(holding)[:, None, None, None]           # (H,1,1,1)
+
+    def first_hits(vals, buy_idx, cmp_ge, thresholds):
+        """Per buy index i and threshold t: 1-based position of the first j
+        in (i, i+x_max] with vals[j] >= t (or <= t), 0 if none."""
+        n = len(vals)
+        padded = np.full(n + x_max, np.nan)
+        padded[:n] = vals
+        win = np.lib.stride_tricks.sliding_window_view(padded, x_max)[buy_idx + 1]
+        out = np.zeros((len(buy_idx), len(thresholds)), dtype=np.int64)
+        for k, t in enumerate(thresholds):
+            m = (win >= t[:, None]) if cmp_ge else (win <= t)
+            first = m.argmax(axis=1)
+            out[:, k] = np.where(m.any(axis=1), first + 1, 0)
+        return out
+
+    def outcomes(pdf: pd.DataFrame):
+        day = (
+            pd.to_datetime(pdf["date"]).to_numpy().astype("datetime64[D]").astype("int64")
         )
-        .drop("__max_d", "__n_years")
-    )
+        order = np.argsort(day)
+        day = day[order]
+        open_cci, close_cci, open_pr, close_pr = (
+            pdf[c].to_numpy(dtype=float)[order]
+            for c in ("open_cci", "close_cci", "open_pr", "close_pr")
+        )
+        n = len(pdf)
+        prev = np.concatenate(([np.nan], open_cci[:-1]))
+
+        per_b = []
+        for b in buy_thr:
+            with np.errstate(invalid="ignore"):
+                sig = (prev < b) & (open_cci > b)
+            buy_idx = np.flatnonzero(sig)
+            buy_idx = buy_idx[buy_idx + 1 < n]  # empty forward window -> no trade
+            if len(buy_idx) == 0:
+                continue
+            flen = np.minimum(n - 1 - buy_idx, x_max)
+            targets = open_pr[buy_idx][None, :] * (1 + returns[:, None] / 100.0)
+            t_first = first_hits(close_pr, buy_idx, True, targets)
+            s_first = first_hits(close_cci, buy_idx, False, stop_thr)
+
+            # broadcast the whole (H,R,S,k) grid at once
+            t0 = t_first.T[None, :, None, :]                 # (1,R,1,k)
+            s0 = s_first.T[None, None, :, :]                 # (1,1,S,k)
+            t_hit = np.where((t0 > 0) & (t0 <= x_arr), t0, 0)
+            s_hit = np.where((s0 > 0) & (s0 <= x_arr), s0, 0)
+            is_t = (t_hit > 0) & ((s_hit == 0) | (t_hit < s_hit))
+            is_s = ~is_t & (s_hit > 0)
+            m_pos = np.minimum(x_arr, flen[None, None, None, :])
+            sell_pos = np.where(is_t, t_hit, np.where(is_s, s_hit, m_pos))
+            sell_idx = buy_idx[None, None, None, :] + sell_pos
+            held = np.where(is_t | is_s, day[sell_idx] - day[buy_idx], x_arr)
+            per_b.append((b, buy_idx, is_t, is_s, sell_idx, held))
+        return pdf["symbol"].iloc[0], day, open_pr, close_pr, per_b
+
+    return outcomes
 
 
-def simulate_trades(
-    cci: DataFrame,
-    grid: dict | None = None,
-    extra_keys: tuple[str, ...] = (),
-    years: list | None = None,
-) -> DataFrame:
+def simulate_trades(cci: DataFrame, grid: dict) -> DataFrame:
     """cci (symbol, date, open_pr, close_pr, open_cci, close_cci, ...) ->
-    one row per (buy event x grid combo), TRADE_SCHEMA-shaped. ``extra_keys``
-    (e.g. search_years) join symbol as partition keys for every window and
-    are carried through to the output.
+    one TRADE_SCHEMA row per (buy event x grid combo)."""
+    outcomes = _build_outcomes(grid)
+    # condition values laid out along the (H,R,S,k) grid axes
+    cond_x = np.array(grid["holding_days"], dtype=np.int64).reshape(-1, 1, 1, 1)
+    cond_r = np.array(grid["target_return"], dtype=np.int64).reshape(1, -1, 1, 1)
+    cond_s = np.array(grid["stop_threshold"], dtype=float).reshape(1, 1, -1, 1)
+    cols = _schema_cols(_TRADE_ROW_SCHEMA)
 
-    ``years`` (the reference's search-history depths, daily_function.py:
-    670-682) activates the single-pass depth plan: instead of replaying the
-    window pipeline once per depth over ``with_search_years``-expanded rows
-    (the round-2 shape — k x the collect_list pass for k depths), the
-    simulator runs ONCE on the full history and derives each depth by
-    filtering the sparse buy rows against a broadcast per-(symbol, depth)
-    boundary table. Equivalence to the replay (pinned by
-    tests/test_search_years.py::test_fast_depth_plan_matches_replay):
-    - the depth slice keeps rows ``date >= max(date) - y years``; a sliced
-      lag restarts, so the slice's FIRST row has prev_cci = NULL and can
-      never be a buy -> drop full-history buys at ``buy_date <= first
-      slice date``; every later slice row sees the same prev row as the
-      full history, so its crossover flag is unchanged, and NULL < thr is
-      false-ish in both engines so the slice can't ADD buys;
-    - the forward window only looks toward max(date), entirely inside the
-      slice, so t_idx/s_idx/maturity rows are identical.
-    At 100 TB this turns the depth dimension from a k-x multiplier on the
-    heavy symbol-shuffle into a broadcast-joined filter over buy events."""
-    grid = grid or DEFAULT_GRID
-    x_max = max(grid["holding_days"])
-    if years is not None:
-        # the depth-boundary table (maxd/bounds below) is computed per
-        # symbol only, so a finer grain would get wrong boundaries
-        assert extra_keys == (), "years-mode computes boundaries per symbol"
-    part_cols = ["symbol", *extra_keys]
-    w = Window.partitionBy(*part_cols).orderBy("date")
-    fw = w.rowsBetween(1, x_max)
+    def trade_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+        symbol, day, open_pr, close_pr, per_b = outcomes(pdf)
+        # one flat array per column over every buy threshold's grid, and
+        # one DataFrame per symbol: a frame per threshold plus pd.concat
+        # cost a quarter of the kernel's time on sf0.1 trades_sim
+        parts: dict[str, list] = {c: [] for c in cols[1:]}
+        for b, buy_idx, is_t, is_s, sell_idx, held in per_b:
+            values = {
+                "buy_day": day[buy_idx],
+                "buy_price": open_pr[buy_idx],
+                "condition_holding_days": cond_x,
+                "condition_target_return": cond_r,
+                "condition_buy_cci_threshold": b,
+                "condition_stop_loss_cci_threshold": cond_s,
+                "sell_day": day[sell_idx],
+                "sell_price": close_pr[sell_idx],
+                "days_held": held,
+                "outcome": np.where(is_t, 0, np.where(is_s, 1, 2)),
+            }
+            for c, v in values.items():
+                parts[c].append(np.broadcast_to(v, is_t.shape).ravel())
+        out = pd.DataFrame({c: np.concatenate(v) if v else [] for c, v in parts.items()})
+        out.insert(0, "symbol", symbol)
+        return out
 
-    base = cci.select(
-        *part_cols,
-        "date",
-        "open_pr",
-        "open_cci",
-        F.lag("open_cci", 1).over(w).alias("prev_cci"),
-        F.collect_list(F.struct("date", "close_pr", "close_cci")).over(fw).alias("future"),
+    rows = cci.select(*_INPUT_COLS).groupBy("symbol").applyInPandas(
+        trade_rows, _TRADE_ROW_SCHEMA
     )
+    code = F.col("outcome")
+    sell_date = F.date_from_unix_date("sell_day")
 
-    buy_thr = F.explode(F.array(*[F.lit(float(b)) for b in grid["buy_threshold"]])).alias(
-        "condition_buy_cci_threshold"
-    )
-    buys = (
-        base.select("*", buy_thr)
-        .filter(
-            (F.col("prev_cci") < F.col("condition_buy_cci_threshold"))
-            & (F.col("open_cci") > F.col("condition_buy_cci_threshold"))
-            & (F.size("future") >= 1)
-        )
-        .select(
-            *part_cols,
-            F.col("date").alias("buy_date"),
-            F.col("open_pr").alias("buy_price"),
-            "condition_buy_cci_threshold",
-            "future",
-        )
-    )
+    def on(c: int, col):
+        return F.when(code == c, col)
 
-    # First-hit indexes for every target return / stop threshold, computed
-    # once per buy row over the bounded future array.
-    r_grid = grid["target_return"]
-    s_grid = grid["stop_threshold"]
-
-    # NB: single-parameter closures — a 2-parameter lambda would be treated
-    # by the HOF binder as the (element, index) form.
-    def target_pred(r: int):
-        return lambda f: f["close_pr"] >= F.col("buy_price") * (1 + F.lit(r) / 100.0)
-
-    def stop_pred(s: float):
-        return lambda f: f["close_cci"] <= F.lit(float(s))
-
-    buys = buys.withColumns({
-        "t_idx": F.array(*[_first_index(F.col("future"), target_pred(r)) for r in r_grid]),
-        "s_idx": F.array(*[_first_index(F.col("future"), stop_pred(s)) for s in s_grid]),
-        "flen": F.size("future"),
-    })
-
-    # Pre-extract every sell-row field the grid can reference — the target
-    # row per r, the stop row per s, the maturity row per x — BEFORE the
-    # grid expansion, then drop ``future``. The crossJoin then multiplies
-    # ~|r|+|s|+|x| scalars per buy row instead of materializing the x_max-
-    # struct future array once per combo (measured: carrying the 60-struct
-    # array through the 81-way expansion dominated the whole simulator).
-    # element_at(arr, NULL) is NULL, so missing hits propagate unchanged.
-    def row_at(idx: Column):
-        return F.element_at(F.col("future"), idx)
-
-    x_grid = grid["holding_days"]
-    buys = buys.withColumns({
-        "t_dates": F.transform("t_idx", lambda i: row_at(i)["date"]),
-        "t_prices": F.transform("t_idx", lambda i: row_at(i)["close_pr"]),
-        "s_dates": F.transform("s_idx", lambda i: row_at(i)["date"]),
-        "s_prices": F.transform("s_idx", lambda i: row_at(i)["close_pr"]),
-        "m_dates": F.array(*[row_at(F.least(F.lit(x), F.col("flen")))["date"] for x in x_grid]),
-        "m_prices": F.array(*[row_at(F.least(F.lit(x), F.col("flen")))["close_pr"] for x in x_grid]),
-    }).drop("future")
-
-    if years is not None:
-        # Per-(symbol, depth) slice boundary: first date inside the slice.
-        # |symbols| x |depths| rows — broadcast. Buys are kept for a depth
-        # when they fall strictly after its boundary ("all" keeps every buy:
-        # the full-history lag already nulled the true first row).
-        spark = cci.sparkSession
-        yrs = literal_table(
-            spark,
-            [(str(y), None if y == "all" else int(y)) for y in years],
-            "search_years STRING, __n_years INT",
-        )
-        maxd = cci.groupBy("symbol").agg(F.max("date").alias("__max_d"))
-        bounds = (
-            cci.select("symbol", "date")
-            .join(F.broadcast(maxd), "symbol")
-            .crossJoin(F.broadcast(yrs))
-            .groupBy("symbol", "search_years")
-            .agg(
-                F.min(
-                    F.when(
-                        F.col("__n_years").isNotNull()
-                        & (F.col("date") >= F.add_months("__max_d", -12 * F.col("__n_years"))),
-                        F.col("date"),
-                    )
-                ).alias("__first_d"),
-                F.first(F.col("__n_years").isNull()).alias("__is_all"),
-            )
-        )
-        buys = buys.join(F.broadcast(bounds), "symbol").filter(
-            F.col("__is_all") | (F.col("buy_date") > F.col("__first_d"))
-        ).drop("__first_d", "__is_all")
-        part_cols = ["symbol", "search_years", *extra_keys]
-
-    # Broadcast grid expansion: (holding, return, stop) with the positions of
-    # holding/return/stop inside the precomputed per-buy-row arrays.
-    combos = literal_table(
-        buys.sparkSession,
-        [
-            (x, xi + 1, r, ri + 1, float(s), si + 1)
-            for xi, x in enumerate(x_grid)
-            for ri, r in enumerate(r_grid)
-            for si, s in enumerate(s_grid)
-        ],
-        "condition_holding_days INT, x_pos INT, condition_target_return INT, r_pos INT, "
-        "condition_stop_loss_cci_threshold DOUBLE, s_pos INT",
-    )
-    e = buys.crossJoin(F.broadcast(combos))
-
-    x = F.col("condition_holding_days")
-    t0 = F.element_at("t_idx", F.col("r_pos"))
-    s0 = F.element_at("s_idx", F.col("s_pos"))
-    e = e.withColumns({
-        "t_hit": F.when(t0 <= x, t0),
-        "s_hit": F.when(s0 <= x, s0),
-    })
-    is_target = F.col("t_hit").isNotNull() & (
-        F.col("s_hit").isNull() | (F.col("t_hit") < F.col("s_hit"))
-    )
-    is_stop = ~is_target & F.col("s_hit").isNotNull()
-
-    e = e.withColumns({
-        "trade_result": F.when(is_target, "reach_target")
-        .when(is_stop, "stop_loss")
-        .otherwise("maturity"),
-        "reach_target_date": F.when(is_target, F.element_at("t_dates", F.col("r_pos"))),
-        "reach_target_price": F.when(is_target, F.element_at("t_prices", F.col("r_pos"))),
-        "stop_loss_date": F.when(is_stop, F.element_at("s_dates", F.col("s_pos"))),
-        "stop_loss_price": F.when(is_stop, F.element_at("s_prices", F.col("s_pos"))),
-        "maturity_date": F.when(~is_target & ~is_stop, F.element_at("m_dates", F.col("x_pos"))),
-        "maturity_price": F.when(~is_target & ~is_stop, F.element_at("m_prices", F.col("x_pos"))),
-    })
-    # P11 coalesce (daily_function.py:1019-1027) + days_held (:767, :787, :796)
-    e = e.withColumns({
-        "sell_date": F.coalesce("reach_target_date", "stop_loss_date", "maturity_date"),
-        "sell_price": F.coalesce("reach_target_price", "stop_loss_price", "maturity_price"),
-    })
-    e = e.withColumn(
-        "days_held",
-        F.when(F.col("trade_result") == "maturity", x).otherwise(
-            F.datediff("sell_date", "buy_date")
-        ).cast("int"),
-    )
-    return e.select(
-        *part_cols, "buy_date", "buy_price",
+    return rows.select(
+        "symbol",
+        F.date_from_unix_date("buy_day").alias("buy_date"),
+        "buy_price",
         "condition_holding_days", "condition_target_return",
         "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
-        "reach_target_date", "reach_target_price",
-        "stop_loss_date", "stop_loss_price",
-        "maturity_date", "maturity_price",
-        "sell_date", "sell_price", "days_held", "trade_result",
+        on(0, sell_date).alias("reach_target_date"),
+        on(0, F.col("sell_price")).alias("reach_target_price"),
+        on(1, sell_date).alias("stop_loss_date"),
+        on(1, F.col("sell_price")).alias("stop_loss_price"),
+        on(2, sell_date).alias("maturity_date"),
+        on(2, F.col("sell_price")).alias("maturity_price"),
+        sell_date.alias("sell_date"),
+        "sell_price",
+        "days_held",
+        F.when(code == 0, "reach_target")
+        .when(code == 1, "stop_loss")
+        .otherwise("maturity")
+        .alias("trade_result"),
     )
 
 
-def aggregate_strategies(trades: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """A1/A2 (daily_function.py:1047-1071): per (symbol x condition) outcome
-    aggregation + derived rate measures. ``extra_keys`` (e.g. search_years,
-    daily_function.py:1041-1042) extend the group key.
+def simulate_aggregate(
+    cci: DataFrame, grid: dict | None = None, years: list | None = None
+) -> DataFrame:
+    """cci -> per (symbol x full combo) strategy aggregates (A1/A2,
+    daily_function.py:1047-1071), one Arrow round-trip per symbol.
 
-    Determinism notes vs the reference: rates are emitted as exact per-row
-    divisions of integer/decimal-exact aggregates instead of pandas
-    ``round(x, 2)`` (half-boundary rounding is engine-dependent; the values
-    differ from the reference only in the 3rd+ decimal). total_revenue is the
-    unrounded difference of the rounded totals (reference rounds to 0
-    decimals, daily_function.py:1069)."""
-    gcols = [
-        "symbol",
-        *extra_keys,
-        "condition_holding_days",
-        "condition_target_return",
-        "condition_buy_cci_threshold",
-        "condition_stop_loss_cci_threshold",
-    ]
-    win = F.col("sell_price") > F.col("buy_price")
-    lose = F.col("sell_price") < F.col("buy_price")
-    # revenue-per-day quantized to 1e-8 by EXACT INTEGER math (r9): the
-    # price diff is exactly 4 decimals, so D = round(diff*1e4) is an
-    # exact int64 and the unit is floor(D*1e4/days + 0.5) — IEEE-safe
-    # (|D*1e4| <= ~1e13, division error < 1e-3 vs >= 1/(2*days) = 8e-3
-    # boundary distance; exact midpoints are dyadic rationals the
-    # division returns exactly, ties rounding toward +inf in every
-    # engine's floor). The previous form rounded the DOUBLE quotient to
-    # 8 decimals — Java BigDecimal(shortest-repr) HALF_UP vs DuckDB's
-    # multiply-based ROUND disagree by one 1e-8 unit on knife-edge
-    # quotients (one trade at sf0.1, symbol 753, flipped the whole
-    # strategy_agg/best_* family; caught by the r9 sf0.1 sweep).
-    rev_diff_units = F.round(
-        (F.col("sell_price") - F.col("buy_price")) * 1e4
-    ).cast("long")
-    rpd_unit = F.floor(
-        rev_diff_units * F.lit(10000) / F.col("days_held") + F.lit(0.5)
-    ).cast("long")
+    ``years`` (the reference's search-history depths, daily_function.py:
+    670-682) adds the (symbol, search_years) grain with no extra pass. A
+    depth y keeps the rows ``date >= max(date) - y years``
+    (pd.DateOffset == add_months month-clamp semantics), and a sliced lag
+    restarts, so the slice's first row can never buy; every later slice row
+    sees the same previous row as the full history, and the forward window
+    only looks toward max(date), inside the slice. So a depth's trades are
+    exactly the full history's trades whose buy day is strictly after the
+    slice's first day, and each depth is a masked re-sum of the per-buy
+    outcome grid computed once per symbol.
 
-    # Scale note: a naive 4x countDistinct here makes Spark expand every
-    # trade row 5x before the shuffle (billions of rows at the full 4,860
-    # grid), and the round-1 alternative (3 null-filtered collect_sets)
-    # forces ObjectHashAggregate — no Tungsten codegen, measured 2.5x
-    # super-linear at 5x data and 12.9s at sf0.1. The scale-safe shape is a
-    # TWO-PHASE codegen hash agg:
-    #   phase 1 groups at (group keys, trade_result, sell_date) — every
-    #     measure is decomposable (sums/counts), and the grain rows ARE the
-    #     distinct (outcome, sell_date) pairs, so the pandas .nunique
-    #     semantics (reference daily_function.py:1047-1061) fall out as a
-    #     plain row count in phase 2. sell_date is never null (the simulator
-    #     coalesces target/stop/maturity, and flen >= 1), matching
-    #     COUNT(DISTINCT ...)'s null-dropping. Map-side partial aggregation
-    #     collapses the 4,860-way grid expansion before the shuffle.
-    #   phase 2 re-groups the tiny grain table (<= trades' distinct
-    #     sell-date count per combo) on the group keys alone.
-    # Both phases are plain HashAggregate inside WholeStageCodegen; buy_date
-    # is unique within a group (one trade per buy event per combo), so
-    # count_buy_date == sum of grain counts.
-    tag = F.col("trade_result")
-    grain = trades.groupBy(*gcols, "trade_result", "sell_date").agg(
-        F.count("*").alias("__n"),
-        F.sum(win.cast("long")).alias("__n_win"),
-        F.sum(lose.cast("long")).alias("__n_lose"),
-        # money/ratio sums fold EXACT scaled-int64 units (buy=open_pr is
-        # 4-dec exact, sell=close_pr 2-dec exact, rev_per_day rounded at 8
-        # — sources/prices.py contract; the per-row round only strips <<1
-        # ulp of double representation error). Integer addition is
-        # associative, so the totals are ORDER-INDEPENDENT and
-        # bit-identical across the two-phase fold here, the fused Arrow
-        # kernel's int64 sums, and the oracle's decimal SUM — equality no
-        # longer depends on a post-sum ROUND absorbing double-summation
-        # order drift (round-7 hardening, ADVICE r5/r6). Long sums keep
-        # both hash-agg phases in Tungsten codegen (a decimal(38,8)
-        # accumulator measured +2.2 s on strategy_agg at sf0.1); the
-        # int64 budget is ~9.2e18 vs ~1e17 worst-case unit totals.
-        F.sum(rpd_unit).alias("__sum_rpd"),
-        F.sum("days_held").alias("__sum_days"),
-        F.sum(F.round(F.col("buy_price") * 1e4, 0).cast("long")).alias("__sum_buy"),
-        F.sum(F.round(F.col("sell_price") * 1e2, 0).cast("long")).alias("__sum_sell"),
+    Determinism: rates are exact per-row divisions of integer aggregates
+    instead of pandas ``round(x, 2)``; money/ratio totals fold exact scaled
+    int64 units (order-independent), bit-identical to the oracle's decimal
+    SUM."""
+    grid = grid or DEFAULT_GRID
+    outcomes = _build_outcomes(grid)
+    depths = (
+        None
+        if years is None
+        else [(str(y), None if y == "all" else int(y)) for y in years]
     )
+    schema = AGG_SCHEMA if depths is None else AGG_SCHEMA_YEARS
+    holding = [int(x) for x in grid["holding_days"]]
+    returns = [int(r) for r in grid["target_return"]]
+    stop_thr = [float(s) for s in grid["stop_threshold"]]
 
-    def n_outcome_dates(t: str) -> Column:
-        return F.sum((tag == t).cast("long"))
+    H, R, S = len(holding), len(returns), len(stop_thr)
+    n_combos = H * R * S
+    combo_idx = np.arange(n_combos)
+    # condition columns in (x, r, s) nested order, repeated per buy threshold
+    cond_x = np.repeat(holding, R * S)
+    cond_r = np.tile(np.repeat(returns, S), H)
+    cond_s = np.tile(stop_thr, H * R)
+    cols = _schema_cols(schema)
 
-    agged = grain.groupBy(*gcols).agg(
-        F.sum("__n").alias("count_buy_date"),
-        n_outcome_dates("reach_target").alias("count_reach_target_date"),
-        n_outcome_dates("stop_loss").alias("count_stop_loss_date"),
-        n_outcome_dates("maturity").alias("count_maturity_date"),
-        F.sum("__n_win").alias("count_win"),
-        F.sum("__n_lose").alias("count_lose"),
-        # unscale through DECIMAL division, not a double divide: the unit
-        # total can exceed 2^53, where fl(S)/1e8 double-rounds; the decimal
-        # quotient is exact (scale >= the unit scale) and its double cast
-        # is correctly rounded — bit-equal to the oracle's decimal route.
-        # The dividend is cast to decimal(28,0), NOT (38,0): at p1=38 the
-        # quotient precision overflows 38 and Spark's precision-loss rule
-        # truncates the scale to 6 — silently rounding the 8-dec ratio
-        # sum. p1=28 keeps the full max(6, p2+1)-digit scale exactly.
-        (F.sum("__sum_rpd").cast("decimal(28,0)")
-         / F.lit(100_000_000).cast("decimal(9,0)"))
-        .cast("double").alias("sum_revenue_per_days_held"),
-        F.sum("__sum_days").cast("long").alias("sum_days_held"),
-        F.sum("__n").alias("count_trades"),
-        (F.sum("__sum_buy").cast("decimal(28,0)")
-         / F.lit(10_000).cast("decimal(5,0)"))
-        .cast("double").alias("total_buy_price"),
-        (F.sum("__sum_sell").cast("decimal(28,0)")
-         / F.lit(100).cast("decimal(3,0)"))
-        .cast("double").alias("total_sell_price"),
-    )
-    return agged.withColumns({
-        "avg_revenue_per_days_held": F.col("sum_revenue_per_days_held") / F.col("count_trades"),
-        "avg_days_held": F.col("sum_days_held") / F.col("count_trades"),
-        "win_rate": F.lit(100.0) * F.col("count_win") / F.col("count_buy_date"),
-        "lose_rate": F.lit(100.0) * F.col("count_lose") / F.col("count_buy_date"),
-        "total_revenue": F.col("total_sell_price") - F.col("total_buy_price"),
-        "revenue_rate": (F.col("total_sell_price") - F.col("total_buy_price"))
-        / F.col("total_buy_price") * 100.0,
-        "reach_target_date_count_per_buy_date_count": F.lit(100.0)
-        * F.col("count_reach_target_date") / F.col("count_buy_date"),
-        "stop_loss_date_count_per_buy_date_count": F.lit(100.0)
-        * F.col("count_stop_loss_date") / F.col("count_buy_date"),
-        "maturity_date_count_per_buy_date_count": F.lit(100.0)
-        * F.col("count_maturity_date") / F.col("count_buy_date"),
-    })
+    def per_symbol(pdf: pd.DataFrame) -> pd.DataFrame:
+        symbol, day, open_pr, close_pr, per_b = outcomes(pdf)
+        n = len(day)
+
+        # Per-depth slice boundary: first in-slice day (epoch days). A buy
+        # survives depth y iff buy day > first-slice day. None = keep all.
+        if depths is None:
+            depth_bounds: list[tuple] = [(None, None)]
+        else:
+            max_ts = pd.Timestamp(np.datetime64(int(day[-1]), "D"))
+            depth_bounds = []
+            for label, ny in depths:
+                if ny is None:
+                    depth_bounds.append((label, None))
+                else:
+                    bday = int(
+                        (max_ts - pd.DateOffset(months=12 * ny))
+                        .to_datetime64()
+                        .astype("datetime64[D]")
+                        .astype("int64")
+                    )
+                    depth_bounds.append((label, int(day[day >= bday].min())))
+
+        frames: list[pd.DataFrame] = []
+        for b, buy_idx, is_t, is_s, sell_idx, days in per_b:
+            k = len(buy_idx)
+            bp = open_pr[buy_idx]
+            sell_price = close_pr[sell_idx]
+            is_m = ~is_t & ~is_s
+            # Scale the per-trade money/ratio grids to exact int64 ONCE per
+            # buy threshold (outside the depth loop): buy=4-dec, sell=2-dec —
+            # the np.round only strips <<1 ulp of double representation
+            # error, so these are the exact decimal integers.
+            bp_units = np.round(bp * 1e4).astype(np.int64)
+            sp_units = np.round(sell_price * 1e2).astype(np.int64)
+            # revenue-per-day 1e-8 units by EXACT INTEGER math (r9, the
+            # oracle's rule): the 4dp price diff scaled to int64,
+            # floor(D*1e4/days + 0.5). np.round of the double quotient used
+            # banker's rounding — a third tie convention next to Java
+            # HALF_UP and DuckDB's half-away — and knife-edge quotients
+            # flipped one unit.
+            d_units = np.round((sell_price - bp) * 1e4).astype(np.int64)
+            rpd_units = np.floor(
+                d_units * 10000 / days + 0.5
+            ).astype(np.int64)
+
+            bdays = day[buy_idx]
+            for label, fsd in depth_bounds:
+                sel = np.ones(k, dtype=bool) if fsd is None else (bdays > fsd)
+                k_d = int(sel.sum())
+                if k_d == 0:
+                    continue  # no group for zero-buy depths, as in the oracle
+                bp_d = bp[sel]
+                sp = sell_price[..., sel]
+                ap = sell_idx[..., sel]
+                m_t, m_s = is_t[..., sel], is_s[..., sel]
+                m_m = is_m[..., sel]
+
+                # Money/ratio totals fold the pre-scaled int64 grids —
+                # integer addition is order-independent, so the totals are
+                # bit-identical to the oracle's decimal SUM, with no
+                # pairwise-vs-sequential drift for a post-sum ROUND to
+                # absorb (round-7 hardening, ADVICE r5/r6). Unscaling goes
+                # through _unscale_exact so the int→double step stays
+                # correctly rounded even past 2**53 unit totals.
+                tb = _unscale_exact(int(bp_units[sel].sum()), 10**4)
+                ts = _unscale_exact(
+                    sp_units[..., sel].sum(axis=3), 10**2
+                ).reshape(-1)
+                cw = (sp > bp_d).sum(axis=3).reshape(-1)
+                cl = (sp < bp_d).sum(axis=3).reshape(-1)
+                srpd = _unscale_exact(
+                    rpd_units[..., sel].sum(axis=3), 10**8
+                ).reshape(-1)
+                sdh = days[..., sel].sum(axis=3).reshape(-1)
+
+                # distinct sell-date counts per (combo, outcome): one
+                # np.unique per outcome over (combo * n + date_pos) codes
+                def distinct_counts(mask: np.ndarray) -> np.ndarray:
+                    codes = (combo_idx.reshape(H, R, S, 1) * n + ap)[mask]
+                    return np.bincount(np.unique(codes) // n, minlength=n_combos)
+
+                c_t = distinct_counts(m_t)
+                c_s = distinct_counts(m_s)
+                c_m = distinct_counts(m_m)
+
+                out_cols = {
+                    "symbol": symbol,
+                    "condition_holding_days": cond_x,
+                    "condition_target_return": cond_r,
+                    "condition_buy_cci_threshold": b,
+                    "condition_stop_loss_cci_threshold": cond_s,
+                    "count_buy_date": k_d,
+                    "count_reach_target_date": c_t,
+                    "count_stop_loss_date": c_s,
+                    "count_maturity_date": c_m,
+                    "count_win": cw,
+                    "count_lose": cl,
+                    "sum_revenue_per_days_held": srpd,
+                    "sum_days_held": sdh,
+                    "count_trades": k_d,
+                    "total_buy_price": tb,
+                    "total_sell_price": ts,
+                    "avg_revenue_per_days_held": srpd / k_d,
+                    "avg_days_held": sdh / k_d,
+                    "win_rate": 100.0 * cw / k_d,
+                    "lose_rate": 100.0 * cl / k_d,
+                    "total_revenue": ts - tb,
+                    "revenue_rate": (ts - tb) / tb * 100.0,
+                    "reach_target_date_count_per_buy_date_count": 100.0 * c_t / k_d,
+                    "stop_loss_date_count_per_buy_date_count": 100.0 * c_s / k_d,
+                    "maturity_date_count_per_buy_date_count": 100.0 * c_m / k_d,
+                }
+                if label is not None:
+                    out_cols["search_years"] = label
+                frames.append(pd.DataFrame(out_cols))
+        if not frames:
+            return pd.DataFrame({c: [] for c in cols})
+        return pd.concat(frames, ignore_index=True)[cols]
+
+    src = cci.select(*_INPUT_COLS)
+    return src.groupBy("symbol").applyInPandas(per_symbol, schema)
 
 
 def best_by(agged: DataFrame, metric: str, extra_keys: tuple[str, ...] = ()) -> DataFrame:

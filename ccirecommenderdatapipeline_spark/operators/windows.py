@@ -10,11 +10,11 @@ per symbol (/root/reference/daily_function.py:584-595):
 
 Spark-first design:
 - W1 (SMA) is a plain ``F.avg`` over a rows-between frame — whole-stage codegen.
-- W2 (MAD) has no builtin: Plan A (here) is ``collect_list`` over the same
-  frame + the ``F.aggregate`` higher-order function. This stays entirely in
+- W2 (MAD) has no builtin: it is ``collect_list`` over the same frame +
+  the ``F.aggregate`` higher-order function. This stays entirely in
   Catalyst expressions (no Python boundary) and the list is bounded at n=20
-  elements, so memory per row is constant. Plan B (``applyInPandas`` per
-  symbol, operators/simulator.py keeps the pattern) is the correctness oracle.
+  elements, so memory per row is constant. The references are the DuckDB
+  oracle and a pandas ``rolling`` reimplementation (tests/test_cci.py).
 - pandas ``rolling(n)`` emits NaN for the first n-1 rows; we emit NULL when the
   frame holds fewer than n rows (same semantics, SURVEY section 4.2).
 - Scale: one shuffle on ``symbol`` serves every window here; with the prices

@@ -8,6 +8,9 @@ contents.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.broker import register
@@ -15,6 +18,19 @@ from .registry import query
 
 N_SYMBOLS = 500
 N_ACCOUNTS = 3
+
+# Scratch dirs of the streaming drain and the ledger round-trip: one fixed
+# dir per kind, emptied when the query is built. Each call must start from
+# an empty checkpoint/ledger, and the returned DataFrame reads its dir
+# lazily, so a call's dir lives until the next call of the same query.
+SCRATCH_ROOT = "/tmp/spark_graft_broker"
+
+
+def _fresh_dir(kind: str) -> str:
+    path = os.path.join(SCRATCH_ROOT, kind)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 @query(
@@ -133,13 +149,11 @@ def q_stream_execution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fixed ~1.4 s cost, so run count — not row count — dominates at
     fixture scale; at production scale the page size is the API's, and
     the same short-page predicate terminates the drain loop."""
-    import tempfile
-
     from ..sources.execution_feed import register as register_feed
 
     register_feed(spark)
-    checkpoint = tempfile.mkdtemp(prefix="exec_feed_ckpt_")
-    staging = tempfile.mkdtemp(prefix="exec_feed_stage_")
+    checkpoint = _fresh_dir("exec_feed_ckpt")
+    staging = _fresh_dir("exec_feed_stage")
     page = 373
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
@@ -197,8 +211,6 @@ def q_order_ledger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the write path (partitioned write + commit protocol + codec)
     loses and invents nothing. Doubles survive the JSON hop exactly
     (shortest-repr round-trip)."""
-    import tempfile
-
     from ..sources.ledger import read_ledger, register as register_sink
 
     register(spark)
@@ -218,7 +230,7 @@ def q_order_ledger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("hold_qty").alias("order_qty"),
         F.col("current_price").alias("limit_price"),
     )
-    path = tempfile.mkdtemp(prefix="order_ledger_")
+    path = _fresh_dir("order_ledger")
     orders.write.format("order_ledger").option("path", path).mode("append").save()
     return read_ledger(
         spark,

@@ -11,13 +11,13 @@ config; daily_function.py:1743-1744, 1901-1908).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.windows import bounded_window
-
 from ..operators.literals import literal_table
-from ..operators.simulator import best_by, simulate_trades
-from ..operators.windows import latest_rows
+from ..operators.simulator import best_by
+from ..operators.windows import bounded_window, latest_rows, symbol_date_window
 from ..schemas import FEE_RATE, TAX_RATE
 from ..sources.tables import load_table
 from .cci import cci_view
@@ -240,17 +240,41 @@ def q_sell_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     there are percent units — Spark ``bround`` == Python/DuckDB banker's
     rounding) and the target comparison is strict ``>`` (:1793); decision
     precedence maturity -> target -> stop-loss (:1786-1797) as a when-chain.
-    Positions here = the simulator's buy events on the reduced grid."""
+    Positions here = the simulator's buy events on the reduced grid, which
+    read no trade outcome: a row is a buy when any buy threshold crosses
+    (the simulator's strict crossover) and it is not the symbol's last row
+    (a trade needs a forward window), crossed with the broadcast
+    (holding, return, stop) combos."""
     cci = cci_view(spark, sf_dir)
-    positions = (
-        simulate_trades(cci, SIM_GRID)
-        .select(
-            "symbol", "buy_date", "buy_price",
-            "condition_holding_days", "condition_target_return",
-            "condition_stop_loss_cci_threshold",
+    w = symbol_date_window()
+    prev = F.lag("open_cci").over(w)
+    crosses = [
+        (prev < float(b)) & (F.col("open_cci") > float(b))
+        for b in SIM_GRID["buy_threshold"]
+    ]
+    is_buy = reduce(lambda a, c: a | c, crosses) & F.lead("date").over(w).isNotNull()
+    buys = (
+        cci.select(
+            "symbol",
+            F.col("date").alias("buy_date"),
+            F.col("open_pr").alias("buy_price"),
+            is_buy.alias("__buy"),
         )
-        .distinct()
+        .filter("__buy")
+        .drop("__buy")
     )
+    combos = literal_table(
+        spark,
+        [
+            (x, r, float(s))
+            for x in SIM_GRID["holding_days"]
+            for r in SIM_GRID["target_return"]
+            for s in SIM_GRID["stop_threshold"]
+        ],
+        "condition_holding_days INT, condition_target_return INT, "
+        "condition_stop_loss_cci_threshold DOUBLE",
+    )
+    positions = buys.crossJoin(F.broadcast(combos))
     latest = _latest_wide(cci).select(
         "symbol", "last_date", "last_close_pr", "last_close_cci"
     )

@@ -1,10 +1,12 @@
 """Driver queries for the trade simulator + strategy selection (SURVEY.md
 W6/J6/A1/A2/A7; reference daily_function.py:686-1100).
 
-The DuckDB oracles are generated from the same grid constants as the Spark
-plan, re-expressing the forward-window first-match with list lambdas
-(list_transform + list_position) — structurally the same Plan A, so both
-engines do identical IEEE arithmetic and results hash-match exactly.
+Every query here reads the one simulator kernel (operators/simulator.py):
+``simulate_trades`` for trade rows, ``simulate_aggregate`` for the
+aggregates. The DuckDB oracles are generated from the same grid constants
+and re-express the forward-window first-match independently, as SQL
+windows plus list lambdas (list_transform + list_position); the money and
+ratio totals are exact on both sides, so results hash-match exactly.
 
 Grids are reduced for the oracle gate (the driver collects + hashes rows;
 the full 4,860-combo grid yields tens of millions of trade rows at sf0.01 —
@@ -18,8 +20,9 @@ from pyspark.storagelevel import StorageLevel
 
 from ..operators.planmemo import shared_view
 from ..operators.simulator import (
-    aggregate_strategies,
+    DEFAULT_GRID,
     best_by,
+    simulate_aggregate,
     simulate_trades,
 )
 from .cci import CCI_ORACLE_BODY, cci_view
@@ -49,23 +52,14 @@ def agged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is tiny (|symbols| x |grid| rows), so the cache cost is
     negligible at any scale.
 
-    PLAN CHOICE (round 5, same as ``agged_years_view``): the fused Arrow
-    kernel produces the aggregate directly — consumers only ever read the
-    aggregate, so the heavy Plan A trade materialization is wasted work
-    here. Plan A (windowed sim + two-phase agg) remains the
-    Catalyst-pinned path via ``trades_sim`` and ``best_return_depth3``;
-    every consumer's DuckDB oracle still replays Plan A, so the
-    equivalence is re-proven by the driver gate on every run.
-
-    r15 optimization: BEST_YEARS includes "all", whose per-symbol slice
-    is the whole history — the fused kernel's "all" depth runs the
-    identical code path (fsd None -> select-all mask) as the years=None
-    build, so this view is EXACTLY the search_years='all' slice of
-    ``agged_years_view``. Deriving it that way means ONE fused
-    simulate-aggregate pass serves both persisted views instead of two
-    (verified bit-exact by pandas frame equality and the consumer
-    oracles; pinned by tests/test_search_years.py::
-    test_agged_view_is_years_all_slice)."""
+    BEST_YEARS includes "all", whose per-symbol slice is the whole
+    history — the kernel's "all" depth runs the identical code path
+    (fsd None -> select-all mask) as the years=None build, so this view is
+    EXACTLY the search_years='all' slice of ``agged_years_view``. Deriving
+    it that way means ONE simulate-aggregate pass serves both persisted
+    views instead of two (pinned by tests/test_search_years.py::
+    test_agged_view_is_years_all_slice); every consumer's DuckDB oracle
+    replays the simulation independently."""
     return shared_view(
         spark, "agged_view", sf_dir,
         lambda: agged_years_view(spark, sf_dir)
@@ -272,17 +266,8 @@ def q_trades_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH " + _sim_cte(AGG_GRID) + AGG_SQL + "SELECT * FROM rates",
 )
 def q_strategy_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/A2: per (symbol x condition) outcome aggregation (3^4 grid).
-
-    r15 optimization: serves the shared fused aggregate (``agged_view``)
-    instead of re-running Plan A's windowed sim + ObjectHashAggregate —
-    the same replan every agged consumer got in round 5 (Plan B beat
-    Plan A 87 s vs 181 s at 25x data on 16x more combos; the collect_set
-    distinct-date buffers cannot codegen). Values are bit-identical
-    (integer-unit folds on both paths; pinned by tests/test_simulator.py
-    grid equality and re-proven against the Plan-A-replay DuckDB oracle
-    by the driver gate on every run). Plan A stays Catalyst-exercised by
-    ``trades_sim`` and ``best_return_depth3``."""
+    """A1/A2: per (symbol x condition) outcome aggregation (3^4 grid),
+    served by the shared kernel aggregate (``agged_view``)."""
     return agged_view(spark, sf_dir)
 
 
@@ -291,38 +276,33 @@ def agged_years_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     best_* queries (persisted lazily, same plan-matched caching rationale as
     ``agged_view``). Output grain: (symbol, search_years, grid combo).
 
-    PLAN CHOICE (round 5): runs the fused Arrow Plan B
-    (``simulate_aggregate_pandas(years=...)``) — at 25x data Plan A's
-    windowed sim + ObjectHashAggregate was the pipeline's heaviest stage
-    (181 s vs the fused full-grid's 87 s covering 16x more combos), so the
-    depth grain now rides the same fused kernel: the per-buy outcome grid
-    is computed once per symbol and each depth is a masked re-sum inside
-    the same Arrow batch. Equivalence to Plan A's single-pass depth plan is
-    pinned exactly (tests/test_search_years.py::
-    test_fused_years_matches_plan_a); the DuckDB oracle keeps the per-depth
-    replay form, so the driver gate re-proves the semantics on every run.
-    Plan A (``simulate_trades(years=...)`` -> ``aggregate_strategies``)
-    remains the Catalyst path, exercised by best_return_depth3."""
-    from ..operators.simulator_pandas import simulate_aggregate_pandas
-
+    ``simulate_aggregate(years=...)`` computes the per-buy outcome grid
+    once per symbol, and each depth is a masked re-sum inside the same
+    Arrow batch; the DuckDB oracle replays the simulation once per depth
+    slice, so the oracle gate re-proves the depth semantics."""
     return shared_view(
         spark, "agged_years_view", sf_dir,
-        lambda: simulate_aggregate_pandas(
+        lambda: simulate_aggregate(
             cci_view(spark, sf_dir), AGG_GRID, years=BEST_YEARS
         ),
         StorageLevel.MEMORY_AND_DISK,
     )
 
 
+_BEST_YEARS_COLS = (
+    "symbol", "search_years",
+    "condition_holding_days", "condition_target_return",
+    "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
+    "count_buy_date", "count_win", "count_lose", "avg_days_held",
+    "win_rate", "revenue_rate", "avg_revenue_per_days_held", "total_revenue",
+)
+
+
 def _best_query(metric: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         agged = agged_years_view(spark, sf_dir)
         return best_by(agged, metric, extra_keys=("search_years",)).select(
-            "symbol", "search_years",
-            "condition_holding_days", "condition_target_return",
-            "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
-            "count_buy_date", "count_win", "count_lose", "avg_days_held",
-            "win_rate", "revenue_rate", "avg_revenue_per_days_held", "total_revenue",
+            *_BEST_YEARS_COLS
         )
 
     fn.__doc__ = (
@@ -358,26 +338,16 @@ DEPTH3_YEARS = ["1", "3", "all"]
     + (_best_cte(YEARS_KEYS) + "SELECT * FROM best").format(metric="revenue_rate"),
 )
 def q_best_return_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 at a THIRD search depth (1y / 3y / all): pins the single-pass
-    broadcast-boundary depth plan against the oracle's per-depth replay at
-    a depth that is neither the trivial slice nor the full history —
-    the 3y boundary lands mid-fixture, so off-by-one boundary bugs
-    (inclusive vs exclusive first-slice-date) would surface here. Reduced
-    2x2x2x2 grid keeps the three-way oracle replay cheap."""
-    agged = aggregate_strategies(
-        simulate_trades(cci_view(spark, sf_dir), SIM_GRID, years=DEPTH3_YEARS),
-        extra_keys=("search_years",),
-    )
+    """A7 at a THIRD search depth (1y / 3y / all): pins the kernel's
+    masked depth re-sums against the oracle's per-depth replay at a depth
+    that is neither the trivial slice nor the full history — the 3y
+    boundary lands mid-fixture, so off-by-one boundary bugs (inclusive vs
+    exclusive first-slice-date) would surface here. Reduced 2x2x2x2 grid
+    keeps the three-way oracle replay cheap."""
+    agged = simulate_aggregate(cci_view(spark, sf_dir), SIM_GRID, years=DEPTH3_YEARS)
     return best_by(agged, "revenue_rate", extra_keys=("search_years",)).select(
-        "symbol", "search_years",
-        "condition_holding_days", "condition_target_return",
-        "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
-        "count_buy_date", "count_win", "count_lose", "avg_days_held",
-        "win_rate", "revenue_rate", "avg_revenue_per_days_held", "total_revenue",
+        *_BEST_YEARS_COLS
     )
-
-
-from ..operators.simulator import DEFAULT_GRID
 
 _FULL_BEST_COLS = (
     "symbol, condition_holding_days, condition_target_return, "
@@ -397,18 +367,13 @@ _FULL_BEST_COLS = (
 )
 def q_best_return_full_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full workload (app.py:41-44): 6x10x9x9 = 4,860 combos
-    per symbol — 467M logical trades at sf0.1, aggregated to one best
-    strategy per symbol. Runs SURVEY §4.2's Plan B (fused per-symbol
-    applyInPandas, operators/simulator_pandas.py): benchmarked 10s vs Plan
-    A's 49s at sf0.1 — Plan A's distinct-date collect_sets are an
-    ObjectHashAggregate that dominates at the full grid. The DuckDB oracle
-    replays the FULL 4,860-combo grid through the same CTE pipeline the
-    reduced-grid queries use (~19 s at sf0.01) — so the flagship's Plan B
-    fused-pandas path is itself hash-checked against an independent engine,
-    not just pinned equal to Plan A by tests."""
-    from ..operators.simulator_pandas import simulate_aggregate_pandas
-
-    agged = simulate_aggregate_pandas(cci_view(spark, sf_dir), None)
+    per symbol — 467M logical trades at sf0.1, aggregated inside the
+    kernel's per-symbol batches (no trade row is materialized) to one best
+    strategy per symbol. The DuckDB oracle replays the FULL 4,860-combo
+    grid through the same CTE pipeline the reduced-grid queries use
+    (~19 s at sf0.01), so the flagship path is hash-checked against an
+    independent engine."""
+    agged = simulate_aggregate(cci_view(spark, sf_dir))
     return best_by(agged, "revenue_rate").select(
         "symbol",
         "condition_holding_days", "condition_target_return",

@@ -58,11 +58,9 @@ def test_bucketed_join_is_shuffle_free(spark):
 def test_bucketed_cci_feeds_simulator_shuffle_free(spark):
     """The 100x layout story for the lifecycle family: materialize the CCI
     table bucketed+sorted by symbol (the persistent form of plans/cci.py's
-    session cache), and the simulator's window stages — lag crossover and
-    the forward collect_list — consume it with NO shuffle exchange: the
-    bucketed scan's hash partitioning satisfies the windows' required
-    distribution, the grid join is a broadcast, so everything up to the
-    strategy aggregation's groupBy is map-local."""
+    session cache), and the simulator's per-symbol grouped map consumes it
+    with NO shuffle exchange: the bucketed scan's hash partitioning
+    satisfies the groupBy's required distribution."""
     from ccirecommenderdatapipeline_spark.operators.simulator import simulate_trades
     from ccirecommenderdatapipeline_spark.plans.cci import cci_view
 
@@ -88,9 +86,8 @@ def test_bucketed_cci_feeds_simulator_shuffle_free(spark):
     with contextlib.redirect_stdout(buf):
         trades_bucketed.explain("formatted")
     plan = buf.getvalue()
-    # broadcast exchanges (the combo grid) are fine; shuffle exchanges are not
+    assert "FlatMapGroupsInPandas" in plan
     assert "Exchange hashpartitioning" not in plan, plan
-    assert "Window" in plan
 
     trades_plain = simulate_trades(cci, grid)
     assert trades_bucketed.count() == trades_plain.count()

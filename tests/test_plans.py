@@ -41,8 +41,9 @@ def test_knn_ivf_codebook_join_strategy(spark):
 
 
 def test_simulator_grid_is_broadcast(spark):
-    txt = _explain(spark, "trades_sim")
-    # the combos grid joins as a broadcast nested loop, never a shuffle join
+    txt = _explain(spark, "sell_decisions")
+    # the positions' combo grid joins as a broadcast nested loop, never a
+    # shuffle join
     assert "BroadcastNestedLoopJoin" in txt
     assert "SortMergeJoin" not in txt
 

@@ -5,11 +5,12 @@ simulate -> aggregate -> best pipeline.
 Invariants pinned here:
 - the 'all' depth of the years-keyed best table equals the un-keyed best
   table row for row (the depth dimension is a pure refinement);
-- a bounded depth only contains buys inside its window, and its window
-  start is the per-symbol max(date) minus the depth (inclusive, add_months
-  clamping) — the reference's ``df[date] >= max - DateOffset(years=y)``;
-- the slice's first row produces no crossover signal (its lag is null
-  inside the slice), matching pandas' post-filter iteration.
+- a bounded depth counts exactly the full history's buys strictly after
+  its first slice day — the slice starts at the per-symbol max(date) minus
+  the depth (inclusive, add_months clamping), the reference's
+  ``df[date] >= max - DateOffset(years=y)``, and the slice's first row
+  produces no crossover signal (its lag is null inside the slice),
+  matching pandas' post-filter iteration.
 """
 
 from __future__ import annotations
@@ -19,10 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ccirecommenderdatapipeline_spark.operators.simulator import (
-    aggregate_strategies,
     best_by,
+    simulate_aggregate,
     simulate_trades,
-    with_search_years,
 )
 from ccirecommenderdatapipeline_spark.plans.cci import cci_view
 from tests.conftest import SF_SMALL
@@ -33,6 +33,11 @@ GRID = {
     "buy_threshold": [-100.0, -50.0],
     "stop_threshold": [40.0],
 }
+
+COMBO = [
+    "symbol", "condition_holding_days", "condition_target_return",
+    "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
+]
 
 
 @pytest.fixture(scope="module")
@@ -45,11 +50,8 @@ def _best(df, extra=()):
 
 
 def test_all_depth_equals_unkeyed_best(spark, cci):
-    keyed = aggregate_strategies(
-        simulate_trades(with_search_years(cci, ["1", "all"]), GRID, extra_keys=("search_years",)),
-        extra_keys=("search_years",),
-    )
-    unkeyed = aggregate_strategies(simulate_trades(cci, GRID))
+    keyed = simulate_aggregate(cci, GRID, years=["1", "all"])
+    unkeyed = simulate_aggregate(cci, GRID)
     cols = unkeyed.columns
     all_slice = _best(keyed, ("search_years",)).filter(
         F.col("search_years") == "all"
@@ -59,90 +61,52 @@ def test_all_depth_equals_unkeyed_best(spark, cci):
     assert plain.exceptAll(all_slice).count() == 0
 
 
-def test_bounded_depth_window(spark, cci):
-    sliced = with_search_years(cci, ["1"])
-    bounds = (
-        cci.groupBy("symbol").agg(F.max("date").alias("max_d"))
-        .select("symbol", F.add_months("max_d", -12).alias("lo"), "max_d")
-    )
-    joined = sliced.join(bounds, "symbol")
-    # every surviving row is inside [max - 1 year, max]
-    assert joined.filter(F.col("date") < F.col("lo")).count() == 0
-    # the boundary is inclusive: the earliest kept row per symbol is >= lo,
-    # and nothing between lo and the first kept row was dropped
-    orig_in_window = cci.join(bounds, "symbol").filter(F.col("date") >= F.col("lo"))
-    assert sliced.count() == orig_in_window.count()
-
-
 def test_slice_first_row_has_no_signal(spark, cci):
-    # buys in the bounded slice are a subset of buys in 'all' EXCEPT none may
-    # fall on the slice's first row (lag is null there), so: every bounded-
-    # depth buy date must also be a buy date at 'all', and must be strictly
-    # after the slice start.
-    trades = simulate_trades(
-        with_search_years(cci, ["1", "all"]), GRID, extra_keys=("search_years",)
-    )
-    buys = trades.select("symbol", "search_years", "buy_date", "condition_buy_cci_threshold").distinct()
-    b1 = buys.filter(F.col("search_years") == "1").drop("search_years")
-    ball = buys.filter(F.col("search_years") == "all").drop("search_years")
-    assert b1.exceptAll(ball.intersect(b1)).count() == 0
+    # A 1-year depth counts, per combo, exactly the full history's buy days
+    # strictly after the slice's first day: a buy ON that day has a null
+    # lag inside the slice and must not count. So its count_buy_date is
+    # <= the 'all' count, with equality pinned to the strict boundary.
+    agged = simulate_aggregate(cci, GRID, years=["1", "all"])
+    counts = {
+        y: agged.filter(F.col("search_years") == y).select(
+            *COMBO, F.col("count_buy_date").alias(f"n_{y}")
+        )
+        for y in ("1", "all")
+    }
+    both = counts["all"].join(counts["1"], COMBO, "left")
+    assert both.filter(F.coalesce("n_1", F.lit(0)) > F.col("n_all")).count() == 0
+
+    maxd = cci.groupBy("symbol").agg(F.max("date").alias("max_d"))
     starts = (
-        with_search_years(cci, ["1"]).groupBy("symbol").agg(F.min("date").alias("start_d"))
+        cci.join(maxd, "symbol")
+        .filter(F.col("date") >= F.add_months("max_d", -12))
+        .groupBy("symbol")
+        .agg(F.min("date").alias("start_d"))
     )
-    assert b1.join(starts, "symbol").filter(F.col("buy_date") <= F.col("start_d")).count() == 0
-
-
-def test_fast_depth_plan_matches_replay(spark, cci):
-    # The single-pass depth plan (simulate once on full history, derive each
-    # depth by the broadcast boundary filter on buy rows) must produce the
-    # exact trade multiset of the per-depth replay over with_search_years.
-    years = ["1", "2", "all"]
-    fast = simulate_trades(cci, GRID, years=years)
-    replay = simulate_trades(
-        with_search_years(cci, years), GRID, extra_keys=("search_years",)
-    ).select(*fast.columns)
-    assert fast.exceptAll(replay).count() == 0
-    assert replay.exceptAll(fast).count() == 0
-
-
-def test_fused_years_matches_plan_a(spark, cci):
-    # The fused Arrow kernel's depth grain (masked re-sums over the per-buy
-    # outcome grid inside one batch) must equal Plan A's
-    # simulate -> aggregate at (symbol, search_years, combo) grain exactly.
-    from ccirecommenderdatapipeline_spark.operators.simulator_pandas import (
-        simulate_aggregate_pandas,
+    want = (
+        simulate_trades(cci, GRID)
+        .join(starts, "symbol")
+        .filter(F.col("buy_date") > F.col("start_d"))
+        .groupBy(*COMBO)
+        .agg(F.count("*").alias("n_1"))
     )
-
-    years = ["1", "2", "all"]
-    plan_a = aggregate_strategies(
-        simulate_trades(cci, GRID, years=years), extra_keys=("search_years",)
-    )
-    fused = simulate_aggregate_pandas(cci, GRID, years=years).select(
-        *plan_a.columns
-    )
-    # FULL-PRECISION equality — no rounding concession: both sides fold
-    # money/ratio totals as exact decimals / scaled int64 (order-
-    # independent), so every derived double is bit-identical (round-7
-    # hardening of the r5 6dp concession).
-    assert plan_a.exceptAll(fused).count() == 0
-    assert fused.exceptAll(plan_a).count() == 0
+    assert want.count() > 0
+    assert want.exceptAll(counts["1"]).count() == 0
+    assert counts["1"].exceptAll(want).count() == 0
 
 
 def test_agged_view_is_years_all_slice(spark):
-    # r15 optimization invariant: the shared un-keyed aggregate view is
-    # DERIVED as the search_years='all' slice of the years-keyed view
-    # (one fused simulate-aggregate pass serves both persisted views).
-    # The slice must equal a direct years=None fused build bit-exactly:
-    # the 'all' depth takes the identical select-all code path.
-    from ccirecommenderdatapipeline_spark.operators.simulator_pandas import (
-        simulate_aggregate_pandas,
-    )
+    # The shared un-keyed aggregate view is DERIVED as the
+    # search_years='all' slice of the years-keyed view (one kernel pass
+    # serves both persisted views). The slice must equal a direct
+    # years=None build bit-exactly: the 'all' depth takes the identical
+    # select-all code path.
     from ccirecommenderdatapipeline_spark.plans.simulator import (
         AGG_GRID,
         agged_view,
     )
 
-    direct = simulate_aggregate_pandas(cci_view(spark, SF_SMALL), AGG_GRID)
+    direct = simulate_aggregate(cci_view(spark, SF_SMALL), AGG_GRID)
     view = agged_view(spark, SF_SMALL).select(*direct.columns)
     assert view.columns == direct.columns
     assert view.exceptAll(direct).count() == 0

@@ -1,19 +1,23 @@
 """Simulator parity vs an independent pandas re-implementation of the
-reference loop semantics (/root/reference/daily_function.py:717-816) — this
-guards against a shared misreading between the Spark plan and its SQL oracle.
+reference loop semantics (daily_function.py:717-816) — this guards against
+a shared misreading between the kernel and its SQL oracle — and every
+simulator-fed query against its DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
+from ccirecommenderdatapipeline_spark import plans
 from ccirecommenderdatapipeline_spark.operators.simulator import (
-    aggregate_strategies,
+    simulate_aggregate,
     simulate_trades,
 )
 from ccirecommenderdatapipeline_spark.plans.cci import cci_view
 from ccirecommenderdatapipeline_spark.plans.simulator import SIM_GRID
 from tests.conftest import SF_SMALL
+from tools.check_oracle import df_multiset, duck_connect
 
 
 def pandas_simulate(cci: pd.DataFrame, grid: dict) -> pd.DataFrame:
@@ -102,51 +106,34 @@ def test_trade_invariants(spark):
 
 
 def test_strategy_agg_rates(spark):
-    agged = aggregate_strategies(
-        simulate_trades(cci_view(spark, SF_SMALL), SIM_GRID)
-    ).toPandas()
+    agged = simulate_aggregate(cci_view(spark, SF_SMALL), SIM_GRID).toPandas()
     assert (agged["win_rate"] + agged["lose_rate"] <= 100.0 + 1e-9).all()
     assert (agged["count_buy_date"] > 0).all()
     s = agged[["count_win", "count_lose"]].sum(axis=1)
     assert (s <= agged["count_trades"]).all()
 
 
-def test_plan_b_fused_pandas_equals_plan_a(spark):
-    """SURVEY 4.2: the fused applyInPandas simulator (Plan B, the full-grid
-    fast path) must agree with the oracle-verified Catalyst plan (Plan A)
-    on every aggregate column."""
-    import numpy as np
-
-    from ccirecommenderdatapipeline_spark.operators.simulator_pandas import (
-        simulate_aggregate_pandas,
-    )
-    from ccirecommenderdatapipeline_spark.plans.simulator import AGG_GRID
-
-    cci = cci_view(spark, SF_SMALL)
-    a = aggregate_strategies(simulate_trades(cci, AGG_GRID)).toPandas()
-    b = simulate_aggregate_pandas(cci, AGG_GRID).toPandas()
-    key = [
-        "symbol", "condition_holding_days", "condition_target_return",
-        "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
-    ]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)[a.columns]
-    assert len(a) == len(b) > 0
-    for c in a.columns:
-        if a[c].dtype == object:
-            assert (a[c] == b[c]).all(), c
-        else:
-            # BIT-exact since round 7: both plans fold money/ratio totals
-            # as exact scaled-int64 / decimal units (order-independent),
-            # so every derived double is identical — no tolerance.
-            assert np.array_equal(
-                a[c].astype(float).values, b[c].astype(float).values
-            ), c
+@pytest.mark.parametrize(
+    "name",
+    ["trades_sim", "strategy_agg", "best_return", "best_return_depth3", "sell_decisions"],
+)
+def test_simulator_query_matches_oracle(spark, name):
+    """Each simulator-fed query — trade rows, the aggregate, the keyed best
+    table at two and three search depths, and the lifecycle positions —
+    equals its DuckDB oracle's row multiset at full float precision."""
+    sdf = plans.QUERIES[name](spark, SF_SMALL)
+    srows = [tuple(r) for r in sdf.collect()]
+    rel = duck_connect(SF_SMALL).execute(plans.ORACLES[name])
+    dcols = [d[0] for d in rel.description]
+    drows = rel.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(srows) == len(drows) > 0
+    assert df_multiset(sdf.columns, srows) == df_multiset(dcols, drows)
 
 
 def test_price_decimal_scale_contract(spark):
-    """The exact-sum machinery (Plan A long units, fused kernel int64,
-    oracle decimals) is sound ONLY if buy prices are exact 4-decimal and
+    """The exact-sum machinery (the kernel's int64 units, the oracle's
+    decimals) is sound ONLY if buy prices are exact 4-decimal and
     sell prices exact 2-decimal values (sources/prices.py contract) — the
     unit scaling must strip representation error <<1 ulp, never real
     digits. Pin that the staged fixture actually satisfies it."""
@@ -166,9 +153,7 @@ def test_unscale_exact_past_2_53():
     across the boundary, elementwise, for every scale it is used with."""
     from fractions import Fraction
     import numpy as np
-    from ccirecommenderdatapipeline_spark.operators.simulator_pandas import (
-        _unscale_exact,
-    )
+    from ccirecommenderdatapipeline_spark.operators.simulator import _unscale_exact
 
     probes = np.array(
         [0, 1, -1, 2**53 - 1, 2**53, 2**53 + 1, -(2**53) - 1,

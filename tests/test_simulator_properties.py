@@ -1,5 +1,5 @@
 """Property-based simulator parity (SURVEY §5.3): on ARBITRARY price/CCI
-series — not just the fixture — the Spark plan must match the independent
+series — not just the fixture — the kernel must match the independent
 pandas reimplementation of the reference loop.
 
 Examples are kept few and series short: each example runs real Spark jobs.
@@ -86,8 +86,8 @@ def test_rpd_unit_rule_matches_exact_rational_half_up(cents, days):
     """The r9 revenue-per-day quantization — floor(D*1e4/days + 0.5) on
     the exact 4dp-diff integer D — must equal true round-half-up (ties
     toward +inf) of the rational D*1e4/days, for every representable
-    input. This pins the exact-integer rule all three engines share
-    (operators/simulator.py, simulator_pandas.py, the DuckDB oracle)
+    input. This pins the exact-integer rule both engines share
+    (operators/simulator.py's kernel, the DuckDB oracle)
     against Fraction arithmetic, INCLUDING the knife-edge midpoints that
     made the previous ROUND(double, 8) form engine-divergent (one such
     trade at sf0.1 flipped six strategy_agg rows, r9 sweep)."""

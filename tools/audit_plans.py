@@ -15,8 +15,8 @@ where their batch-result plan is worth the micro-batch run).
 
 ``BroadcastNestedLoopJoin`` is NOT flagged: every occurrence in this repo
 is a broadcast of a literal/aggregate-sized grid (strategy combos, probe
-grids, scalar counts) — the pattern the simulator mandates — but it is
-COUNTED so a new corpus-sized one shows up in review.
+grids, scalar counts) — e.g. sell_decisions' (holding, return, stop)
+combos — but it is COUNTED so a new corpus-sized one shows up in review.
 
 Nested folds: a HOF lambda whose body contains another ``aggregate(`` /
 ``reduce(`` re-runs that fold per ELEMENT (interpreted HOFs have no
