@@ -35,7 +35,8 @@ table bucketed by symbol).
 cloudpickle rule: every helper the grouped-map closures touch is nested or
 closure-built. An importable module-level function pickles BY REFERENCE,
 which would make every Python worker import this package — and workers
-launched from a foreign cwd (the driver contract) cannot.
+launched from another working directory (as ``__spark_entry__.py``
+callers do) cannot.
 """
 
 from __future__ import annotations
