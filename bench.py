@@ -26,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ccirecommenderdatapipeline_spark import plans  # noqa: E402
-from ccirecommenderdatapipeline_spark.session import get_spark  # noqa: E402
+from ccirecommenderdatapipeline_spark.session import build_jobs, get_spark  # noqa: E402
 
 # Headline queries: the flagship pipeline stages + the north-star
 # training-data operators at the same scale factor.
@@ -181,12 +181,13 @@ HEADLINE = [
 ]
 
 
-def run_once(spark, name: str, sf_dir: str) -> float:
-    """Build and execute one registered query with the noop sink; seconds."""
+def run_once(spark, name: str, sf_dir: str) -> tuple[float, int]:
+    """Build and execute one registered query with the noop sink; seconds,
+    and the Spark jobs the build ran before execution (``build_jobs``)."""
     t0 = time.perf_counter()
-    df = plans.QUERIES[name](spark, sf_dir)
+    df, jobs = build_jobs(spark, lambda: plans.QUERIES[name](spark, sf_dir))
     df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    return time.perf_counter() - t0, jobs
 
 
 def warm_up(spark, sf_dir: str, streaming: bool) -> None:
@@ -239,7 +240,7 @@ def main() -> None:
     # plan-matched-shared across the pipeline stages (that reuse is a
     # designed property, not leakage).
     for name in names:
-        timings[name] = round(run_once(spark, name, sf_dir), 3)
+        timings[name] = round(run_once(spark, name, sf_dir)[0], 3)
         if full:
             # the full sweep runs unrelated families back to back, so
             # accumulated persisted subtrees are noise (and memory

@@ -30,17 +30,6 @@ FEATURE_DIM = 8
 FRAME_BYTES = 32          # fake codec: fixed-size "frames" inside the payload
 FRAME_STRIDE = 4          # sample every 4th frame
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-    ])),
-])
-
 FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),

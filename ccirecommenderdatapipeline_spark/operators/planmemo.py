@@ -15,6 +15,9 @@ a new token, so nothing built from older contents is served again.
   session that reads a new snapshot every day holds one day's views. The
   persist is re-applied only after ``clearCache()`` dropped it, never on a
   live entry. Literal tables read no input: their ``sf_dir`` is None.
+- ``memo`` is the same entry for any other value: ``load_table`` keeps
+  each table's parquet schema under ``("schema", name)``, so only the first
+  read of a snapshot runs Spark's schema-inference job.
 - ``staged`` writes a derived input once per snapshot at
   ``root/<kind>-<token>`` and publishes it by renaming a temp sibling, so
   the path exists only when complete: its existence is the marker.
@@ -61,6 +64,28 @@ def observe(spark: SparkSession, sf_dir: str) -> str:
     return token
 
 
+def memo(spark: SparkSession, key, sf_dir: str | None, build: Callable[[], object]):
+    """The value ``build`` made for ``key`` from ``sf_dir``'s current
+    snapshot; a new snapshot (or dir) releases the old value and builds
+    anew."""
+    token = None if sf_dir is None else observe(spark, sf_dir)
+    cache = spark.__dict__.setdefault("_shared_view_plan_cache", {})
+    entry = cache.pop(key, None)
+    if entry is not None and entry[:2] == (sf_dir, token):
+        value = entry[2]
+    else:
+        if entry is not None:
+            _release(entry[2])
+        value = build()
+    cache[key] = (sf_dir, token, value)
+    return value
+
+
+def _release(value) -> None:
+    if isinstance(value, DataFrame):
+        value.unpersist()
+
+
 def shared_view(
     spark: SparkSession,
     name,
@@ -70,20 +95,9 @@ def shared_view(
 ) -> DataFrame:
     """View ``name`` built by ``build`` from ``sf_dir``'s current snapshot,
     persisted at ``level`` (None: the plan is only memoized)."""
-    token = None if sf_dir is None else observe(spark, sf_dir)
-    cache = spark.__dict__.setdefault("_shared_view_plan_cache", {})
-    entry = cache.pop(name, None)
-    if entry is not None and entry[:2] == (sf_dir, token):
-        df = entry[2]
-        if level is not None and df.storageLevel == StorageLevel.NONE:
-            df.persist(level)
-    else:
-        if entry is not None:
-            entry[2].unpersist()
-        df = build()
-        if level is not None:
-            df.persist(level)
-    cache[name] = (sf_dir, token, df)
+    df = memo(spark, name, sf_dir, build)
+    if level is not None and df.storageLevel == StorageLevel.NONE:
+        df.persist(level)
     return df
 
 
@@ -93,8 +107,8 @@ def reset(spark: SparkSession) -> None:
     embeddings, so its printed plan would depend on what the session built
     before; a reset between queries pins it to the fresh-session build."""
     cache = spark.__dict__.setdefault("_shared_view_plan_cache", {})
-    for _sf_dir, _token, df in cache.values():
-        df.unpersist()
+    for _sf_dir, _token, value in cache.values():
+        _release(value)
     cache.clear()
 
 

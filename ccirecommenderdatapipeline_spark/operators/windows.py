@@ -52,13 +52,6 @@ def _fold_sum(xs: Column) -> Column:
     return F.aggregate(xs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def rolling_mean(col: str, n: int) -> Column:
-    """W1: SMA with pandas partial-window-NaN semantics (null until n rows)."""
-    w = rolling_window(n)
-    xs = F.collect_list(col).over(w)
-    return F.when(F.count(col).over(w) >= n, _fold_sum(xs) / n)
-
-
 def rolling_mad(col: str, n: int) -> Column:
     """W2: rolling mean absolute deviation via collect_list + aggregate HOF.
 
@@ -173,22 +166,6 @@ def latest_rows(df: DataFrame, k: int = 1) -> DataFrame:
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-    )
-
-
-def dedup_keep_last(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """W7: pandas ``drop_duplicates(subset, keep='last')``
-    (daily_function.py:151,492,649) depends on physical row order; distributed
-    semantics require an explicit priority column (``order_col`` — ingest time
-    or source rank). Highest ``order_col`` wins; ties broken arbitrarily-but-
-    deterministically by all remaining columns? No — caller must make
-    (keys, order_col) unique, as our upsert paths do.
-    """
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 

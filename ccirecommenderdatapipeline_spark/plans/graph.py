@@ -78,6 +78,15 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_ROLLUP_SQL.replace("// 10", "DIV 10"))
 
 
+def _node_label(node: str):
+    """The 'c<custkey>' / 's<suppkey>' string of a packed purchase-graph
+    node id (custkey*2 for customers, suppkey*2+1 for suppliers)."""
+    return F.when(
+        F.col(node) % 2 == 0,
+        F.concat(F.lit("c"), F.shiftright(node, 1)),
+    ).otherwise(F.concat(F.lit("s"), F.shiftright(node, 1)))
+
+
 PR_D = 0.85          # damping
 PR_ITERS = 5         # fixed iteration count (deterministic, resume-free)
 
@@ -201,12 +210,8 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank"),
             )
         )
-    node_str = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.shiftright("node", 1)),
-    ).otherwise(F.concat(F.lit("s"), F.shiftright("node", 1)))
     return ranks.select(
-        node_str.alias("node"), F.round("rank", 12).alias("rank")
+        _node_label("node").alias("node"), F.round("rank", 12).alias("rank")
     )
 
 
@@ -442,24 +447,26 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hop-bounded, the standard production cut: 'within N degrees')
     completing the graph family next to ``pagerank_bipartite``
     (iteration), ``triangle_count_oriented`` (counting) and
-    ``hierarchy_walk`` (recursion). A node's label is MIN(level of first
-    appearance) over the unioned frontiers — exact min-hops for every
-    node within {BFS_ITERS} hops, by BFS induction; unreached nodes are
-    absent (no sentinel rows).
+    ``hierarchy_walk`` (recursion). A node's label is its min-hops from
+    the seed — exact for every node within {BFS_ITERS} hops, by BFS
+    induction; unreached nodes are absent (no sentinel rows).
 
-    Each expansion is ONE equi-join of the current DELTA frontier against
-    the symmetric edge list followed by a DISTINCT and an ANTI-JOIN
-    against the visited set — the textbook delta-BFS (round-8 replan):
-    without the subtraction every level re-expands ALL previously
-    reached nodes, so on a small-world graph levels 3-4 re-join nearly
-    the whole vertex set against the whole edge list (this was the
-    repo's slowest headline query, 9.7 s at sf0.1 / 38.9 s at 25x —
-    the anti-join makes later frontiers the small NEW rings instead).
-    All shuffles stay on the node key; on a cluster the edge list would
-    be bucketed by src so every expansion is shuffle-free on the edge
-    side. Result is row-identical to the full re-expansion (a revisited
-    node can never improve its min-hop — BFS induction), which the
-    unchanged full-expansion ORACLE proves.
+    One lazy plan; building it runs no Spark job. Nodes are packed long
+    ids (``pagerank_bipartite``'s recipe: custkey*2, suppkey*2+1), and the
+    'c'/'s' label is built once per output row. The symmetric edge list
+    reads the distinct base edges once, inlining both directions of each.
+    The seed is the oracle's MIN over the node strings, which is the MIN
+    of the 'c'||custkey strings ('c' sorts before 's'), packed back to
+    its id inside the plan.
+
+    Each level reads the previous level's ``reached(node, hop)`` exactly
+    once: a left join to the edges on ``node = src AND hop = i-1`` (only
+    the frontier matches; the hop test stays in the ON clause, since a
+    null join key for the other rows would send them all to one shuffle
+    partition), an inline of ``(node, hop)`` and ``(dst, i)``, and a
+    ``groupBy(node).min(hop)``. A lazy delta-BFS, which anti-joins each
+    frontier against the union of the earlier ones, references every
+    level twice, so its unrolled plan doubles with each level.
 
     Determinism: hop levels are exact integers; the seed is a MIN
     aggregate; no floats anywhere."""
@@ -468,39 +475,45 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
+            (F.col("o_custkey").cast("long") * 2).alias("src"),
+            (F.col("l_suppkey").cast("long") * 2 + 1).alias("dst"),
         )
         .distinct()
     )
-    sym = base.unionByName(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    seed = sym.agg(F.min("src").alias("node"))
-    frontier = seed.select("node", F.lit(0).alias("hop")).localCheckpoint(
-        eager=True
-    )
-    # r15: ONE eager checkpoint per expansion instead of two — `visited`
-    # is a lazy union of the already-materialized frontier checkpoints
-    # (bounded BFS_ITERS-deep lineage of in-memory scans, nothing to
-    # recompute), so checkpointing it again only doubled the job count
-    # per level (guide §1.2: remove work, then tune).
-    visited = frontier
-    for i in range(1, BFS_ITERS + 1):
-        frontier = (
-            frontier.join(sym, frontier.node == sym.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(i).alias("hop"))
-            .localCheckpoint(eager=True)
+    sym = base.select(
+        F.inline(
+            F.array(
+                F.struct("src", "dst"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
         )
-        visited = visited.unionByName(frontier)
-    # sym served only the (eager) expansion loop; the returned plan reads
-    # the frontier checkpoints — release the cache (the _cluster_labels /
-    # ml_minhash discipline: no construction-only persist outlives return)
-    sym.unpersist()
-    return visited.select("node", F.col("hop").cast("int").alias("hops"))
+    )
+    reached = base.agg(
+        F.min(F.concat(F.lit("c"), F.shiftright("src", 1))).alias("seed")
+    ).select(
+        (F.expr("substr(seed, 2)").cast("long") * 2).alias("node"),
+        F.lit(0).alias("hop"),
+    )
+    for i in range(1, BFS_ITERS + 1):
+        reached = (
+            reached.join(
+                sym, (F.col("node") == F.col("src")) & (F.col("hop") == i - 1), "left"
+            )
+            .select(
+                F.inline(
+                    F.array(
+                        F.struct("node", "hop"),
+                        F.struct(F.col("dst").alias("node"), F.lit(i).alias("hop")),
+                    )
+                )
+            )
+            .where(F.col("node").isNotNull())
+            .groupBy("node")
+            .agg(F.min("hop").alias("hop"))
+        )
+    return reached.select(
+        _node_label("node").alias("node"), F.col("hop").cast("int").alias("hops")
+    )
 
 
 # --- Connected components via alternating large-star / small-star ------------

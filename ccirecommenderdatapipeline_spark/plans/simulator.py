@@ -246,8 +246,6 @@ def _best_cte(keys: str = "symbol") -> str:
 
 BEST_CTE = _best_cte()
 
-BEST_SQL = BEST_CTE + "SELECT * FROM best"
-
 # Depths exercised by the oracle-gated best_* queries: one bounded slice and
 # the reference's default "all" (app.py:45-46 ships ["all"]; the loop at
 # daily_function.py:704/1041 supports any mix of ints and "all").

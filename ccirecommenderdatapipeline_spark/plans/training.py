@@ -35,7 +35,6 @@ from .vectors import DEDUP_COS, VECS_CTE, _dot_sql
 SHUFFLE_SEED = "s42:"   # seed prefix baked into the shuffle key
 MIX_SEED = "mix:"       # seed prefix for remainder-doc selection
 RANK_HEX_CHARS = 2      # md5-prefix chars -> 16**2 = 256 two-phase rank buckets
-RANK_BUCKETS = 16 ** RANK_HEX_CHARS
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,8 @@
-"""Canonical schemas and column constants — the one cast layer.
+"""Canonical schemas and constants — the one cast layer.
 
 The reference reads every CSV stringly (``dtype=str``) and re-casts at each
-use site (/root/reference/daily_function.py:279,438,624,1183 etc.; column-name
-constants bound at daily_function.py:31-97). Here every table gets exactly one
-typed schema; downstream code never casts.
+use site (its daily_function.py:279,438,624,1183 etc.). Here every table
+gets exactly one typed schema; downstream code never casts.
 
 Domain tables mirror FIXTURES.md section 2; testdata tables (TESTDATA.md) are
 parquet and carry their own schema — constants below are for reference only.
@@ -12,15 +11,6 @@ parquet and carry their own schema — constants below are for reference only.
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# --- column-name constants (reference: daily_function.py:31-97) -------------
-COL_SYMBOL = "symbol"
-COL_DATE = "date"
-COL_OPEN = "open_pr"
-COL_HIGH = "high_pr"
-COL_LOW = "low_pr"
-COL_CLOSE = "close_pr"
-COL_VOLUME = "daily_trade_stock"
 
 # Conventional CCI window length (reference config.py is gitignored; BASELINE.md
 # documents cci_ndays with conventional n=20).
@@ -37,14 +27,6 @@ GRID_HOLDING_DAYS = [5, 10, 20, 30, 40, 60]
 GRID_TARGET_RETURN = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10]
 GRID_BUY_THRESHOLD = [-100, -90, -80, -70, -60, -50, -40, -30, -20]
 GRID_STOP_THRESHOLD = [100, 90, 80, 70, 60, 50, 40, 30, 20]
-
-SYMBOL_LIST_SCHEMA = T.StructType([
-    T.StructField("type", T.StringType()),          # 'stock' | 'etf'
-    T.StructField("symbol", T.StringType()),        # zero-padded 6-char
-    T.StructField("name", T.StringType()),
-    T.StructField("total_stock", T.LongType()),
-    T.StructField("marcap", T.LongType()),          # nullable (enrich may fail)
-])
 
 DAILY_PRICE_SCHEMA = T.StructType([
     T.StructField("symbol", T.StringType()),

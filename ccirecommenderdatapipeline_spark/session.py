@@ -28,8 +28,12 @@ same code runs on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+import uuid
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "ccirecommenderdatapipeline-spark") -> SparkSession:
@@ -71,3 +75,20 @@ def codegen_compiles(spark: SparkSession) -> int:
     thrash."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def build_jobs(spark: SparkSession, build: Callable[[], T]) -> tuple[T, int]:
+    """``build()`` and the number of Spark jobs it ran, counted under a
+    job group of its own. A lazy plan build runs none; each job is an
+    eager site that a plan build pays before the query executes."""
+    sc = spark.sparkContext
+    group = f"plan-build-{uuid.uuid4().hex}"
+    props = ("spark.jobGroup.id", "spark.job.description")
+    outer = [sc.getLocalProperty(p) for p in props]
+    sc.setJobGroup(group, "plan build")
+    try:
+        out = build()
+    finally:
+        for p, v in zip(props, outer):
+            sc.setLocalProperty(p, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -12,17 +12,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.planmemo import observe
+from ..operators.planmemo import memo
 from ..schemas import TESTDATA_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One table of the snapshot at ``sf_dir``. A changed snapshot of a dir
-    this session read before refreshes what Spark cached from it
+    this session read before refreshes what Spark cached from it, and the
+    table's parquet schema is inferred once per snapshot: later reads pass
+    it to the reader, which then runs no schema-inference job
     (operators/planmemo.py)."""
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
-    observe(spark, sf_dir)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (vectorized
@@ -33,15 +34,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # zone is UTC here, so the NTZ->LTZ cast preserves the stored micros
         # exactly, matching DuckDB's epoch_us over the same file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+    schema = memo(
+        spark, ("schema", name), sf_dir, lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events":
         from pyspark.sql import functions as F, types as T
 
-        if isinstance(df.schema["ts"].dataType, T.LongType):
+        if isinstance(schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -12,14 +12,17 @@ import contextlib
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from ccirecommenderdatapipeline_spark import plans
-from ccirecommenderdatapipeline_spark.operators.planmemo import staged
+from ccirecommenderdatapipeline_spark.operators.planmemo import reset, staged
 from ccirecommenderdatapipeline_spark.pipeline import run_daily_batch
 from ccirecommenderdatapipeline_spark.plans import storage
 from ccirecommenderdatapipeline_spark.schemas import TESTDATA_TABLES
+from ccirecommenderdatapipeline_spark.session import build_jobs
+from ccirecommenderdatapipeline_spark.sources.tables import load_table
 from ccirecommenderdatapipeline_spark.streaming import jobs
 from tests.conftest import SF_SMALL
 from tools.check_oracle import duck_connect
@@ -115,6 +118,48 @@ def test_failed_stage_write_leaves_nothing_behind(tmp_path):
     with pytest.raises(RuntimeError):
         staged(str(root), "events", str(src), write)
     assert os.listdir(root) == []
+
+
+def _add_column(sf_dir: str, table: str) -> None:
+    """Rewrite one table in place with an extra ``c_added`` column."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("c_added", pa.array(range(t.num_rows))), path)
+
+
+def test_schema_is_inferred_once_per_snapshot(spark, tmp_path):
+    d = _copy_sf(tmp_path / "sf0.001")
+    _, first = build_jobs(spark, lambda: load_table(spark, d, "customer"))
+    df, second = build_jobs(spark, lambda: load_table(spark, d, "customer"))
+    assert first > 0 and second == 0
+    assert df.count() == pq.read_metadata(f"{d}/customer.parquet").num_rows
+
+
+def test_in_place_change_reads_the_new_schema(spark, tmp_path):
+    d = _copy_sf(tmp_path / "sf0.001")
+    assert "c_added" not in load_table(spark, d, "customer").columns
+    _add_column(d, "customer")
+    df = load_table(spark, d, "customer")
+    assert "c_added" in df.columns
+    assert df.agg({"c_added": "max"}).first()[0] == df.count() - 1
+
+
+def test_dirs_with_one_basename_read_their_own_schema(spark, tmp_path):
+    a = _copy_sf(tmp_path / "a" / "sf0.001")
+    b = _copy_sf(tmp_path / "b" / "sf0.001")
+    _add_column(b, "customer")
+    cols = [load_table(spark, d, "customer").columns for d in (a, b, a)]
+    assert ["c_added" in c for c in cols] == [False, True, False]
+
+
+def test_reset_drops_the_schema_entries(spark, tmp_path):
+    d = _copy_sf(tmp_path / "sf0.001")
+    load_table(spark, d, "customer")
+    assert ("schema", "customer") in spark._shared_view_plan_cache
+    reset(spark)
+    assert ("schema", "customer") not in spark._shared_view_plan_cache
+    _, jobs = build_jobs(spark, lambda: load_table(spark, d, "customer"))
+    assert jobs > 0
 
 
 @contextlib.contextmanager

@@ -7,6 +7,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from ccirecommenderdatapipeline_spark import plans
 from tests.conftest import SF_SMALL
 
@@ -498,6 +500,18 @@ def test_bfs_hops_matches_python_bfs(spark):
                 dist[v] = dist[u] + 1
                 q.append(v)
     assert got == dist
+
+
+@pytest.mark.parametrize("name", ["prices", "cci", "bfs_hops", "ndcg_eval"])
+def test_warm_build_runs_no_spark_job(spark, name):
+    """A plan build is lazy: once the session has read the snapshot (table
+    schemas and shared views memoized), building the query runs no Spark
+    job; every job is left to the action that executes it."""
+    from ccirecommenderdatapipeline_spark.session import build_jobs
+
+    plans.QUERIES[name](spark, SF_SMALL)
+    _, jobs = build_jobs(spark, lambda: plans.QUERIES[name](spark, SF_SMALL))
+    assert jobs == 0
 
 
 def test_pmi_collocations_replay(spark):

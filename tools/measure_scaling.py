@@ -65,7 +65,7 @@ def main() -> int:
     for name in names:
         cells = []
         for tag, sf_dir in SCALES:
-            cells.append(f"{tag}={run_once(spark, name, sf_dir):.2f}s")
+            cells.append(f"{tag}={run_once(spark, name, sf_dir)[0]:.2f}s")
             spark.catalog.clearCache()
         print(f"SCALING {name}: " + " ".join(cells), flush=True)
     spark.stop()
