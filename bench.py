@@ -26,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ccirecommenderdatapipeline_spark import plans  # noqa: E402
-from ccirecommenderdatapipeline_spark.session import build_jobs, get_spark  # noqa: E402
+from ccirecommenderdatapipeline_spark.session import build_jobs, get_spark, run_tasks  # noqa: E402
 
 # Headline queries: the flagship pipeline stages + the north-star
 # training-data operators at the same scale factor.
@@ -181,13 +181,20 @@ HEADLINE = [
 ]
 
 
-def run_once(spark, name: str, sf_dir: str) -> tuple[float, int]:
+def run_once(spark, name: str, sf_dir: str) -> tuple[float, int, int]:
     """Build and execute one registered query with the noop sink; seconds,
-    and the Spark jobs the build ran before execution (``build_jobs``)."""
+    the Spark jobs the build ran before execution (``build_jobs``) and the
+    tasks the execution ran (``run_tasks``; a streaming cell runs its
+    stream while building, so its tasks are not in this count)."""
     t0 = time.perf_counter()
     df, jobs = build_jobs(spark, lambda: plans.QUERIES[name](spark, sf_dir))
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0, jobs
+
+    def execute() -> float:
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    secs, tasks = run_tasks(spark, execute)
+    return secs, jobs, tasks
 
 
 def warm_up(spark, sf_dir: str, streaming: bool) -> None:

@@ -29,8 +29,11 @@ semantics independently with list lambdas.
 
 At 100 TB: grouped-map state is one symbol's history — bounded; skew is
 capped by max history length, and the Python stage scales with executors
-like any map stage. The one shuffle is the groupBy on symbol (none on a
-table bucketed by symbol).
+like any map stage. The kernel reads the symbol-partitioned cci cache
+(plans/cci.py ``cci_view``) without a shuffle (and a table bucketed by
+symbol likewise), so its Python task count is that cache's partition
+count, which AQE sizes by the cache's bytes (``session.get_spark``): one
+task for a small snapshot, one per core at sf0.1.
 
 cloudpickle rule: every helper the grouped-map closures touch is nested or
 closure-built. An importable module-level function pickles BY REFERENCE,

@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.planmemo import snapshot, staged
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet
 from .registry import query
 
 STORAGE_ROOT = "/tmp/spark_graft_storage"
@@ -55,9 +55,15 @@ def q_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S12 (daily_function.py:1140-1177): the reference regex-scans CSV
     filenames for the max date; here the table is written partitioned by
     year and the latest partition is discovered from partition values and
-    read with partition pruning (the filter never touches older files)."""
-    t = spark.read.parquet(_orders_by_year(spark, sf_dir))
-    latest = t.agg(F.max("o_year")).first()[0]  # partition-values-only scan
+    read with partition pruning (the filter never touches older files).
+
+    The build runs no Spark job: the staged dir's schema is memoized per
+    snapshot, and the latest year is a scalar subquery that the scan
+    evaluates as a partition filter when the query executes."""
+    t = read_parquet(
+        spark, sf_dir, "orders_by_year", _orders_by_year(spark, sf_dir)
+    )
+    latest = t.select(F.max("o_year")).scalar()
     return t.filter(F.col("o_year") == latest).select(
         "o_orderkey", "o_orderstatus", "o_totalprice",
         F.col("o_year").cast("int").alias("o_year"),
@@ -785,7 +791,9 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, not per row). The executed plan carries ``dynamicpruning#`` on
     the scan (pinned by test_plans.py); the oracle restates the join over
     the unpartitioned view."""
-    fact = spark.read.parquet(_orders_by_year(spark, sf_dir))
+    fact = read_parquet(
+        spark, sf_dir, "orders_by_year", _orders_by_year(spark, sf_dir)
+    )
     dim = (
         fact.select("o_year").distinct().filter(F.col("o_year") >= 2000)
     )

@@ -34,18 +34,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # zone is UTC here, so the NTZ->LTZ cast preserves the stored micros
         # exactly, matching DuckDB's epoch_us over the same file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = memo(
-        spark, ("schema", name), sf_dir, lambda: spark.read.parquet(path).schema
-    )
-    df = spark.read.schema(schema).parquet(path)
+    df = read_parquet(spark, sf_dir, name, path)
     if name == "events":
         from pyspark.sql import functions as F, types as T
 
-        if isinstance(schema["ts"].dataType, T.LongType):
+        ts_type = df.schema["ts"].dataType
+        if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
+        elif isinstance(ts_type, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def read_parquet(spark: SparkSession, sf_dir: str, name: str, path: str) -> DataFrame:
+    """The parquet data at ``path``, derived from the snapshot at
+    ``sf_dir``, read with its schema memoized under ``("schema", name)``:
+    only the snapshot's first read runs Spark's schema-inference job."""
+    schema = memo(
+        spark, ("schema", name), sf_dir, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

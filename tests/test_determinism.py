@@ -75,7 +75,11 @@ def _multiset(df):
 def test_result_is_partitioning_invariant(spark, name):
     saved = {
         k: spark.conf.get(k)
-        for k in ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+        for k in (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.files.maxPartitionBytes",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+        )
     }
     try:
         # drop cached plans BEFORE each run: several queries persist() shared
@@ -87,10 +91,14 @@ def test_result_is_partitioning_invariant(spark, name):
         spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
         a = _multiset(QUERIES[name](spark, SF_SMALL))
         # 7 shuffle partitions + 64 KiB scan splits: different task count,
-        # different scan order, different merge order everywhere
+        # different scan order, different merge order everywhere. AQE sizes
+        # shuffles (persisted views' too) by bytes, so at this SF run A
+        # coalesces nearly every one to a single partition; run B turns
+        # coalescing off, or both runs would see the same one partition
         spark.catalog.clearCache()
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         b = _multiset(QUERIES[name](spark, SF_SMALL))
     finally:
         for k, v in saved.items():

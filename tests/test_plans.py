@@ -502,7 +502,9 @@ def test_bfs_hops_matches_python_bfs(spark):
     assert got == dist
 
 
-@pytest.mark.parametrize("name", ["prices", "cci", "bfs_hops", "ndcg_eval"])
+@pytest.mark.parametrize(
+    "name", ["prices", "cci", "bfs_hops", "ndcg_eval", "latest_partition"]
+)
 def test_warm_build_runs_no_spark_job(spark, name):
     """A plan build is lazy: once the session has read the snapshot (table
     schemas and shared views memoized), building the query runs no Spark

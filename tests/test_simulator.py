@@ -15,8 +15,9 @@ from ccirecommenderdatapipeline_spark.operators.simulator import (
     simulate_trades,
 )
 from ccirecommenderdatapipeline_spark.plans.cci import cci_view
-from ccirecommenderdatapipeline_spark.plans.simulator import SIM_GRID
-from tests.conftest import SF_SMALL
+from ccirecommenderdatapipeline_spark.plans.simulator import AGG_GRID, SIM_GRID
+from ccirecommenderdatapipeline_spark.session import run_tasks
+from tests.conftest import SF_MED, SF_SMALL
 from tools.check_oracle import df_multiset, duck_connect
 
 
@@ -111,6 +112,30 @@ def test_strategy_agg_rates(spark):
     assert (agged["count_buy_date"] > 0).all()
     s = agged[["count_win", "count_lose"]].sum(axis=1)
     assert (s <= agged["count_trades"]).all()
+
+
+def test_small_cci_runs_the_kernel_in_one_task(spark):
+    """AQE sizes a persisted view's final shuffle by its bytes
+    (``session.get_spark``), so the cached cci of a small snapshot is one
+    partition, and the kernel, which reads that cache without a shuffle,
+    runs its Python stage in one task."""
+    cci = cci_view(spark, SF_SMALL)
+    cci.count()  # materialize the cache: the counted job is the kernel's stage
+    _, tasks = run_tasks(
+        spark,
+        lambda: simulate_aggregate(cci, AGG_GRID)
+        .write.format("noop").mode("overwrite").save(),
+    )
+    assert tasks == 1
+
+
+def test_larger_cci_keeps_parallelism(spark):
+    """The sizing goes the other way too: at SF_MED the cached cci keeps
+    more than one partition, so the kernel's Python stage still runs in
+    parallel where the data is large enough to pay for it."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a one-core session has one partition at any size")
+    assert cci_view(spark, SF_MED).rdd.getNumPartitions() > 1
 
 
 @pytest.mark.parametrize(

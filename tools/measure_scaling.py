@@ -1,7 +1,9 @@
 """Back-to-back scale-up measurement for SCALING.md rows: runs the given
 queries at sf0.1, the 5x replica and the 25x replica IN ONE session
 (JVM/worker pools warm, clearCache between queries) and prints one
-markdown-ish line per query. Same methodology as SCALING.md's header.
+markdown-ish line per query: each scale's seconds and the tasks its
+execution ran (``<tag>=<s>s/<n>t``), so a change in parallelism across
+scales shows next to the time. Same methodology as SCALING.md's header.
 
 Usage: python tools/measure_scaling.py q1 q2 ...
 """
@@ -65,7 +67,8 @@ def main() -> int:
     for name in names:
         cells = []
         for tag, sf_dir in SCALES:
-            cells.append(f"{tag}={run_once(spark, name, sf_dir)[0]:.2f}s")
+            secs, _, tasks = run_once(spark, name, sf_dir)
+            cells.append(f"{tag}={secs:.2f}s/{tasks}t")
             spark.catalog.clearCache()
         print(f"SCALING {name}: " + " ".join(cells), flush=True)
     spark.stop()

@@ -9,13 +9,15 @@ are recorded so a loaded box is visible in the artifact, and so is each
 query's ``codegen_compiles`` (classes compiled over its reps), so a
 codegen-cache thrash shows in any timing run, and its ``build_jobs`` (per
 rep, the Spark jobs its plan build ran before the query executed), so
-every eager site left in a plan build shows too. A first rep may add one
-schema-inference job per table the session had not read yet, and a
-query whose eager work is memoized pays it in its first rep only.
+every eager site left in a plan build shows too, and its ``tasks`` (per
+rep, the tasks its execution ran), so a change in task parallelism shows
+next to the time. A first rep may add one schema-inference job per table
+the session had not read yet, and a query whose eager work is memoized
+pays it in its first rep only.
 
 Usage: python tools/time_queries.py <sf_dir> <n_reps> <query> [query ...]
 Prints one JSON line: {"timings": {name: {"runs": [...], "min": s,
-"codegen_compiles": n, "build_jobs": [...]}},
+"codegen_compiles": n, "build_jobs": [...], "tasks": [...]}},
 "loadavg": [start, end], "sf_dir": ...}.
 """
 
@@ -45,16 +47,17 @@ def main() -> int:
     warm_up(spark, sf_dir, streaming=any(n.startswith("stream_") for n in names))
     out: dict[str, dict] = {}
     for name in names:
-        runs, jobs = [], []
+        runs, jobs, tasks = [], [], []
         compiles0 = codegen_compiles(spark)
         for _ in range(n_reps):
-            secs, n_jobs = run_once(spark, name, sf_dir)
+            secs, n_jobs, n_tasks = run_once(spark, name, sf_dir)
             runs.append(round(secs, 3))
             jobs.append(n_jobs)
+            tasks.append(n_tasks)
             spark.catalog.clearCache()
         out[name] = {"runs": runs, "min": min(runs),
                      "codegen_compiles": codegen_compiles(spark) - compiles0,
-                     "build_jobs": jobs}
+                     "build_jobs": jobs, "tasks": tasks}
     payload = {
         "timings": out,
         "loadavg": [load0, round(os.getloadavg()[0], 2)],
