@@ -197,25 +197,31 @@ def run_once(spark, name: str, sf_dir: str) -> tuple[float, int, int]:
     return secs, jobs, tasks
 
 
+def warm_python_workers(spark) -> None:
+    """One mapInPandas task per core, so each core's pandas worker is
+    forked before the first timed cell (a long-lived cluster's workers are
+    resident; forking one per core that each import pandas is start-up
+    cost, not query cost). The range has no shuffle for AQE to coalesce
+    into one task."""
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, numPartitions=n).mapInPandas(
+        lambda batches: batches, "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
 def warm_up(spark, sf_dir: str, streaming: bool) -> None:
     """The fixed warm-up set every timing tool pays before its first
     timed cell, so session start-up lands on no query:
 
     - one batch query for JVM class loading and JIT;
-    - one applyInPandas for the Python-worker pool (a long-lived
-      cluster's pandas workers are resident; forking one per core that
-      each import pandas is start-up cost, not query cost);
+    - ``warm_python_workers`` for the Python-worker pool;
     - with ``streaming``, the cheapest availableNow stream: the first
       streaming query of a session also pays state-store / micro-batch
       engine class loading (~1-2 s), which would otherwise land on
       whichever stream_* cell runs first.
     """
-    from pyspark.sql import functions as F
-
     run_once(spark, "cci", sf_dir)
-    spark.range(64).withColumn("g", F.col("id") % 32).groupBy("g").applyInPandas(
-        lambda p: p, "id long, g long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_python_workers(spark)
     if streaming:
         run_once(spark, "stream_dedup_watermark", sf_dir)
     spark.catalog.clearCache()

@@ -17,7 +17,8 @@ a new token, so nothing built from older contents is served again.
   live entry. Literal tables read no input: their ``sf_dir`` is None.
 - ``memo`` is the same entry for any other value: ``load_table`` keeps
   each table's parquet schema under ``("schema", name)``, so only the first
-  read of a snapshot runs Spark's schema-inference job.
+  read of a snapshot runs Spark's schema-inference job; the streaming
+  jobs' ``staged_schema`` keeps a staged dir's schema the same way.
 - ``staged`` writes a derived input once per snapshot at
   ``root/<kind>-<token>`` and publishes it by renaming a temp sibling, so
   the path exists only when complete: its existence is the marker.

@@ -22,7 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.planmemo import staged
+from ..operators.planmemo import memo, staged
 from ..operators.windows import bounded_window
 
 GAP_US = 1_800_000_000          # 30-minute session gap
@@ -51,9 +51,24 @@ def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     )
 
 
+def staged_schema(spark: SparkSession, staged_dir: str):
+    """The parquet schema of a staged dir, memoized per snapshot of that
+    dir: only its first read runs Spark's schema-inference job."""
+    return memo(
+        spark, ("staged_schema", staged_dir), staged_dir,
+        lambda: spark.read.parquet(staged_dir).schema,
+    )
+
+
+def read_staged(spark: SparkSession, staged_dir: str) -> DataFrame:
+    """A staged dir as a batch DataFrame, read with its memoized schema."""
+    return spark.read.schema(staged_schema(spark, staged_dir)).parquet(staged_dir)
+
+
 def events_stream(spark: SparkSession, staged_dir: str, **options) -> DataFrame:
-    schema = spark.read.parquet(staged_dir).schema
-    reader = spark.readStream.schema(schema)
+    """A staged dir (events or any other staged table) as a file-source
+    stream, read with its memoized schema and the given reader options."""
+    reader = spark.readStream.schema(staged_schema(spark, staged_dir))
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.parquet(staged_dir)
@@ -78,34 +93,81 @@ def tumbling_agg_plan(events: DataFrame) -> DataFrame:
     )
 
 
-# Streaming STATE partition count — a deployment sizing knob, not a
-# semantic: a stateful operator materializes one state-store instance
-# (RocksDB/HDFS dir, checkpoint files, task) per shuffle partition PER
-# micro-batch, so partition count should track state VOLUME. The batch
-# side's 32 is right for the scan-heavy work, but this fixture's
-# streaming state is kilobytes — at 32 partitions the stream-stream
-# outer join spent 3x its runtime on empty state-store instances
-# (33.6 s -> 10.9 s at 8, identical results; every streaming op here is
-# partition-count-invariant BY DESIGN and oracle-checked). On a real
-# cluster this is exactly the knob you size per job — results never
-# depend on it.
-STREAM_STATE_PARTITIONS = 8
+# State partitions sized by the bytes of the stream's staged input. A
+# stateful operator keeps one state-store instance (task, store dir,
+# checkpoint delta file) per shuffle partition per micro-batch, and Spark
+# runs no AQE on stateful streaming shuffles, so the count is set before
+# start(), by the rule AQE applies to this session's batch shuffles:
+# with coalescePartitions.parallelismFirst (Spark's default) no partition
+# is sized below coalescePartitions.minPartitionSize (1 MB), else below
+# advisoryPartitionSizeInBytes, and spark.sql.shuffle.partitions is the
+# ceiling:
+#
+#     min(shuffle.partitions, max(1, ceil(staged_bytes / floor)))
+#
+# Staged events are 31 KB at sf0.001 and 230 KB at sf0.01 (1 partition),
+# 2.2 MB at sf0.1 (3; orders 2.0 MB: 2); at cluster scale the count
+# reaches shuffle.partitions. Results never depend on the count: every
+# stream here is partition-count-invariant and oracle-checked. Measured
+# on 4 cores (CPU min / wall median, s; a fixed 8 before):
+#
+#   cell                           8            4            1
+#   stream_tumbling_agg sf0.001    1.39 / 1.05  1.11 / 0.83  0.77 / 0.71
+#   stream_outer_join sf0.001      34.3 / 14.9  20.9 / 10.6  9.7 / 7.7
+#   stream_tws_user_stats sf0.001  20.2 / 8.5   12.0 / 6.1   6.3 / 5.4
+#   stream_stateful_counts sf0.001 16.7 / 6.6   9.8 / 4.2    3.8 / 3.6
+#   stream_outer_join sf0.1        36.2 / 16.0  22.1 / 11.1  10.8 / 8.3
+#   stream_tws_user_stats sf0.1    33.9 / 12.3  26 / 9.2-10.3 19.6 / 19.0
+#
+# A flat 1 is not the rule's answer at sf0.1: stream_tws_user_stats then
+# runs its Python state work on one core (12.3 -> 19.0 s wall); the
+# bytes give it 3.
+#
+# Restarts: a query restarted from a checkpoint keeps the partition count
+# its offset log recorded (Spark restores it over the session's), so the
+# rule sizes a checkpoint only at its first start.
+
+
+def _staged_bytes(path: str) -> int:
+    """Bytes of the data files under a staged dir (Spark's hidden ``_``
+    and ``.`` files, such as _SUCCESS and .crc, excluded)."""
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
+def state_partitions(spark: SparkSession, staged_dir: str) -> int:
+    """State partition count for a stream over ``staged_dir`` (see the
+    rule above)."""
+    conf = spark.conf
+    floor_key = (
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+        if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true"
+        else "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    )
+    byte_string = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    floor = byte_string.byteStringAsBytes(conf.get(floor_key))
+    ceiling = int(conf.get("spark.sql.shuffle.partitions"))
+    return min(ceiling, max(1, -(-_staged_bytes(staged_dir) // floor)))
 
 
 class state_sized:
-    """Context manager: run a streaming job with state-sized shuffle
-    partitioning, restoring the session default afterwards. Safe here
-    because jobs run sequentially per session; a concurrent harness would
-    set this per-job via its scheduler instead."""
+    """Context manager: run a streaming job over ``staged_dir`` with its
+    state partitions sized by the dir's bytes, restoring the session's
+    shuffle partitions afterwards. Safe here because jobs run sequentially
+    per session; a concurrent harness would set this per-job via its
+    scheduler instead."""
 
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession, staged_dir: str):
         self.spark = spark
+        self.n = state_partitions(spark, staged_dir)
 
     def __enter__(self):
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-        )
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
         return self
 
     def __exit__(self, *exc):
@@ -117,12 +179,15 @@ def run_to_memory(
     plan: DataFrame,
     output_mode: str = "complete",
     checkpoint: str | None = None,
+    *,
+    staged_dir: str,
 ) -> DataFrame:
-    """Execute a streaming plan with trigger(availableNow) into a memory
-    sink; blocks until all staged data is processed and returns the result
-    table as a batch DataFrame."""
+    """Execute a streaming plan over ``staged_dir`` with
+    trigger(availableNow) into a memory sink, its state sized by that
+    dir's bytes; blocks until all staged data is processed and returns the
+    result table as a batch DataFrame."""
     name = f"strm_{uuid.uuid4().hex[:10]}"
-    with state_sized(plan.sparkSession):
+    with state_sized(plan.sparkSession, staged_dir):
         q = (
             plan.writeStream.format("memory")
             .queryName(name)
@@ -142,7 +207,7 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle) exactly."""
     staged = stage_events_dir(spark, sf_dir)
     sdf = events_stream(spark, staged).withWatermark("ts", "1 hour")
-    return run_to_memory(tumbling_agg_plan(sdf), "complete")
+    return run_to_memory(tumbling_agg_plan(sdf), "complete", staged_dir=staged)
 
 
 def upsert_foreach_batch(target_dir: str):
@@ -214,7 +279,7 @@ def stateful_user_counts(spark: SparkSession, staged_dir: str, checkpoint: str) 
 
     capture_dir = checkpoint.rstrip("/") + "_capture"
 
-    with state_sized(counts.sparkSession):
+    with state_sized(counts.sparkSession, staged_dir):
         q = (
             counts.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
             .outputMode("update")
@@ -290,12 +355,7 @@ def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -
 
     n = 20  # CCI_NDAYS; literal so the closure stays self-contained
 
-    schema = spark.read.parquet(staged_dir).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-    )
+    sdf = events_stream(spark, staged_dir, maxFilesPerTrigger=1)
 
     out_schema = T.StructType([
         T.StructField("symbol", T.StringType()),
@@ -347,7 +407,7 @@ def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -
     # per-key version resolution needed, just drop the batch tag.
     capture_dir = checkpoint.rstrip("/") + "_capture"
 
-    with state_sized(plan.sparkSession):
+    with state_sized(plan.sparkSession, staged_dir):
         q = (
             plan.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
             .outputMode("update")
@@ -388,7 +448,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 6).alias("value"),
         )
     )
-    return run_to_memory(sdf, "append")
+    return run_to_memory(sdf, "append", staged_dir=staged)
 
 
 ATTRIB_GAP_HOURS = 6
@@ -466,7 +526,9 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = events_stream(spark, staged).filter(
         F.col("event_type") == "click"
     ).withWatermark("ts", f"{ATTRIB_GAP_HOURS + 1} hours")
-    return run_to_memory(attribution_join_plan(purchases, clicks), "append")
+    return run_to_memory(
+        attribution_join_plan(purchases, clicks), "append", staged_dir=staged
+    )
 
 
 def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +579,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_value_sum().alias("sum_value"),
         )
     )
-    return run_to_memory(plan, output_mode="complete")
+    return run_to_memory(plan, output_mode="complete", staged_dir=staged)
 
 
 def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,7 +599,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         sdf = events_stream(spark, staged, maxFilesPerTrigger=2)
         doubled = sdf.unionByName(sdf)  # at-least-once: every row twice
-        with state_sized(spark):
+        with state_sized(spark, staged):
             q = (
                 doubled.writeStream.foreachBatch(upsert_foreach_batch(target))
                 .trigger(availableNow=True)
@@ -653,7 +715,10 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
     prev = spark.conf.get(provider_key, None)
     spark.conf.set(provider_key, rocksdb)
     try:
-        log = run_to_memory(updates, output_mode="append", checkpoint=checkpoint)
+        log = run_to_memory(
+            updates, output_mode="append", checkpoint=checkpoint,
+            staged_dir=staged_dir,
+        )
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
@@ -738,7 +803,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events", "sum_value",
         )
     )
-    out = run_to_memory(plan, "append")
+    out = run_to_memory(plan, "append", staged_dir=staged)
     return out.filter(F.col("user_id") != SENTINEL_USER)
 
 
@@ -874,7 +939,7 @@ def stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failure mode). SENTINEL_USER is reserved + staging-asserted, so
     # this strip can never touch a legitimate (even negative) key.
     plan = outer_attribution_join_plan(purchases, clicks)
-    return run_to_memory(plan, "append").filter(
+    return run_to_memory(plan, "append", staged_dir=staged).filter(
         F.col("user_id") != SENTINEL_USER
     )
 
@@ -908,12 +973,7 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.corpus import cms_cells
 
     staged = stage_documents_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
     run_id = uuid.uuid4().hex[:10]
     target = os.path.join(STAGE_ROOT, f"cms_cells_{run_id}")
 
@@ -994,14 +1054,9 @@ def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = stage_brand_purchases_dir(spark, sf_dir)
     ref_date = (
-        spark.read.parquet(staged).agg(F.max("dt").alias("rd")).first()["rd"]
+        read_staged(spark, staged).agg(F.max("dt").alias("rd")).first()["rd"]
     )
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
     run_id = uuid.uuid4().hex[:10]
     target = os.path.join(STAGE_ROOT, f"decpop_cells_{run_id}")
 
@@ -1088,12 +1143,7 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import tokens, word_ngrams
 
     staged = stage_documents_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
     run_id = uuid.uuid4().hex[:10]
     target = os.path.join(STAGE_ROOT, f"hll_regs_{run_id}")
 
@@ -1118,7 +1168,7 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.pow(F.lit(2.0), -F.col("r"))).alias("zp"),
     )
     exact = (
-        spark.read.parquet(staged)
+        read_staged(spark, staged)
         .select(F.explode(word_ngrams(tokens(F.col("text")), 3)).alias("t"))
         .agg(F.count_distinct("t").cast("long").alias("n_exact"))
     )
@@ -1178,12 +1228,7 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups| rows; the view log holds #batches bounded snapshots and a
     reader always hits exactly one version directory."""
     staged = stage_orders_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
     run_id = uuid.uuid4().hex[:10]
     view_root = os.path.join(STAGE_ROOT, f"ivm_view_{run_id}")
 
@@ -1277,12 +1322,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.analytics import QSK_CAP
 
     staged = stage_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
     run_id = uuid.uuid4().hex[:10]
     target = os.path.join(STAGE_ROOT, f"qsk_log_{run_id}")
 
@@ -1364,7 +1404,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             for q in qs
         ]
     )
-    ev = spark.read.parquet(staged)
+    ev = read_staged(spark, staged)
     audit = (
         ev.join(F.broadcast(ests), "event_type")
         .groupBy("event_type")
@@ -1431,7 +1471,7 @@ def _frozen_edge_stream_hist(
     from ..plans.events import PSI_SPLIT_DAY
 
     staged = stage_events_dir(spark, sf_dir)
-    ref_all = spark.read.parquet(staged).select(
+    ref_all = read_staged(spark, staged).select(
         "event_type", "value", F.dayofmonth("ts").alias("dom")
     )
     base = ref_all.where(F.col("dom") <= PSI_SPLIT_DAY)
@@ -1472,12 +1512,7 @@ def _frozen_edge_stream_hist(
     )
     ref_hist.persist().count()  # freeze the reference once (train-time)
 
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         delta = hist(

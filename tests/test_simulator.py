@@ -129,6 +129,16 @@ def test_small_cci_runs_the_kernel_in_one_task(spark):
     assert tasks == 1
 
 
+def test_python_warm_up_runs_one_task_per_core(spark):
+    """The timing tools' Python-worker warm-up forks one worker per core:
+    it runs one mapInPandas task per core, with no shuffle for AQE to
+    coalesce into a single task."""
+    from bench import warm_python_workers
+
+    _, tasks = run_tasks(spark, lambda: warm_python_workers(spark))
+    assert tasks == spark.sparkContext.defaultParallelism
+
+
 def test_larger_cci_keeps_parallelism(spark):
     """The sizing goes the other way too: at SF_MED the cached cci keeps
     more than one partition, so the kernel's Python stage still runs in

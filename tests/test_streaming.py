@@ -2,7 +2,9 @@
 - watermark append mode withholds exactly the windows not yet closed;
 - two-phase incremental ingestion through a foreachBatch MERGE equals the
   one-shot batch result (T2/T3);
-- applyInPandasWithState carries state across micro-batches (T6).
+- applyInPandasWithState carries state across micro-batches (T6);
+- a stream's state partitions are sized by its staged bytes, and its
+  result does not depend on that count.
 """
 
 from __future__ import annotations
@@ -11,9 +13,14 @@ import glob
 import os
 import shutil
 import tempfile
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
+from ccirecommenderdatapipeline_spark import plans
+from ccirecommenderdatapipeline_spark.session import build_jobs
 from ccirecommenderdatapipeline_spark.sources.tables import load_table
 from ccirecommenderdatapipeline_spark.streaming.jobs import (
     events_stream,
@@ -30,7 +37,9 @@ from tests.conftest import SF_SMALL
 def test_watermark_append_withholds_open_windows(spark):
     staged = stage_events_dir(spark, SF_SMALL)
     sdf = events_stream(spark, staged).withWatermark("ts", "1 hour")
-    appended = run_to_memory(tumbling_agg_plan(sdf), "append").toPandas()
+    appended = run_to_memory(
+        tumbling_agg_plan(sdf), "append", staged_dir=staged
+    ).toPandas()
 
     batch = tumbling_agg_plan(load_table(spark, SF_SMALL, "events")).toPandas()
     max_us = load_table(spark, SF_SMALL, "events").agg(
@@ -244,3 +253,85 @@ def test_stream_outer_join_equals_batch_left_join(spark):
     assert want.exceptAll(got).count() == 0
     # the semantic the inner join never exercises: null-extended rows exist
     assert got.filter(F.col("click_id").isNull()).count() > 0
+
+
+def test_warm_staged_stream_build_runs_no_spark_job(spark):
+    """A staged dir's schema is memoized per snapshot of the dir, so only
+    the first stream built over it runs Spark's schema-inference job."""
+    staged = stage_events_dir(spark, SF_SMALL)
+    events_stream(spark, staged)
+    _, jobs = build_jobs(spark, lambda: events_stream(spark, staged))
+    assert jobs == 0
+
+
+MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+class _StatePartitions(StreamingQueryListener):
+    """The numShufflePartitions of every state operator in every progress
+    event the session's streams report."""
+
+    def __init__(self):
+        self.seen = set()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.seen.update(
+            op.numShufflePartitions for op in event.progress.stateOperators
+        )
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _run_stream(spark, name, min_partition_size=None):
+    """Registered stream ``name`` at SF_SMALL: its result rows as a
+    multiset and the state partition counts its progress reported, with
+    the partition floor lowered to ``min_partition_size`` if given."""
+    listener = _StatePartitions()
+    prev = spark.conf.get(MIN_PARTITION_SIZE)
+    spark.streams.addListener(listener)
+    try:
+        if min_partition_size is not None:
+            spark.conf.set(MIN_PARTITION_SIZE, min_partition_size)
+        rows = Counter(map(tuple, plans.QUERIES[name](spark, SF_SMALL).collect()))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.conf.set(MIN_PARTITION_SIZE, prev)
+        spark.streams.removeListener(listener)
+    return rows, listener.seen
+
+
+def test_state_partitions_sized_by_staged_bytes(spark):
+    """Staged events at SF_SMALL are ~31 KB, under the 1 MB partition
+    floor, so the state is one partition; a lowered floor raises the
+    count up to the shuffle-partition ceiling, and the session's shuffle
+    partitions are left as they were."""
+    ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if ceiling < 2:
+        pytest.skip("a one-partition ceiling allows only one state partition")
+    _, seen = _run_stream(spark, "stream_tumbling_agg")
+    assert seen == {1}
+    _, seen = _run_stream(spark, "stream_tumbling_agg", "4k")
+    assert len(seen) == 1 and 1 < seen.pop() <= ceiling
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == ceiling
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_tumbling_agg", "stream_stateful_counts", "stream_outer_join"]
+)
+def test_stream_result_does_not_depend_on_state_partitions(spark, name):
+    """The same rows at one state partition and at several."""
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) < 2:
+        pytest.skip("a one-partition ceiling allows only one state partition")
+    one, seen_one = _run_stream(spark, name)
+    many, seen_many = _run_stream(spark, name, "4k")
+    assert seen_one == {1}
+    assert min(seen_many) > 1
+    assert sum(one.values()) > 0
+    assert one == many
