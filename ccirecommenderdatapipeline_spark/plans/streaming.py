@@ -1,6 +1,7 @@
 """Event-time window queries over ``events`` — batch forms (oracle-backed)
-plus the real Structured Streaming pipeline whose availableNow/complete run
-must equal the batch oracle exactly (SURVEY.md §2.9).
+plus the real Structured Streaming jobs, registered straight from
+``streaming/jobs.py``, whose availableNow runs must equal the batch
+oracle exactly (SURVEY.md §2.9).
 
 Window keys are epoch microseconds (see streaming/jobs.py docstring);
 ``sum_value`` uses the exact DECIMAL trick so grouped double sums are
@@ -12,10 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources.tables import load_table
+from ..streaming import jobs
 from ..streaming.jobs import (
+    ATTRIB_GAP_HOURS,
     GAP_US,
+    attribution_join_plan,
     exact_value_sum,
-    stream_tumbling_agg,
     tumbling_agg_plan,
 )
 from .registry import query
@@ -42,13 +45,7 @@ def q_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_agg_plan(load_table(spark, sf_dir, "events"))
 
 
-@query("stream_tumbling_agg", oracle=TUMBLING_ORACLE)
-def q_stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL streaming run: parquet file source -> watermark -> tumbling
-    agg -> trigger(availableNow) -> memory sink, then compared against the
-    same DuckDB oracle as the batch form — complete mode retains every
-    window, so stream == batch == oracle."""
-    return stream_tumbling_agg(spark, sf_dir)
+query("stream_tumbling_agg", oracle=TUMBLING_ORACLE)(jobs.stream_tumbling_agg)
 
 
 @query(
@@ -196,13 +193,6 @@ def q_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stream-stream join + watermark dedup ------------------------------------
 
-from ..streaming.jobs import (  # noqa: E402
-    ATTRIB_GAP_HOURS,
-    attribution_join_plan,
-    stream_dedup_watermark,
-    stream_stream_attribution,
-)
-
 ATTRIB_ORACLE = f"""
 SELECT p.event_id AS purchase_id,
        c.event_id AS click_id,
@@ -229,16 +219,9 @@ def q_interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("stream_stream_join", oracle=ATTRIB_ORACLE)
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE stream-stream inner join (two watermarked streams, user key +
-    event-time range condition) — the join-state expiry pattern that runs
-    unbounded at scale. availableNow = one micro-batch, so the streamed
-    result equals the batch interval join and its oracle exactly."""
-    return stream_stream_attribution(spark, sf_dir)
+query("stream_stream_join", oracle=ATTRIB_ORACLE)(jobs.stream_stream_attribution)
 
-
-@query(
+query(
     "stream_dedup_watermark",
     oracle="""
 SELECT DISTINCT event_id, user_id, event_type,
@@ -246,33 +229,17 @@ SELECT DISTINCT event_id, user_id, event_type,
        round(value, 6) AS value
 FROM events
 """,
-)
-def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dropDuplicatesWithinWatermark over an at-least-once (doubled)
-    delivery stream: dedup state bounded by the watermark horizon instead
-    of full history. Every row is delivered twice in the staged source;
-    the oracle is plain DISTINCT over the original table."""
-    return stream_dedup_watermark(spark, sf_dir)
+)(jobs.stream_dedup_watermark)
 
-
-@query(
+query(
     "stream_stateful_counts",
     oracle="""
 SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
 FROM events GROUP BY user_id
 """,
-)
-def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState, T6):
-    running per-user counts carried in GroupState across 4 forced
-    micro-batches; the returned final state must equal the batch GROUP BY
-    exactly — state survival across batches is what the oracle proves."""
-    from ..streaming.jobs import stream_stateful_counts
+)(jobs.stream_stateful_counts)
 
-    return stream_stateful_counts(spark, sf_dir)
-
-
-@query(
+query(
     "stream_tws_user_stats",
     oracle="""
 SELECT user_id,
@@ -281,29 +248,9 @@ SELECT user_id,
        CAST(MAX(epoch_us(ts)) AS BIGINT) AS max_ts_us
 FROM events GROUP BY user_id
 """,
-)
-def _q_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4's transformWithStateInPandas (the arbitrary-state successor
-    to applyInPandasWithState): per-user running (count, exact value sum,
-    max ts) in a ValueState across 4 forced micro-batches. Values are
-    scaled to int64 micro-units in the PLAN (decimal-exact) before Python,
-    so pandas-side accumulation is integer arithmetic; the final state
-    must equal the batch GROUP BY cell-for-cell.
+)(jobs.stream_tws_user_stats)
 
-    Registered UNCONDITIONALLY since r11: ensure_protobuf() prefers a
-    native google.protobuf and otherwise ships the repo's vendored
-    pure-Python wire-format shim (vendor/protobuf_shim) to the driver
-    and — via sc.addPyFile — to every Python worker, closing the one
-    §2.10-adjacent surface that had no driver verdict (VERDICT r10
-    item 3)."""
-    from ..streaming.jobs import stream_tws_user_stats
-    from ..streaming.protobuf_compat import ensure_protobuf
-
-    ensure_protobuf(spark)
-    return stream_tws_user_stats(spark, sf_dir)
-
-
-@query(
+query(
     "stream_static_join",
     oracle=f"""
 WITH users AS (
@@ -319,18 +266,9 @@ SELECT u.segment,
 FROM events e JOIN users u ON u.user_id = e.user_id
 GROUP BY u.segment
 """,
-)
-def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static join (stateless enrichment): the event stream joins a
-    batch-computed user-segment dim inside the streaming plan, then
-    aggregates per segment in complete mode — result must equal the pure
-    batch join byte-for-byte."""
-    from ..streaming.jobs import stream_static_join
+)(jobs.stream_static_join)
 
-    return stream_static_join(spark, sf_dir)
-
-
-@query(
+query(
     "stream_merge_upsert",
     oracle=f"""
 SELECT event_type,
@@ -338,34 +276,14 @@ SELECT event_type,
        {_SUM_SQL} AS sum_value
 FROM events GROUP BY event_type
 """,
-)
-def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch MERGE sink under at-least-once delivery: every event
-    arrives twice across micro-batches, the append-log + keep-max-batch
-    reader collapses keys, and the final per-type rollup must equal the
-    exactly-once batch aggregate — upsert idempotence as a driver-checked
-    value equality, not just a test."""
-    from ..streaming.jobs import stream_merge_upsert
-
-    return stream_merge_upsert(spark, sf_dir)
+)(jobs.stream_merge_upsert)
 
 
 from .registry import ORACLES as _ORACLES  # noqa: E402
 
-
-@query("stream_session_agg", oracle=_ORACLES["session_window_builtin"])
-def q_stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-family extension: NATIVE session windows running as a REAL stream
-    in APPEND mode — each session emitted exactly once when the watermark
-    passes its end (the production emission contract, vs the complete-mode
-    retention the tumbling query uses). A far-future sentinel batch
-    advances the watermark past the tail sessions so the bounded fixture
-    flushes completely; result == the batch session_window_builtin ==
-    its DuckDB oracle, row for row. See streaming/jobs.py:
-    stream_session_agg."""
-    from ..streaming.jobs import stream_session_agg
-
-    return stream_session_agg(spark, sf_dir)
+query("stream_session_agg", oracle=_ORACLES["session_window_builtin"])(
+    jobs.stream_session_agg
+)
 
 
 OUTER_ATTRIB_ORACLE = f"""
@@ -382,88 +300,27 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
 """
 
 
-@query("stream_outer_join", oracle=OUTER_ATTRIB_ORACLE)
-def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join (T-family): unmatched
-    purchases are emitted null-extended ONLY when the global watermark
-    proves no matching click can arrive — the state-expiry semantic the
-    inner ``stream_stream_join`` never exercises, and the reason outer
-    stream joins REQUIRE watermarks at all. A sentinel batch pushes the
-    watermark past every real event so availableNow equals the batch LEFT
-    JOIN row-for-row (the driver hashes the streamed result against the
-    batch oracle)."""
-    from ..streaming.jobs import stream_outer_attribution
-
-    return stream_outer_attribution(spark, sf_dir)
+query("stream_outer_join", oracle=OUTER_ATTRIB_ORACLE)(jobs.stream_outer_attribution)
 
 
-from .corpus import CMS_SKETCH_CTES  # noqa: E402
+from .corpus import CMS_SKETCH_CTES, HLL_DISTINCT_ORACLE  # noqa: E402
 
-
-@query(
+query(
     "stream_cms_merge",
     oracle="WITH " + CMS_SKETCH_CTES + "\nSELECT d, pos, c FROM sketch",
-)
-def q_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Count-Min sketch: per-micro-batch partial cell tables,
-    cell-wise additive merge; equals the batch sketch exactly (see
-    streaming/jobs.py:stream_cms_merge)."""
-    from ..streaming.jobs import stream_cms_merge
+)(jobs.stream_cms_merge)
 
-    return stream_cms_merge(spark, sf_dir)
-
-
+# imported after stream_cms_merge registers, which keeps the registry order
+from .analytics import QSK_ORACLE  # noqa: E402
 from .recommender import DECAYED_POP_ORACLE  # noqa: E402
-
-
-@query("stream_decayed_popularity", oracle=DECAYED_POP_ORACLE)
-def q_stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming decayed popularity: per-micro-batch partial dyadic
-    scores merged brand-wise; equals the batch op exactly (see
-    streaming/jobs.py:stream_decayed_popularity)."""
-    from ..streaming.jobs import stream_decayed_popularity
-
-    return stream_decayed_popularity(spark, sf_dir)
-
-
-from .corpus import HLL_DISTINCT_ORACLE  # noqa: E402
-
-
-@query("stream_hll_merge", oracle=HLL_DISTINCT_ORACLE)
-def q_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HLL: per-micro-batch partial registers merged by MAX;
-    equals the batch sketch exactly (see streaming/jobs.py:
-    stream_hll_merge — idempotent merge, replay-safe)."""
-    from ..streaming.jobs import stream_hll_merge
-
-    return stream_hll_merge(spark, sf_dir)
-
-
 from .storage import IVM_AGG_ORACLE  # noqa: E402
 
-
-@query("stream_ivm_aggregate", oracle=IVM_AGG_ORACLE)
-def q_stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming IVM: the ivm_aggregate_merge view maintained across
-    micro-batches as versioned parquet snapshots, merged by re-aggregating
-    bounded group-grain partials; the final version equals the full
-    recompute (see streaming/jobs.py:stream_ivm_aggregate)."""
-    from ..streaming.jobs import stream_ivm_aggregate
-
-    return stream_ivm_aggregate(spark, sf_dir)
-
-
-from .analytics import QSK_ORACLE  # noqa: E402
-
-
-@query("stream_quantile_sketch", oracle=QSK_ORACLE)
-def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming mergeable quantile summary: per-micro-batch weighted
-    sample sets union-merged across batches, rank-error bound asserted
-    against exact ranks (see streaming/jobs.py:stream_quantile_sketch)."""
-    from ..streaming.jobs import stream_quantile_sketch
-
-    return stream_quantile_sketch(spark, sf_dir)
+query("stream_decayed_popularity", oracle=DECAYED_POP_ORACLE)(
+    jobs.stream_decayed_popularity
+)
+query("stream_hll_merge", oracle=HLL_DISTINCT_ORACLE)(jobs.stream_hll_merge)
+query("stream_ivm_aggregate", oracle=IVM_AGG_ORACLE)(jobs.stream_ivm_aggregate)
+query("stream_quantile_sketch", oracle=QSK_ORACLE)(jobs.stream_quantile_sketch)
 
 
 from .events import PSI_BINS, PSI_SPLIT_DAY  # noqa: E402
@@ -583,26 +440,6 @@ GROUP BY 1, 2, 3
 """
 
 
-@query("stream_ks_drift", oracle=STREAM_KS_ORACLE)
-def q_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming binned two-sample KS drift gate: frozen bin edges +
-    reference histogram from the base slice, serving traffic additively
-    merged per micro-batch into the shared (type, bin) view, readout =
-    per-type sup of the binned ECDF gap (see
-    streaming/jobs.py:stream_ks_drift). Completes the drift-gate pair
-    with ``stream_psi_drift``."""
-    from ..streaming.jobs import stream_ks_drift
+query("stream_ks_drift", oracle=STREAM_KS_ORACLE)(jobs.stream_ks_drift)
+query("stream_psi_drift", oracle=STREAM_PSI_ORACLE)(jobs.stream_psi_drift)
 
-    return stream_ks_drift(spark, sf_dir)
-
-
-@query("stream_psi_drift", oracle=STREAM_PSI_ORACLE)
-def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI drift gate: reference histogram + bin edges frozen
-    from the base slice at train time, serving traffic binned per
-    micro-batch against the frozen edges and additively merged into a
-    versioned histogram view; the readout equals the batch recompute
-    with frozen-edge semantics (see streaming/jobs.py:stream_psi_drift)."""
-    from ..streaming.jobs import stream_psi_drift
-
-    return stream_psi_drift(spark, sf_dir)

@@ -17,7 +17,9 @@ result.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -154,50 +156,62 @@ def state_partitions(spark: SparkSession, staged_dir: str) -> int:
     return min(ceiling, max(1, -(-_staged_bytes(staged_dir) // floor)))
 
 
-class state_sized:
-    """Context manager: run a streaming job over ``staged_dir`` with its
-    state partitions sized by the dir's bytes, restoring the session's
-    shuffle partitions afterwards. Safe here because jobs run sequentially
-    per session; a concurrent harness would set this per-job via its
-    scheduler instead."""
-
-    def __init__(self, spark: SparkSession, staged_dir: str):
-        self.spark = spark
-        self.n = state_partitions(spark, staged_dir)
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
-def run_to_memory(
+def run_stream(
     plan: DataFrame,
-    output_mode: str = "complete",
-    checkpoint: str | None = None,
-    *,
     staged_dir: str,
-) -> DataFrame:
-    """Execute a streaming plan over ``staged_dir`` with
-    trigger(availableNow) into a memory sink, its state sized by that
-    dir's bytes; blocks until all staged data is processed and returns the
-    result table as a batch DataFrame."""
-    name = f"strm_{uuid.uuid4().hex[:10]}"
-    with state_sized(plan.sparkSession, staged_dir):
-        q = (
-            plan.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint or os.path.join(STAGE_ROOT, "ckpt", name))
-            .start()
-        )
-        q.awaitTermination()
-    return plan.sparkSession.table(name)
+    *,
+    foreach_batch=None,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """The one way a stream over ``staged_dir`` runs here: its state
+    sized by that dir's bytes (the rule above; the session's shuffle
+    partitions are restored after), trigger(availableNow), blocking
+    until every staged file is processed. Safe because streams run
+    sequentially per session.
+
+    Without ``foreach_batch`` the rows go to a memory sink and come back
+    as a batch DataFrame; the sink's temp view is dropped once that
+    DataFrame is analyzed (the plan keeps the rows). With
+    ``foreach_batch`` each micro-batch goes to that function, nothing is
+    returned, and the caller reads its own target dir. A checkpoint the
+    runner creates lives under ``STAGE_ROOT/ckpt`` and is deleted when
+    the stream ends; a ``checkpoint`` passed in is kept, so a second run
+    over it resumes where the first stopped."""
+    spark = plan.sparkSession
+    writer = plan.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if foreach_batch is None:
+        name = f"strm_{uuid.uuid4().hex[:10]}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    if checkpoint is None:
+        root = os.path.join(STAGE_ROOT, "ckpt")
+        os.makedirs(root, exist_ok=True)
+        ckpt = tempfile.TemporaryDirectory(dir=root, ignore_cleanup_errors=True)
+    else:
+        ckpt = contextlib.nullcontext(checkpoint)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(state_partitions(spark, staged_dir))
+    )
+    try:
+        with ckpt as location:
+            writer.option("checkpointLocation", location).start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if foreach_batch is not None:
+        return None
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def _run_dir(kind: str) -> str:
+    """A fresh dir path under ``STAGE_ROOT`` for one call's foreachBatch
+    target or capture; it outlives the call, since the returned
+    DataFrame reads it lazily."""
+    return os.path.join(STAGE_ROOT, f"{kind}_{uuid.uuid4().hex[:10]}")
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,7 +221,7 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle) exactly."""
     staged = stage_events_dir(spark, sf_dir)
     sdf = events_stream(spark, staged).withWatermark("ts", "1 hour")
-    return run_to_memory(tumbling_agg_plan(sdf), "complete", staged_dir=staged)
+    return run_stream(tumbling_agg_plan(sdf), staged, output_mode="complete")
 
 
 def upsert_foreach_batch(target_dir: str):
@@ -240,7 +254,9 @@ def read_upsert_target(spark: SparkSession, target_dir: str, key: str = "event_i
     )
 
 
-def stateful_user_counts(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
+def stateful_user_counts(
+    spark: SparkSession, staged_dir: str, checkpoint: str | None = None
+) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: a running
     per-user event count carried in GroupState across micro-batches
     (maxFilesPerTrigger=1 forces one batch per staged file). Returns the
@@ -277,17 +293,11 @@ def stateful_user_counts(spark: SparkSession, staged_dir: str, checkpoint: str) 
         )
     )
 
-    capture_dir = checkpoint.rstrip("/") + "_capture"
-
-    with state_sized(counts.sparkSession, staged_dir):
-        q = (
-            counts.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
+    capture_dir = _run_dir("counts_capture")
+    run_stream(
+        counts, staged_dir, foreach_batch=upsert_foreach_batch(capture_dir),
+        output_mode="update", checkpoint=checkpoint,
+    )
     return read_upsert_target(spark, capture_dir, key="user_id").select(
         "user_id", "n_events"
     )
@@ -341,7 +351,9 @@ def stage_price_batches(spark: SparkSession, sf_dir: str, n_batches: int = 3) ->
     return staged(STAGE_ROOT, f"price_batches_{n_batches}", sf_dir, write)
 
 
-def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
+def stateful_cci_stream(
+    spark: SparkSession, staged_dir: str, checkpoint: str | None = None
+) -> DataFrame:
     """T6 as TRUE streaming: the rolling CCI indicator computed over
     arriving price batches with applyInPandasWithState — per-symbol state
     carries the last n-1 typical prices, so each micro-batch extends the
@@ -405,17 +417,11 @@ def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -
     # (symbol, date) row is yielded in exactly the micro-batch its date
     # arrives in, so the union of batch appends IS the full output — no
     # per-key version resolution needed, just drop the batch tag.
-    capture_dir = checkpoint.rstrip("/") + "_capture"
-
-    with state_sized(plan.sparkSession, staged_dir):
-        q = (
-            plan.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
+    capture_dir = _run_dir("cci_capture")
+    run_stream(
+        plan, staged_dir, foreach_batch=upsert_foreach_batch(capture_dir),
+        output_mode="update", checkpoint=checkpoint,
+    )
     return spark.read.parquet(capture_dir).drop("__batch_id")
 
 
@@ -448,7 +454,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 6).alias("value"),
         )
     )
-    return run_to_memory(sdf, "append", staged_dir=staged)
+    return run_stream(sdf, staged)
 
 
 ATTRIB_GAP_HOURS = 6
@@ -526,9 +532,7 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = events_stream(spark, staged).filter(
         F.col("event_type") == "click"
     ).withWatermark("ts", f"{ATTRIB_GAP_HOURS + 1} hours")
-    return run_to_memory(
-        attribution_join_plan(purchases, clicks), "append", staged_dir=staged
-    )
+    return run_stream(attribution_join_plan(purchases, clicks), staged)
 
 
 def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,11 +543,7 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     to micro-batch boundaries — so the plain batch GROUP BY is an exact
     oracle for the stateful streaming execution. The capture dir outlives
     the call (the returned DataFrame reads it lazily)."""
-    import tempfile
-
-    staged = stage_events_dir(spark, sf_dir)
-    checkpoint = tempfile.mkdtemp(prefix="stateful_counts_ckpt_")
-    final = stateful_user_counts(spark, staged, checkpoint)
+    final = stateful_user_counts(spark, stage_events_dir(spark, sf_dir))
     return final.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("n_events").cast("long").alias("n_events"),
@@ -579,7 +579,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_value_sum().alias("sum_value"),
         )
     )
-    return run_to_memory(plan, output_mode="complete", staged_dir=staged)
+    return run_stream(plan, staged, output_mode="complete")
 
 
 def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -591,22 +591,13 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-last tie among them cannot change values, and the final view must
     equal the single-copy batch table exactly."""
     import shutil
-    import tempfile
 
     staged = stage_events_dir(spark, sf_dir)
-    target = tempfile.mkdtemp(prefix="merge_upsert_target_")
-    ckpt = tempfile.mkdtemp(prefix="merge_upsert_ckpt_")
+    target = _run_dir("merge_upsert_target")
     try:
         sdf = events_stream(spark, staged, maxFilesPerTrigger=2)
         doubled = sdf.unionByName(sdf)  # at-least-once: every row twice
-        with state_sized(spark, staged):
-            q = (
-                doubled.writeStream.foreachBatch(upsert_foreach_batch(target))
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        run_stream(doubled, staged, foreach_batch=upsert_foreach_batch(target))
         final = read_upsert_target(spark, target, key="event_id")
         return (
             final.groupBy("event_type")
@@ -614,15 +605,16 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n_events"),
                 exact_value_sum().alias("sum_value"),
             )
-            # collect before the tmp dirs vanish: tiny (5 rows)
+            # collect before the target dir vanishes: tiny (5 rows)
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(target, ignore_errors=True)
 
 
-def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
+def tws_user_stats(
+    spark: SparkSession, staged_dir: str, checkpoint: str | None = None
+) -> DataFrame:
     """Custom stateful operator via transformWithStateInPandas (Spark 4's
     arbitrary-state API, successor to applyInPandasWithState): per-user
     running (n_events, exact micro-unit value sum, max event ts) carried in
@@ -715,10 +707,7 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
     prev = spark.conf.get(provider_key, None)
     spark.conf.set(provider_key, rocksdb)
     try:
-        log = run_to_memory(
-            updates, output_mode="append", checkpoint=checkpoint,
-            staged_dir=staged_dir,
-        )
+        log = run_stream(updates, staged_dir, checkpoint=checkpoint)
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
@@ -740,15 +729,7 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
 
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered-query form of ``tws_user_stats``."""
-    import shutil
-    import tempfile
-
-    staged = stage_events_dir(spark, sf_dir)
-    checkpoint = tempfile.mkdtemp(prefix="tws_stats_ckpt_")
-    try:
-        return tws_user_stats(spark, staged, checkpoint)
-    finally:
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    return tws_user_stats(spark, stage_events_dir(spark, sf_dir))
 
 
 def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
@@ -803,7 +784,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events", "sum_value",
         )
     )
-    out = run_to_memory(plan, "append", staged_dir=staged)
+    out = run_stream(plan, staged)
     return out.filter(F.col("user_id") != SENTINEL_USER)
 
 
@@ -939,7 +920,7 @@ def stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failure mode). SENTINEL_USER is reserved + staging-asserted, so
     # this strip can never touch a legitimate (even negative) key.
     plan = outer_attribution_join_plan(purchases, clicks)
-    return run_to_memory(plan, "append", staged_dir=staged).filter(
+    return run_stream(plan, staged).filter(
         F.col("user_id") != SENTINEL_USER
     )
 
@@ -974,8 +955,7 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = stage_documents_dir(spark, sf_dir)
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"cms_cells_{run_id}")
+    target = _run_dir("cms_cells")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -986,16 +966,7 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"cms_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, staged, foreach_batch=write_batch)
     return (
         spark.read.parquet(target)
         .groupBy("d", "pos")
@@ -1057,8 +1028,7 @@ def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged).agg(F.max("dt").alias("rd")).first()["rd"]
     )
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"decpop_cells_{run_id}")
+    target = _run_dir("decpop_cells")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         k = F.least(
@@ -1084,16 +1054,7 @@ def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"decpop_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, staged, foreach_batch=write_batch)
     agg = (
         spark.read.parquet(target)
         .groupBy("brand")
@@ -1144,22 +1105,12 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = stage_documents_dir(spark, sf_dir)
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"hll_regs_{run_id}")
+    target = _run_dir("hll_regs")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         hll_regs(batch_df).write.mode("append").parquet(target)
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"hll_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, staged, foreach_batch=write_batch)
     regs = (
         spark.read.parquet(target).groupBy("bucket").agg(F.max("r").alias("r"))
     )
@@ -1188,6 +1139,48 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def maintain_view(
+    sdf: DataFrame, staged_dir: str, kind: str, delta, keys: list
+) -> DataFrame:
+    """Stream ``sdf`` into an additively merged, versioned view and
+    return its latest version. Each micro-batch's ``delta(batch_df)``
+    partials are summed per ``keys`` with the previous version (every
+    other column summed and cast back to its own type) and written as
+    version v{batch_id}: the view is queryable at every batch and no
+    batch rescans history. Replay-safe: v{b} is a deterministic
+    function of v{b-1} and batch b's rows, so a redelivered batch
+    rewrites the same bytes (mode overwrite)."""
+    view_root = _run_dir(f"{kind}_view")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        merged = delta(batch_df)
+        prev = os.path.join(view_root, f"v{batch_id - 1}")
+        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
+            sums = [
+                F.sum(f.name).cast(f.dataType).alias(f.name)
+                for f in merged.schema.fields
+                if f.name not in keys
+            ]
+            merged = (
+                batch_df.sparkSession.read.parquet(prev)
+                .unionByName(merged)
+                .groupBy(*keys)
+                .agg(*sums)
+            )
+        merged.write.mode("overwrite").parquet(
+            os.path.join(view_root, f"v{batch_id}")
+        )
+
+    run_stream(sdf, staged_dir, foreach_batch=write_batch)
+    latest = max(
+        int(d[1:])
+        for d in os.listdir(view_root)
+        if d.startswith("v")
+        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
+    )
+    return sdf.sparkSession.read.parquet(os.path.join(view_root, f"v{latest}"))
+
+
 def stage_orders_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize the orders columns the IVM view aggregates as an
     n-file parquet dir for file-source streaming. Staged once per snapshot
@@ -1214,11 +1207,8 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanning history — and with availableNow over the staged files the
     final version equals the full recompute (the DuckDB oracle) exactly.
 
-    Replay safety: version v{b} is a DETERMINISTIC function of v{b-1} and
-    batch b's rows, so an at-least-once redelivery rewrites the same
-    bytes (mode overwrite) instead of double-counting — the same
-    idempotence argument as ``upsert_foreach_batch``'s (key, batch_id)
-    log. Merge exactness: counts are longs, money folds as
+    Replay safety: see ``maintain_view``. Merge exactness: counts are
+    longs, money folds as
     DECIMAL(18,2) — both commutative monoids, so partial-merge order
     cannot drift (the self-maintainability condition; a max/min view
     would need the row log on deletes).
@@ -1229,8 +1219,6 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader always hits exactly one version directory."""
     staged = stage_orders_dir(spark, sf_dir)
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
-    run_id = uuid.uuid4().hex[:10]
-    view_root = os.path.join(STAGE_ROOT, f"ivm_view_{run_id}")
 
     def part_agg(df: DataFrame) -> DataFrame:
         return (
@@ -1250,43 +1238,8 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = part_agg(batch_df)
-        prev = os.path.join(view_root, f"v{batch_id - 1}")
-        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
-            merged = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(delta)
-                .groupBy("month", "priority")
-                .agg(
-                    F.sum("n_part").cast("long").alias("n_part"),
-                    F.sum("rev_part").cast("decimal(18,2)").alias("rev_part"),
-                )
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(view_root, f"v{batch_id}")
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"ivm_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
-    versions = [
-        int(d[1:])
-        for d in os.listdir(view_root)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
-    ]
-    latest = os.path.join(view_root, f"v{max(versions)}")
-    return spark.read.parquet(latest).select(
+    view = maintain_view(sdf, staged, "ivm", part_agg, ["month", "priority"])
+    return view.select(
         "month",
         "priority",
         F.col("n_part").alias("n_orders"),
@@ -1323,8 +1276,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = stage_events_dir(spark, sf_dir)
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"qsk_log_{run_id}")
+    target = _run_dir("qsk_log")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -1357,16 +1309,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"qsk_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, staged, foreach_batch=write_batch)
 
     from pyspark.sql import Window
 
@@ -1505,8 +1448,6 @@ def _frozen_edge_stream_hist(
             .agg(F.count("*").cast("long").alias("c"))
         )
 
-    run_id = uuid.uuid4().hex[:10]
-    view_root = os.path.join(STAGE_ROOT, f"{tag}_view_{run_id}")
     ref_hist = hist(base).select(
         "event_type", "bin", F.col("c").alias("c_b")
     )
@@ -1514,43 +1455,12 @@ def _frozen_edge_stream_hist(
 
     sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = hist(
-            batch_df.where(F.dayofmonth("ts") > PSI_SPLIT_DAY)
-        ).select("event_type", "bin", F.col("c").alias("c_c"))
-        prev = os.path.join(view_root, f"v{batch_id - 1}")
-        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
-            merged = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(delta)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("c_c").cast("long").alias("c_c"))
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(view_root, f"v{batch_id}")
+    def serving_hist(batch_df: DataFrame) -> DataFrame:
+        return hist(batch_df.where(F.dayofmonth("ts") > PSI_SPLIT_DAY)).select(
+            "event_type", "bin", F.col("c").alias("c_c")
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"{tag}_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
-    versions = [
-        int(d[1:])
-        for d in os.listdir(view_root)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
-    ]
-    cur_hist = spark.read.parquet(
-        os.path.join(view_root, f"v{max(versions)}")
-    )
+    cur_hist = maintain_view(sdf, staged, tag, serving_hist, ["event_type", "bin"])
 
     # the persists existed to serve the per-batch foreachBatch joins; the
     # stream is drained, so release them before returning (the ml_minhash

@@ -757,6 +757,20 @@ def test_cc_converges_on_deep_path_graph(spark):
     }
 
 
+def test_stream_queries_carry_the_stream_prefix():
+    """tools/audit_plans.py skips streaming queries by their ``stream_``
+    prefix alone: every query registered straight from streaming/jobs.py
+    carries it, and the one other ``stream_`` query is the broker feed."""
+    from ccirecommenderdatapipeline_spark.streaming import jobs
+
+    from_jobs = {
+        name for name, fn in plans.QUERIES.items() if fn.__module__ == jobs.__name__
+    }
+    prefixed = {name for name in plans.QUERIES if name.startswith("stream_")}
+    assert from_jobs and all(name.startswith("stream_") for name in from_jobs)
+    assert prefixed - from_jobs == {"stream_execution_feed"}
+
+
 def test_registry_counts_documented():
     """VERDICT r6+r7 flagged hand-typed registry counts going stale in
     README.md/COVERAGE.md two rounds running. The counts are now

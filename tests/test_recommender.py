@@ -362,21 +362,6 @@ def test_ndcg_eval_bounds_and_perfect_lists(spark):
             assert r["hits_at_k"] == min(r["n_rel"], 5)
 
 
-def test_stream_decayed_popularity_equals_batch(spark):
-    """The streamed partial-merge result is row-identical to the batch
-    operator — dyadic additivity across micro-batches."""
-    from ccirecommenderdatapipeline_spark.plans.recommender import (
-        q_decayed_popularity,
-    )
-    from ccirecommenderdatapipeline_spark.streaming.jobs import (
-        stream_decayed_popularity,
-    )
-
-    batch = {tuple(r) for r in q_decayed_popularity(spark, SF_SMALL).collect()}
-    stream = {tuple(r) for r in stream_decayed_popularity(spark, SF_SMALL).collect()}
-    assert batch == stream
-
-
 def test_dp_noisy_counts_mechanism(spark):
     """Noise is reproducible from the documented md5 draw; noisy = true +
     noise exactly; |noise| magnitudes follow the Exp envelope loosely."""
@@ -634,17 +619,6 @@ def test_als_item_step_solves_normal_equations(spark):
         # residual of the normal equations at the reported solution
         assert abs(a11 * f1 + a12 * f2 - b1) < 1e-4 * max(1.0, abs(b1))
         assert abs(a12 * f1 + a22 * f2 - b2) < 1e-4 * max(1.0, abs(b2))
-
-
-def test_stream_hll_equals_batch(spark):
-    """Streamed register-MAX merge reproduces the batch HLL row exactly
-    (idempotent merge — replay-safe)."""
-    from ccirecommenderdatapipeline_spark.plans.corpus import q_hll_distinct
-    from ccirecommenderdatapipeline_spark.streaming.jobs import stream_hll_merge
-
-    batch = q_hll_distinct(spark, SF_SMALL).collect()
-    stream = stream_hll_merge(spark, SF_SMALL).collect()
-    assert [tuple(r) for r in batch] == [tuple(r) for r in stream]
 
 
 def test_quantile_normalize_equalizes_marginals(spark):

@@ -1,13 +1,7 @@
-"""Round-10 additions: streaming binned-KS drift gate, exact-substring
-span extraction."""
+"""Round-10 additions: exact-substring span extraction (the streaming
+binned-KS test lives in test_streaming.py)."""
 
 from __future__ import annotations
-
-import math
-
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_SMALL
 
 
 def _alpha(i: int) -> str:
@@ -125,63 +119,3 @@ def test_exact_substring_spans_property(spark):
         assert got == reference(docs), docs
 
     check()
-
-
-def test_stream_ks_drift_matches_python(spark):
-    """The streaming-maintained binned KS (frozen base-slice edges,
-    additive per-batch histogram merge) must equal a brute-force
-    single-pass recompute with the same frozen-edge semantics — and,
-    because the readout has no transcendental and no rounding rule,
-    the doubles must match EXACTLY, not approximately."""
-    from ccirecommenderdatapipeline_spark.plans.events import (
-        KS_BINS,
-        PSI_SPLIT_DAY,
-    )
-    from ccirecommenderdatapipeline_spark.streaming.jobs import (
-        stream_ks_drift,
-    )
-
-    got = {r["event_type"]: r for r in stream_ks_drift(spark, SF_SMALL).collect()}
-
-    ev = (
-        spark.read.parquet(f"{SF_SMALL}/events.parquet")
-        .select("event_type", "value", F.dayofmonth("ts").alias("dom"))
-        .collect()
-    )
-    base: dict[str, list[float]] = {}
-    cur: dict[str, list[float]] = {}
-    for r in ev:
-        (base if r["dom"] <= PSI_SPLIT_DAY else cur).setdefault(
-            r["event_type"], []
-        ).append(r["value"])
-    assert set(got) == set(base)  # types with frozen edges only
-    for et, b_vals in base.items():
-        lo, hi = min(b_vals), max(b_vals)
-
-        def bucket(v: float) -> int:
-            if hi == lo:
-                return 0
-            return min(
-                max(int(math.floor((v - lo) / (hi - lo) * KS_BINS)), 0),
-                KS_BINS - 1,
-            )
-
-        c_b = [0] * KS_BINS
-        c_c = [0] * KS_BINS
-        for v in b_vals:
-            c_b[bucket(v)] += 1
-        for v in cur.get(et, []):
-            c_c[bucket(v)] += 1
-        n_b, n_c = sum(c_b), sum(c_c)
-        ks, cum_b, cum_c = 0.0, 0, 0
-        for k in range(KS_BINS):
-            cum_b += c_b[k]
-            cum_c += c_c[k]
-            ks = max(ks, abs(cum_b / n_b - cum_c / n_c))
-        row = got[et]
-        assert row["n_base"] == n_b and row["n_current"] == n_c, et
-        if n_c > 0:
-            assert row["ks"] == ks, (et, row["ks"], ks)  # bit-exact
-            assert 0.0 <= row["ks"] <= 1.0, et
-        else:
-            assert row["ks"] is None, et

@@ -11,27 +11,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 
-def test_stream_ivm_equals_batch_view(spark):
-    """The streaming-maintained IVM view must equal the batch merge op
-    row-for-row (same algebra, different batching)."""
-    from ccirecommenderdatapipeline_spark.plans.storage import (
-        q_ivm_aggregate_merge,
-    )
-    from ccirecommenderdatapipeline_spark.streaming.jobs import (
-        stream_ivm_aggregate,
-    )
-
-    batch = {
-        (r["month"], r["priority"]): (r["n_orders"], r["revenue"])
-        for r in q_ivm_aggregate_merge(spark, SF_SMALL).collect()
-    }
-    stream = {
-        (r["month"], r["priority"]): (r["n_orders"], r["revenue"])
-        for r in stream_ivm_aggregate(spark, SF_SMALL).collect()
-    }
-    assert batch == stream and len(batch) > 0
-
-
 def test_weighted_median_matches_python(spark):
     """Two-phase weighted quantiles == brute-force weighted quantiles."""
     from ccirecommenderdatapipeline_spark.plans.analytics import (
@@ -314,19 +293,6 @@ def test_decile_lift_totals(spark):
     assert abs(rows[-1]["cum_lift"] - 1.0) < 1e-9
     caps = [r["cum_capture"] for r in rows]
     assert all(a <= b for a, b in zip(caps, caps[1:]))
-
-
-def test_stream_quantile_sketch_booleans(spark):
-    """All driver-checked bound booleans hold under real micro-batching."""
-    from ccirecommenderdatapipeline_spark.streaming.jobs import (
-        stream_quantile_sketch,
-    )
-
-    rows = stream_quantile_sketch(spark, SF_SMALL).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r["sketch_q10_ok"] and r["sketch_q50_ok"] and r["sketch_q90_ok"]
-        assert r["summary_sublinear"]
 
 
 def test_benford_chi2_matches_python(spark):

@@ -1,18 +1,20 @@
 """Structured Streaming semantics tests (SURVEY.md §2.9 T1-T6):
 - watermark append mode withholds exactly the windows not yet closed;
 - two-phase incremental ingestion through a foreachBatch MERGE equals the
-  one-shot batch result (T2/T3);
+  one-shot batch result (T2/T3), resumed from the caller's checkpoint;
 - applyInPandasWithState carries state across micro-batches (T6);
 - a stream's state partitions are sized by its staged bytes, and its
-  result does not depend on that count.
+  result does not depend on that count;
+- a stream call leaves no checkpoint and no temp view behind;
+- each foreachBatch sketch and view stream equals its batch form.
 """
 
 from __future__ import annotations
 
 import glob
+import math
 import os
 import shutil
-import tempfile
 from collections import Counter
 
 import pytest
@@ -22,10 +24,11 @@ from pyspark.sql.streaming import StreamingQueryListener
 from ccirecommenderdatapipeline_spark import plans
 from ccirecommenderdatapipeline_spark.session import build_jobs
 from ccirecommenderdatapipeline_spark.sources.tables import load_table
+from ccirecommenderdatapipeline_spark.streaming import jobs
 from ccirecommenderdatapipeline_spark.streaming.jobs import (
     events_stream,
     read_upsert_target,
-    run_to_memory,
+    run_stream,
     stage_events_dir,
     stateful_user_counts,
     tumbling_agg_plan,
@@ -37,9 +40,7 @@ from tests.conftest import SF_SMALL
 def test_watermark_append_withholds_open_windows(spark):
     staged = stage_events_dir(spark, SF_SMALL)
     sdf = events_stream(spark, staged).withWatermark("ts", "1 hour")
-    appended = run_to_memory(
-        tumbling_agg_plan(sdf), "append", staged_dir=staged
-    ).toPandas()
+    appended = run_stream(tumbling_agg_plan(sdf), staged).toPandas()
 
     batch = tumbling_agg_plan(load_table(spark, SF_SMALL, "events")).toPandas()
     max_us = load_table(spark, SF_SMALL, "events").agg(
@@ -53,26 +54,21 @@ def test_watermark_append_withholds_open_windows(spark):
     assert got == set(closed["w_start_us"])
 
 
-def test_incremental_foreach_batch_upsert_equals_oneshot(spark):
+def test_incremental_foreach_batch_upsert_equals_oneshot(spark, tmp_path):
     ev = load_table(spark, SF_SMALL, "events")
     cut_hi = ev.approxQuantile("event_id", [0.6], 0.0)[0]
     cut_lo = ev.approxQuantile("event_id", [0.4], 0.0)[0]
-    work = tempfile.mkdtemp()
+    work = str(tmp_path)
     src, target, ckpt = f"{work}/src", f"{work}/target", f"{work}/ckpt"
 
     # phase 1: first 60% of events arrive
     ev.filter(F.col("event_id") <= cut_hi).write.mode("overwrite").parquet(src)
 
     def run_phase():
-        sdf = events_stream(spark, src)
-        q = (
-            sdf.writeStream.foreachBatch(upsert_foreach_batch(target))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        run_stream(
+            events_stream(spark, src), src,
+            foreach_batch=upsert_foreach_batch(target), checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     run_phase()
     n_phase1 = read_upsert_target(spark, target).count()
@@ -80,7 +76,7 @@ def test_incremental_foreach_batch_upsert_equals_oneshot(spark):
     # phase 2: an OVERLAPPING batch arrives (40%..100% — the 40-60% band is
     # re-delivered, as in the reference's overlapping re-fetch, T3); the
     # file source only picks up NEW files, the MERGE view dedups re-delivery
-    overlap = tempfile.mkdtemp()
+    overlap = f"{work}/overlap"
     ev.filter(F.col("event_id") >= cut_lo).write.mode("overwrite").parquet(overlap)
     for i, f in enumerate(glob.glob(f"{overlap}/part-*.parquet")):
         shutil.copy(f, f"{src}/late-{i}.parquet")
@@ -91,9 +87,9 @@ def test_incremental_foreach_batch_upsert_equals_oneshot(spark):
     assert merged.select(F.sum("event_id")).first()[0] == ev.select(F.sum("event_id")).first()[0]
 
 
-def test_stateful_counts_across_microbatches(spark):
+def test_stateful_counts_across_microbatches(spark, tmp_path):
     staged = stage_events_dir(spark, SF_SMALL, n_files=4)
-    ckpt = tempfile.mkdtemp()
+    ckpt = str(tmp_path / "ckpt")
     got = {
         r["user_id"]: r["n_events"]
         for r in stateful_user_counts(spark, staged, ckpt).collect()
@@ -106,7 +102,7 @@ def test_stateful_counts_across_microbatches(spark):
     assert got == expected
 
 
-def test_stateful_cci_stream_equals_batch(spark):
+def test_stateful_cci_stream_equals_batch(spark, tmp_path):
     """T6 as true streaming: the stateful rolling-CCI operator over 3
     date-ordered micro-batches must equal the batch CCI computation row for
     row (state carries the 19-row lookback across batch boundaries)."""
@@ -118,7 +114,7 @@ def test_stateful_cci_stream_equals_batch(spark):
 
     staged = stage_price_batches(spark, SF_SMALL, n_batches=3)
     got = (
-        stateful_cci_stream(spark, staged, tempfile.mkdtemp())
+        stateful_cci_stream(spark, staged, str(tmp_path / "ckpt"))
         .toPandas()
         .sort_values(["symbol", "date"])
     )
@@ -335,3 +331,197 @@ def test_stream_result_does_not_depend_on_state_partitions(spark, name):
     assert min(seen_many) > 1
     assert sum(one.values()) > 0
     assert one == many
+
+
+def test_stream_calls_leave_no_checkpoint_or_temp_view(spark, tmp_path, monkeypatch):
+    """The runner deletes each checkpoint it creates and drops its memory
+    sink's temp view; the rows still collect afterwards, from the
+    analyzed plan or from the target dir left under STAGE_ROOT."""
+    monkeypatch.setattr(jobs, "STAGE_ROOT", str(tmp_path))
+    views = sorted(t.name for t in spark.catalog.listTables())
+    for name in ["stream_tumbling_agg", "stream_stateful_counts", "stream_hll_merge"]:
+        df = plans.QUERIES[name](spark, SF_SMALL)
+        assert os.listdir(tmp_path / "ckpt") == [], name
+        assert sorted(t.name for t in spark.catalog.listTables()) == views, name
+        assert len(df.collect()) > 0, name
+
+
+def test_stream_psi_drift_matches_python(spark):
+    """The streaming-maintained PSI (frozen base-slice edges, additive
+    per-batch histogram merge) must equal a brute-force single-pass
+    recompute with the same frozen-edge semantics."""
+    from ccirecommenderdatapipeline_spark.operators.lnq import LN_UNIT_SCALE
+    from ccirecommenderdatapipeline_spark.plans.events import (
+        PSI_BINS,
+        PSI_SPLIT_DAY,
+    )
+    from ccirecommenderdatapipeline_spark.streaming.jobs import (
+        stream_psi_drift,
+    )
+
+    got = {r["event_type"]: r for r in stream_psi_drift(spark, SF_SMALL).collect()}
+
+    ev = (
+        spark.read.parquet(f"{SF_SMALL}/events.parquet")
+        .select("event_type", "value", F.dayofmonth("ts").alias("dom"))
+        .collect()
+    )
+    base: dict[str, list[float]] = {}
+    cur: dict[str, list[float]] = {}
+    for r in ev:
+        (base if r["dom"] <= PSI_SPLIT_DAY else cur).setdefault(
+            r["event_type"], []
+        ).append(r["value"])
+    assert set(got) == set(base)  # types with frozen edges only
+    for et, b_vals in base.items():
+        lo, hi = min(b_vals), max(b_vals)
+
+        def bucket(v: float) -> int:
+            if hi == lo:
+                return 0
+            return min(max(int(math.floor((v - lo) / (hi - lo) * PSI_BINS)), 0),
+                       PSI_BINS - 1)
+
+        c_b = [0] * PSI_BINS
+        c_c = [0] * PSI_BINS
+        for v in b_vals:
+            c_b[bucket(v)] += 1
+        for v in cur.get(et, []):
+            c_c[bucket(v)] += 1
+        n_b, n_c = sum(c_b), sum(c_c)
+        psi = 0.0
+        for k in range(PSI_BINS):
+            # r11 nano-nat replay: exact integer numerator over the
+            # shared denominator (n_b+B)(n_c+B)
+            p = (c_b[k] + 1) / (n_b + PSI_BINS)
+            q = (c_c[k] + 1) / (n_c + PSI_BINS)
+            v = math.log(p / q) * LN_UNIT_SCALE
+            u = int(math.floor(v + 0.5)) if v >= 0 else -int(math.floor(-v + 0.5))
+            num = (c_b[k] + 1) * (n_c + PSI_BINS) - (c_c[k] + 1) * (n_b + PSI_BINS)
+            psi += (
+                num * u / ((n_b + PSI_BINS) * (n_c + PSI_BINS)) / LN_UNIT_SCALE
+            )
+        row = got[et]
+        assert row["n_base"] == n_b and row["n_current"] == n_c, et
+        assert abs(row["psi"] - psi) < 1e-7, (et, row["psi"], psi)
+        assert row["psi"] >= 0.0 or abs(row["psi"]) < 1e-9, et
+
+
+def test_stream_ks_drift_matches_python(spark):
+    """The streaming-maintained binned KS (frozen base-slice edges,
+    additive per-batch histogram merge) must equal a brute-force
+    single-pass recompute with the same frozen-edge semantics — and,
+    because the readout has no transcendental and no rounding rule,
+    the doubles must match EXACTLY, not approximately."""
+    from ccirecommenderdatapipeline_spark.plans.events import (
+        KS_BINS,
+        PSI_SPLIT_DAY,
+    )
+    from ccirecommenderdatapipeline_spark.streaming.jobs import (
+        stream_ks_drift,
+    )
+
+    got = {r["event_type"]: r for r in stream_ks_drift(spark, SF_SMALL).collect()}
+
+    ev = (
+        spark.read.parquet(f"{SF_SMALL}/events.parquet")
+        .select("event_type", "value", F.dayofmonth("ts").alias("dom"))
+        .collect()
+    )
+    base: dict[str, list[float]] = {}
+    cur: dict[str, list[float]] = {}
+    for r in ev:
+        (base if r["dom"] <= PSI_SPLIT_DAY else cur).setdefault(
+            r["event_type"], []
+        ).append(r["value"])
+    assert set(got) == set(base)  # types with frozen edges only
+    for et, b_vals in base.items():
+        lo, hi = min(b_vals), max(b_vals)
+
+        def bucket(v: float) -> int:
+            if hi == lo:
+                return 0
+            return min(
+                max(int(math.floor((v - lo) / (hi - lo) * KS_BINS)), 0),
+                KS_BINS - 1,
+            )
+
+        c_b = [0] * KS_BINS
+        c_c = [0] * KS_BINS
+        for v in b_vals:
+            c_b[bucket(v)] += 1
+        for v in cur.get(et, []):
+            c_c[bucket(v)] += 1
+        n_b, n_c = sum(c_b), sum(c_c)
+        ks, cum_b, cum_c = 0.0, 0, 0
+        for k in range(KS_BINS):
+            cum_b += c_b[k]
+            cum_c += c_c[k]
+            ks = max(ks, abs(cum_b / n_b - cum_c / n_c))
+        row = got[et]
+        assert row["n_base"] == n_b and row["n_current"] == n_c, et
+        if n_c > 0:
+            assert row["ks"] == ks, (et, row["ks"], ks)  # bit-exact
+            assert 0.0 <= row["ks"] <= 1.0, et
+        else:
+            assert row["ks"] is None, et
+
+
+def test_stream_ivm_equals_batch_view(spark):
+    """The streaming-maintained IVM view must equal the batch merge op
+    row-for-row (same algebra, different batching)."""
+    from ccirecommenderdatapipeline_spark.plans.storage import (
+        q_ivm_aggregate_merge,
+    )
+    from ccirecommenderdatapipeline_spark.streaming.jobs import (
+        stream_ivm_aggregate,
+    )
+
+    batch = {
+        (r["month"], r["priority"]): (r["n_orders"], r["revenue"])
+        for r in q_ivm_aggregate_merge(spark, SF_SMALL).collect()
+    }
+    stream = {
+        (r["month"], r["priority"]): (r["n_orders"], r["revenue"])
+        for r in stream_ivm_aggregate(spark, SF_SMALL).collect()
+    }
+    assert batch == stream and len(batch) > 0
+
+
+def test_stream_quantile_sketch_booleans(spark):
+    """All driver-checked bound booleans hold under real micro-batching."""
+    from ccirecommenderdatapipeline_spark.streaming.jobs import (
+        stream_quantile_sketch,
+    )
+
+    rows = stream_quantile_sketch(spark, SF_SMALL).collect()
+    assert len(rows) == 5
+    for r in rows:
+        assert r["sketch_q10_ok"] and r["sketch_q50_ok"] and r["sketch_q90_ok"]
+        assert r["summary_sublinear"]
+
+
+def test_stream_decayed_popularity_equals_batch(spark):
+    """The streamed partial-merge result is row-identical to the batch
+    operator — dyadic additivity across micro-batches."""
+    from ccirecommenderdatapipeline_spark.plans.recommender import (
+        q_decayed_popularity,
+    )
+    from ccirecommenderdatapipeline_spark.streaming.jobs import (
+        stream_decayed_popularity,
+    )
+
+    batch = {tuple(r) for r in q_decayed_popularity(spark, SF_SMALL).collect()}
+    stream = {tuple(r) for r in stream_decayed_popularity(spark, SF_SMALL).collect()}
+    assert batch == stream
+
+
+def test_stream_hll_equals_batch(spark):
+    """Streamed register-MAX merge reproduces the batch HLL row exactly
+    (idempotent merge — replay-safe)."""
+    from ccirecommenderdatapipeline_spark.plans.corpus import q_hll_distinct
+    from ccirecommenderdatapipeline_spark.streaming.jobs import stream_hll_merge
+
+    batch = q_hll_distinct(spark, SF_SMALL).collect()
+    stream = stream_hll_merge(spark, SF_SMALL).collect()
+    assert [tuple(r) for r in batch] == [tuple(r) for r in stream]
